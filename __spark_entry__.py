@@ -1591,12 +1591,12 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ORDER MATTERS: the driver grades the first 50 entries in dict order.
     # Round-12 rotation: rows whose BEHAVIOR changed this round lead —
-    # every iceberg_* row rides the r12 array fast plan for
-    # full-scan-WITH-deletes (bulk delete attachment via
-    # _DeleteFileIndex.match_arrays, per-(manifest, delete-set) memo,
-    # fast-group to_df by delete signature) and the run-deduplicated
-    # partition_groups routing; iceberg_fast_count exercises the new
-    # delete-aware array count_rows; iceberg_join_pruned /
+    # every iceberg_* row rides the array plan (every plan_files call,
+    # filtered or not: bulk delete attachment via
+    # _DeleteFileIndex.match_arrays, per-(manifest, delete-set) memo for
+    # full scans, fast-group to_df by delete signature) and the
+    # run-deduplicated partition_groups routing; iceberg_fast_count
+    # exercises the delete-aware array count_rows; iceberg_join_pruned /
     # iceberg_join_between / iceberg_sql_subquery_prune (NEW) ride the
     # rewritten SQL capture (block scanner, schema-resolved unqualified
     # conjuncts, once-only self-join rule). text_top_terms (graded green

@@ -449,8 +449,7 @@ class ManifestColumns:
         not a conservative keep), bounds as object arrays with
         NaN-poisoned values nulled at build plus presence masks. Returns
         ``(vc, vc_p, nc, nc_p, nanc, nanc_p, lo, lo_p, hi, hi_p)``. These
-        feed the numpy-vectorized metrics matcher (scan._vector_matcher);
-        the per-row walker keeps reading metric_arrays directly."""
+        feed the planner's metrics matcher (scan._vector_matcher)."""
         key = "__vec__" + file_name
         got = self._metrics.get(key)
         if got is not None:

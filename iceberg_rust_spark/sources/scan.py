@@ -32,8 +32,8 @@ from pyspark.sql import functions as F
 
 from ..plans import expr as E
 from ..plans.evaluators import (ColumnMetrics, FieldSummary, PartitionFieldInfo,
-                                file_might_match, inclusive_projection,
-                                manifest_might_match, partition_might_match)
+                                inclusive_projection, manifest_might_match,
+                                partition_might_match)
 from .io import (file_io_for, localize_paths, mirror_remap_pattern,
                  spark_native_path)
 from .manifest import (CONTENT_DATA, CONTENT_EQUALITY_DELETES,
@@ -298,12 +298,13 @@ class ScanPlan:
     """Planned scan: tasks + planning observability counters
     (scan_metrics.rs counterpart).
 
-    ``tasks`` is a lazy property: an AlwaysTrue scan with no applicable
-    deletes plans into ``_fast`` — per-manifest ``(ManifestColumns,
-    survivor-index-array)`` pairs — and entry/FileScanTask objects
-    materialize only if a consumer actually touches ``.tasks`` (to_df
-    and count_rows read the arrays directly, so a 100k-file full scan
-    never builds 100k task objects)."""
+    ``tasks`` is a lazy property: every plan with a snapshot plans into
+    ``_fast`` — per-manifest ``(ManifestColumns, survivor-index-array,
+    delete-sets)`` triples, ``delete-sets`` being None or a list aligned
+    with the survivors (see ``_DeleteFileIndex.match_arrays``) — and
+    entry/FileScanTask objects materialize only if a consumer actually
+    touches ``.tasks`` (to_df and count_rows read the arrays directly, so
+    a 100k-file scan never builds 100k task objects)."""
 
     __slots__ = ("_tasks", "_fast", "snapshot", "total_manifests",
                  "skipped_manifests", "total_data_files",
@@ -407,19 +408,19 @@ class TableScan:
         reference's 4-stage concurrent pipeline, scan/mod.rs:381-499):
 
           manifest list -> FieldSummary pruning (driver, O(manifests))
-          -> per-manifest [fetch + decode + per-entry evaluation] on a
-             thread pool: the parquet/avro decode releases the GIL, so
-             fetch/decode of manifest N overlaps the pure-Python entry
-             evaluation of manifest N-1
-          -> delete-index match over SURVIVORS only.
+          -> per-manifest [fetch + decode + metric/partition extracts] on
+             a thread pool: the parquet/avro decode releases the GIL
+          -> per-manifest survivor-index array: one partition mask
+             (evaluated once per distinct partition) AND one vectorized
+             metrics mask (``_vector_matcher``)
+          -> bulk delete attachment over SURVIVORS only
+             (``_DeleteFileIndex.match_arrays``).
 
-        Delete manifests stream first (the index must be complete before
-        matching); data manifests then evaluate independently, so peak
-        intermediate state is per-manifest entry tuples + survivors —
-        never an all-files list for selective predicates. Per-entry cost
-        is minimized by an AlwaysTrue fast path and by building metrics
-        only for the predicate's referenced columns (missing metrics are
-        conservative might-match, so the restriction cannot over-prune)."""
+        The result is always an array plan (``ScanPlan._fast``): no entry
+        or task object is built until a consumer touches ``.tasks``.
+        Metrics derive only for the predicate's referenced columns
+        (missing metrics are conservative might-match, so the restriction
+        cannot over-prune)."""
         md = self.metadata
         snap = self._resolve_snapshot()
         if snap is None:
@@ -430,7 +431,7 @@ class TableScan:
 
         manifest_list_path = snap.manifest_list
         manifests = load_manifest_list(manifest_list_path)
-        plan = ScanPlan(tasks=[], snapshot=snap, total_manifests=len(manifests))
+        plan = ScanPlan(snapshot=snap, total_manifests=len(manifests))
 
         # partition predicate per spec id (cached like scan/cache.rs:31);
         # benign-race safe under the GIL: concurrent misses recompute the
@@ -468,84 +469,40 @@ class TableScan:
             (surviving_dels if mf.content else surviving_data).append(mf)
 
         ref_names = _pred_columns(bound)
-        vectorizable = _pred_vector_ok(bound)
 
         def eval_cols(cols: ManifestColumns):
-            """(survivors, n_data, skipped_part, skipped_metrics, strays):
-            the per-manifest evaluation unit run on the pool, COLUMNAR —
-            status/content route on numpy masks, metrics evaluate off
-            per-column flat extracts, and entry objects are built only
-            for survivors/strays (the numpy + Arrow steps release the
-            GIL, so the pool overlaps manifests for real). ``strays``
-            are delete entries found in a data manifest (defensive —
-            external writers could mix content within one manifest)."""
+            """(survivor index array, n_data, skipped_part, skipped_metrics)
+            for one manifest, on numpy masks only: partition pruning runs
+            once per distinct (partition, spec) pair and metrics pruning
+            once per schema group, so no entry object is built for any
+            row (the numpy + Arrow steps release the GIL)."""
             import numpy as np
-            live = cols.status != STATUS_DELETED
-            data_mask = live & (cols.content == CONTENT_DATA)
-            stray_idx = np.nonzero(live & (cols.content != CONTENT_DATA))[0]
-            strays = [cols.entry(int(i)) for i in stray_idx]
-            n = int(data_mask.sum())
-            if always_true:
-                if len(strays) == 0 and bool(data_mask.all()):
-                    return cols.entries(), n, 0, 0, strays
-                return ([cols.entry(int(i))
-                         for i in np.nonzero(data_mask)[0]],
-                        n, 0, 0, strays)
-            spec_arr, schema_raw = cols.spec_id, cols.schema_id_raw
+            data_mask = ((cols.status != STATUS_DELETED)
+                         & (cols.content == CONTENT_DATA))
+            rows = np.nonzero(data_mask)[0]
+            n = len(rows)
+            if always_true or n == 0:
+                return rows, n, 0, 0
+            keep = data_mask
             # decode partition dicts only when some spec's projection can
             # actually prune (a metrics-only predicate projects to
             # AlwaysTrue on every spec)
-            check_part = n > 0 and any(
-                not isinstance(partition_pred(int(s)), E.AlwaysTrue)
-                for s in np.unique(spec_arr[data_mask]))
-            # vectorized metrics mask per schema group: when every group
-            # compiles, the Python loop below touches ONLY survivors
+            if any(not isinstance(partition_pred(int(s)), E.AlwaysTrue)
+                   for s in np.unique(cols.spec_id[rows])):
+                keep = self._partition_mask(cols, rows, partition_pred)
+            n_part = int(keep.sum())
+            schema_raw = cols.schema_id_raw
             vec = np.zeros(cols.n, dtype=bool)
-            vec_ok = n > 0 and vectorizable
-            for raw in (np.unique(schema_raw[data_mask])
-                        if vec_ok else ()):
+            for raw in np.unique(schema_raw[rows]):
                 raw = int(raw)
-                vm = self._vector_matcher(
+                grp = keep & (schema_raw == raw)
+                if not grp.any():
+                    continue
+                vec[grp] = self._vector_matcher(
                     bound, schema, None if raw == -1 else raw,
-                    cols, ref_names)
-                if vm is None:
-                    vec_ok = False
-                    break
-                grp = data_mask & (schema_raw == raw)
-                vec[grp] = vm[grp]
-            matchers: Dict[int, Any] = {}
-            survivors: List[ManifestEntry] = []
-            sp = sm = 0
-            if vec_ok and not check_part:
-                idx = np.nonzero(data_mask & vec)[0]
-                sm = n - len(idx)
-                survivors = [cols.entry(int(i)) for i in idx]
-                return survivors, n, 0, sm, strays
-            for i in np.nonzero(data_mask)[0]:
-                i = int(i)
-                if check_part:
-                    part = cols.partition(i)
-                    if part and not partition_might_match(
-                            partition_pred(int(spec_arr[i])), part):
-                        sp += 1
-                        continue
-                if vec_ok:
-                    if not vec[i]:
-                        sm += 1
-                        continue
-                    survivors.append(cols.entry(i))
-                    continue
-                raw = int(schema_raw[i])
-                m = matchers.get(raw)
-                if m is None:
-                    m = matchers[raw] = self._columnar_matcher(
-                        bound, schema, None if raw == -1 else raw,
-                        cols, ref_names)
-                if not m(i):
-                    sm += 1
-                    continue
-                survivors.append(cols.entry(i))
-            return survivors, n, sp, sm, strays
+                    cols, ref_names)[grp]
+            idx = np.nonzero(vec)[0]
+            return idx, n, n - n_part, n_part - len(idx)
 
         # phases A+B share ONE decode pool: delete manifests and data
         # manifests decode CONCURRENTLY (the reference routes both kinds
@@ -597,27 +554,15 @@ class TableScan:
             if cached is not None:
                 _delete_index_cache.move_to_end(dkey)
 
-        # AlwaysTrue plans into survivor-index ARRAYS (plan._fast):
-        # FileScanTask/entry objects materialize only if a consumer touches
-        # plan.tasks — to_df and count_rows read the arrays directly, so a
-        # full scan never builds per-file objects. With delete manifests
-        # (r12) deletes attach in BULK off the flat arrays
-        # (_DeleteFileIndex.match_arrays), memoized per
-        # (manifest, delete-set), so warm full-scan-with-deletes replans
-        # without rebuilding 100k entry/task objects.
-        maybe_fast = always_true
-
         def prepare(cols: ManifestColumns) -> ManifestColumns:
             """Pool stage: manifest decode + the C-side metric/partition
             extracts (Arrow compute releases the GIL, so manifests overlap
-            for real). The pure-Python eval loop then runs SERIALLY on the
+            for real). The mask evaluation then runs SERIALLY on the
             driver over prepared columns — measured faster than running it
             on the pool, where 16 interpreter loops just fight the GIL."""
-            if always_true and cols._tab is not None:
-                if maybe_fast:
+            if always_true:
+                if cols._tab is not None:
                     cols._col("file_path")  # the one column to_df reads
-                else:
-                    cols.entries()
                 return cols
             if cols.n:
                 import numpy as np
@@ -626,18 +571,15 @@ class TableScan:
                 if dm.any():
                     sids = {int(s) for s in np.unique(cols.spec_id[dm])}
                     if any(not isinstance(partition_pred(s), E.AlwaysTrue)
-                           for s in sids) and cols._tab is not None:
-                        cols._partitions_all()
+                           for s in sids):
+                        cols.partition_groups()
                     for raw in np.unique(cols.schema_id_raw[dm]):
                         name_map = self._name_mapping(
                             None if raw == -1 else int(raw), schema)
                         for nm in ref_names:
                             fn = name_map.get(nm)
                             if fn is not None:
-                                if vectorizable:
-                                    cols.metric_vectors(fn)
-                                else:
-                                    cols.metric_arrays(fn)
+                                cols.metric_vectors(fn)
             return cols
 
         to_decode = (surviving_data if cached is not None
@@ -681,7 +623,7 @@ class TableScan:
         try:
             # BOTH manifest kinds decode on the one pool (the overlap the
             # reference gets from its single concurrent pipeline); the
-            # serial pure-Python stages (index routing, entry eval) run
+            # serial stages (index routing, mask evaluation) run
             # only after the pool drains — running them concurrently with
             # pool decode measured ~2x SLOWER at 100k files (three
             # interpreter threads convoy on the GIL)
@@ -706,7 +648,10 @@ class TableScan:
             stray_data: List[ManifestEntry] = []
             del_cols = [f.result() for f in del_futs]
             for cols in del_cols:
-                stray_data.extend(delete_index.add_columns(cols))
+                # live DATA rows in a delete manifest (external writers
+                # could mix content) plan as one more group below
+                stray_data.extend(cols.entry(i)
+                                  for i in delete_index.add_columns(cols))
             _persist(surviving_dels, del_cols)
             with _delete_index_lock:
                 if dkey not in _delete_index_cache:
@@ -718,136 +663,78 @@ class TableScan:
         loaded = [f.result() for f in data_futs]
         _persist(surviving_data, loaded)
 
-        # stray DELETE entries inside data manifests (rare, external
-        # writers) overlay per plan so the cached index stays immutable
-        overlay_index: Optional[_DeleteFileIndex] = None
+        # live DELETE rows inside data manifests (rare, external writers)
+        # route into a per-plan index, so the cached one stays immutable;
+        # it is complete before any survivor matches against it
+        overlay: Optional[_DeleteFileIndex] = None
+        for cols in loaded:
+            if bool(((cols.status != STATUS_DELETED)
+                     & (cols.content != CONTENT_DATA)).any()):
+                if overlay is None:
+                    overlay = _DeleteFileIndex()
+                overlay.add_columns(cols)
 
-        if maybe_fast and not stray_data:
-            import numpy as np
-            fast_groups, clean = [], True
-            for mfm, cols in zip(surviving_data, loaded):
-                live = cols.status != STATUS_DELETED
-                dmask = live & (cols.content == CONTENT_DATA)
-                if bool((live & ~dmask).any()):
-                    clean = False   # stray deletes: object path handles
-                    break
-                fast_groups.append((mfm, cols, np.nonzero(dmask)[0]))
-            if clean:
-                fast = []
-                for mfm, cols, ix in fast_groups:
-                    sets = None
-                    if surviving_dels and len(ix):
-                        # bulk delete attachment, memoized per
-                        # (manifest, delete-manifest set): manifests are
-                        # immutable, so a warm replan of a live MOR table
-                        # reuses the matched sets outright
-                        fkey = (mfm.manifest_path,
-                                mtime_of[mfm.manifest_path], dkey)
-                        with _delete_index_lock:
-                            hit = _fast_match_cache.get(fkey)
-                            if hit is not None:
-                                _fast_match_cache.move_to_end(fkey)
-                        if hit is not None:
-                            ix, sets = hit
-                        else:
-                            sets = delete_index.match_arrays(cols, ix)
-                            global _fast_match_cache_rows
-                            with _delete_index_lock:
-                                if fkey not in _fast_match_cache:
-                                    _fast_match_cache[fkey] = (ix, sets)
-                                    _fast_match_cache_rows += len(ix)
-                                    while (len(_fast_match_cache)
-                                           > _FAST_MATCH_MAX_ENTRIES
-                                           or _fast_match_cache_rows
-                                           > _FAST_MATCH_MAX_ROWS):
-                                        _, (oix, _s) = \
-                                            _fast_match_cache.popitem(
-                                                last=False)
-                                        _fast_match_cache_rows -= len(oix)
-                    fast.append((cols, ix, sets))
-                plan._fast = fast
-                plan._tasks = None   # materialize lazily on .tasks touch
-                plan.total_data_files = int(
-                    sum(len(ix) for _, ix, _ in fast))
-                return plan
-
-        results = [eval_cols(c) for c in loaded]
+        groups: List[Tuple[Optional[ManifestFile], ManifestColumns]] = \
+            list(zip(surviving_data, loaded))
         if stray_data:
-            results.append(eval_cols(ManifestColumns.from_entries(stray_data)))
-        survivors: List[ManifestEntry] = []
-        for part, n, sp, sm, strays in results:
-            survivors.extend(part)
-            for e in strays:        # delete entries inside data manifests
-                if overlay_index is None:
-                    overlay_index = _DeleteFileIndex()
-                overlay_index.add_entry(e)
+            groups.append((None, ManifestColumns.from_entries(stray_data)))
+        fast = []
+        for mfm, cols in groups:
+            ix, n, sp, sm = eval_cols(cols)
             plan.total_data_files += n
             plan.skipped_by_partition += sp
             plan.skipped_by_metrics += sm
-
-        for entry in survivors:
-            task = FileScanTask(data_file=entry.data_file,
-                                sequence_number=entry.sequence_number)
-            delete_index.match(entry, task)
-            if overlay_index is not None:
-                overlay_index.match(entry, task)
-            plan.tasks.append(task)
+            sets = None
+            if len(ix) and not delete_index.empty:
+                if always_true and mfm is not None:
+                    ix, sets = _match_memoized(
+                        delete_index, cols, ix,
+                        (mfm.manifest_path, mtime_of[mfm.manifest_path],
+                         dkey))
+                else:
+                    sets = delete_index.match_arrays(cols, ix)
+            if overlay is not None:
+                sets = _concat_sets(sets, overlay.match_arrays(cols, ix))
+            fast.append((cols, ix, sets))
+        plan._fast = fast
         return plan
 
-    def _columnar_matcher(self, bound: E.Predicate, current_schema: Schema,
-                          schema_id: Optional[int], cols: ManifestColumns,
-                          ref_names: frozenset):
-        """Columnar twin of ``_compiled_file_matcher``: same ``_eval_bounds``
-        truth-table walker (semantics cannot drift), but stats come from
-        the manifest's flat metric extracts instead of per-entry dicts —
-        no DataFile object exists for a file that gets pruned. One matcher
-        per (manifest, schema-id); the extracts memoize in ``cols``."""
-        from ..plans.evaluators import _eval_bounds
-        name_map = self._name_mapping(schema_id, current_schema)
-        arrs = {name: (None if name_map.get(name) is None
-                       else cols.metric_arrays(name_map[name]))
-                for name in ref_names}
-        record_count = cols.record_count
-
-        def match(i: int) -> bool:
-            if record_count[i] == 0:
-                return False
-
-            def lookup(name: str) -> Optional[FieldSummary]:
-                a = arrs.get(name)
-                if a is None:
-                    return None
-                vc_, nc_, nanc_, lo_, hi_ = a
-                vc, nc, nanc = vc_[i], nc_[i], nanc_[i]
-                s = FieldSummary(
-                    contains_null=not (nc == 0),
-                    contains_nan=None if nanc is None else nanc > 0,
-                    lower=lo_[i], upper=hi_[i])
-                s._all_null = (vc is not None and nc is not None
-                               and vc == nc)  # type: ignore[attr-defined]
-                s._all_nan = (nanc is not None and vc is not None
-                              and nanc == vc)  # type: ignore[attr-defined]
-                s._null_count = nc  # type: ignore[attr-defined]
-                s._value_count = vc  # type: ignore[attr-defined]
-                return s
-
-            return _eval_bounds(bound, lookup)
-
-        return match
+    @staticmethod
+    def _partition_mask(cols: ManifestColumns, rows, partition_pred):
+        """Keep-mask over ``rows`` (indices into ``cols``) from exact
+        partition values: ``partition_might_match`` runs once per distinct
+        (partition, spec id) pair, with the pair's projected predicate
+        ``partition_pred(spec_id)``, and the result scatters back through
+        the ``partition_groups`` codes. An empty partition (unpartitioned
+        spec) is kept; rows outside ``rows`` read False."""
+        import numpy as np
+        codes, parts = cols.partition_groups()
+        pairs, inv = np.unique(
+            np.stack([codes[rows], cols.spec_id[rows]], axis=1),
+            axis=0, return_inverse=True)
+        ok = np.fromiter(
+            (not parts[c] or partition_might_match(partition_pred(s),
+                                                   parts[c])
+             for c, s in pairs.tolist()),
+            dtype=bool, count=len(pairs))
+        keep = np.zeros(cols.n, dtype=bool)
+        keep[rows] = ok[inv.reshape(-1)]
+        return keep
 
     def _vector_matcher(self, bound: E.Predicate, current_schema: Schema,
                         schema_id: Optional[int], cols: ManifestColumns,
                         ref_names: frozenset):
-        """Numpy-vectorized twin of the metrics matcher: ONE boolean
-        might-match array for a whole manifest, mirroring _eval_bounds'
-        truth tables node by node (property-tested equal on random
-        predicate x stats combinations). Returns None when the predicate
-        contains a node shape the vector form doesn't cover
-        (starts_with/not_starts_with, unknown ops) — the caller falls
-        back to the per-row walker, so coverage gaps cost speed, never
-        correctness. The payoff is iterating ONLY survivors afterwards:
-        a selective predicate over a 100k-file manifest set runs the
-        Python loop 9 times, not 100k."""
+        """The planner's metrics matcher: ONE boolean might-match array
+        for a whole manifest, mirroring ``_eval_bounds``' truth tables
+        node by node (property-tested equal to ``file_might_match`` over
+        ``_metrics_for_file`` on random predicate x stats combinations).
+        A row whose bound does not compare with a literal reads
+        might-match for that node, as ``_eval_bounds``' ``except
+        TypeError`` does. The payoff is touching ONLY survivors
+        afterwards: a selective predicate over a 100k-file manifest set
+        builds a handful of objects, not 100k."""
+        import operator
+
         import numpy as np
         from .datum import to_comparable
         name_map = self._name_mapping(schema_id, current_schema)
@@ -855,13 +742,37 @@ class TableScan:
         ones = np.ones(n, dtype=bool)
         zeros = np.zeros(n, dtype=bool)
 
-        class _Unsupported(Exception):
-            pass
-
         vecs: Dict[str, Optional[tuple]] = {}
         for nm in ref_names:
             fn = name_map.get(nm)
             vecs[nm] = None if fn is None else cols.metric_vectors(fn)
+
+        def cmp(vals, present, op, lit):
+            """(result, raised) masks of ``op(bound, lit)`` over present
+            rows; a row whose comparison raised TypeError reads False in
+            ``result`` and True in ``raised``."""
+            res = np.zeros(n, dtype=bool)
+            err = np.zeros(n, dtype=bool)
+            if present.any():
+                sub = vals[present]
+                try:
+                    res[present] = np.asarray(op(sub, lit), dtype=bool)
+                except TypeError:
+                    r, e = [], []
+                    for x in sub:
+                        try:
+                            r.append(bool(op(x, lit)))
+                            e.append(False)
+                        except TypeError:
+                            r.append(False)
+                            e.append(True)
+                    res[present] = r
+                    err[present] = e
+            return res, err
+
+        def str_rows(vals, test):
+            return np.fromiter((isinstance(x, str) and test(x) for x in vals),
+                               dtype=bool, count=n)
 
         def ev(p: E.Predicate) -> np.ndarray:
             if isinstance(p, E.AlwaysTrue):
@@ -896,116 +807,64 @@ class TableScan:
                     return ~all_nan
                 return ones
 
-            if isinstance(p, (E.BinaryPred, E.BoundBinaryPred)):
+            binary = isinstance(p, (E.BinaryPred, E.BoundBinaryPred))
+            if binary and p.op == E.NOT_STARTS_WITH:
+                # before the all-null cutoff: NOT(startsWith) includes
+                # nulls, so null presence forces might-match. Prunes only
+                # when both bounds are strings carrying the prefix
+                prefix = to_comparable(p.literal)
+                if not isinstance(prefix, str):
+                    return ones
+                cannot = ~contains_null
+                for b in (lo, hi):
+                    cannot = cannot & str_rows(
+                        b, lambda x: x.startswith(prefix))
+                return ~cannot
+
+            if binary:
                 op = p.op
-                if op in (E.STARTS_WITH, E.NOT_STARTS_WITH):
-                    raise _Unsupported()      # per-row walker handles
                 lit = to_comparable(p.literal)
-
-                def cmp(vals, present, kind):
-                    out = np.zeros(n, dtype=bool)
-                    if present.any():
-                        sub = vals[present]
-                        if kind == "ge":
-                            r = sub >= lit
-                        elif kind == "gt":
-                            r = sub > lit
-                        elif kind == "le":
-                            r = sub <= lit
-                        else:
-                            r = sub < lit
-                        out[present] = np.asarray(r, dtype=bool)
-                    return out
-
                 if op == E.LT:
-                    res = ~cmp(lo, lo_p, "ge")
+                    res = ~cmp(lo, lo_p, operator.ge, lit)[0]
                 elif op == E.LT_EQ:
-                    res = ~cmp(lo, lo_p, "gt")
+                    res = ~cmp(lo, lo_p, operator.gt, lit)[0]
                 elif op == E.GT:
-                    res = ~cmp(hi, hi_p, "le")
+                    res = ~cmp(hi, hi_p, operator.le, lit)[0]
                 elif op == E.GT_EQ:
-                    res = ~cmp(hi, hi_p, "lt")
+                    res = ~cmp(hi, hi_p, operator.lt, lit)[0]
                 elif op == E.EQ:
-                    res = ~(cmp(lo, lo_p, "gt") | cmp(hi, hi_p, "lt"))
-                elif op == E.NOT_EQ:
-                    res = ones.copy()
+                    above, raised = cmp(lo, lo_p, operator.gt, lit)
+                    below = cmp(hi, hi_p, operator.lt, lit)[0]
+                    # the upper bound is consulted only when the lower
+                    # compared and did not prune
+                    res = ~(above | (below & ~raised))
+                elif op == E.STARTS_WITH and isinstance(lit, str):
+                    k = len(lit)
+                    res = ~(str_rows(lo, lambda x: x[:k] > lit)
+                            | str_rows(hi, lambda x: x[:k] < lit))
                 else:
-                    raise _Unsupported()
+                    # NOT_EQ; STARTS_WITH with a non-string prefix raises
+                    # TypeError in _eval_bounds, i.e. might-match
+                    res = ones
                 return res & ~all_null   # ordered ops: all-null cannot
 
-            if isinstance(p, (E.SetPred, E.BoundSetPred)):
-                if p.op != E.IN:
-                    # NOT_IN is conservative might-match, but the walker's
-                    # all-null cutoff runs before every set op
-                    return ~all_null
-                cannot = ones.copy()
+            if isinstance(p, (E.SetPred, E.BoundSetPred)) and p.op == E.IN:
+                hit = zeros.copy()
+                raised = zeros.copy()
                 for raw_lit in p.literals:
                     lit = to_comparable(raw_lit)
-                    out_lo = np.zeros(n, dtype=bool)
-                    if lo_p.any():
-                        out_lo[lo_p] = np.asarray(lo[lo_p] > lit, dtype=bool)
-                    out_hi = np.zeros(n, dtype=bool)
-                    if hi_p.any():
-                        out_hi[hi_p] = np.asarray(hi[hi_p] < lit, dtype=bool)
-                    cannot &= (out_lo | out_hi)
-                return ~cannot & ~all_null
+                    # lit >= lower, then (only if that held) lit <= upper
+                    ge_lo, err_lo = cmp(lo, lo_p, operator.le, lit)
+                    le_hi, err_hi = cmp(hi, hi_p, operator.ge, lit)
+                    lo_ok = ~lo_p | ge_lo
+                    hit |= lo_ok & (~hi_p | le_hi)
+                    raised |= err_lo | (lo_ok & err_hi)
+                return (hit | raised) & ~all_null
 
-            return ones
+            # NOT_IN and other leaves: might match unless all-null
+            return ~all_null
 
-        try:
-            res = ev(bound)
-        except (_Unsupported, TypeError):
-            # TypeError = literal/bound type mismatch somewhere in the
-            # manifest: the per-row walker resolves it row by row
-            return None
-        return res & (cols.record_count != 0)
-
-    def _compiled_file_matcher(self, bound: E.Predicate,
-                               current_schema: Schema,
-                               schema_id: Optional[int]):
-        """Hot-loop twin of ``_metrics_for_file`` + ``file_might_match``:
-        resolves the field-id name mapping ONCE per (plan, schema-id) and
-        feeds ``_eval_bounds`` — the single shared truth-table walker, so
-        semantics cannot drift — a lookup that reads the DataFile's stat
-        dicts directly, skipping the per-entry ColumnMetrics dict (measured
-        ~35% of per-entry planning cost at 100k files). Missing stats stay
-        conservative might-match exactly as before."""
-        from ..plans.evaluators import _eval_bounds
-        from .datum import to_comparable
-        name_map = self._name_mapping(schema_id, current_schema)
-
-        def match(df_: DataFile) -> bool:
-            if df_.record_count == 0:
-                return False
-            value_counts = df_.value_counts
-            null_counts = df_.null_value_counts
-            nan_counts = df_.nan_value_counts
-            lowers = df_.lower_bounds
-            uppers = df_.upper_bounds
-
-            def lookup(name: str) -> Optional[FieldSummary]:
-                fn = name_map.get(name)
-                if fn is None:
-                    return None
-                vc = value_counts.get(fn)
-                nc = null_counts.get(fn)
-                nanc = nan_counts.get(fn)
-                s = FieldSummary(
-                    contains_null=not (nc == 0),
-                    contains_nan=None if nanc is None else nanc > 0,
-                    lower=to_comparable(lowers.get(fn)),
-                    upper=to_comparable(uppers.get(fn)))
-                s._all_null = (vc is not None and nc is not None
-                               and vc == nc)  # type: ignore[attr-defined]
-                s._all_nan = (nanc is not None and vc is not None
-                              and nanc == vc)  # type: ignore[attr-defined]
-                s._null_count = nc  # type: ignore[attr-defined]
-                s._value_count = vc  # type: ignore[attr-defined]
-                return s
-
-            return _eval_bounds(bound, lookup)
-
-        return match
+        return ev(bound) & (cols.record_count != 0)
 
     def _metrics_for_file(self, df_: DataFile, current_schema: Schema,
                           ref_cols: Optional[frozenset] = None,
@@ -1086,8 +945,8 @@ class TableScan:
         bound = E.bind(self.row_filter, schema, self.case_sensitive)
         if plan._fast is not None and plan._tasks is None \
                 and isinstance(bound, E.AlwaysTrue):
-            # fast plan: record_count sums straight off the manifest
-            # arrays for files with NO applicable deletes; only
+            # AlwaysTrue array plan: record_count sums straight off the
+            # manifest arrays for files with NO applicable deletes; only
             # delete-bearing files materialize tasks for a data read
             total = 0
             residual: List[FileScanTask] = []
@@ -1170,8 +1029,8 @@ class TableScan:
         schema = self._scan_schema(md, snap) if snap else md.schema()
         spark_schema = schema.to_spark()
 
-        # fast plan (AlwaysTrue): group file-path ARRAYS by (write-schema
-        # id, applicable-delete-set signature) — the same group key the
+        # array plan: group file-path ARRAYS by (write-schema id,
+        # applicable-delete-set signature) — the same group key the
         # object path computes — without materializing per-file entry/task
         # objects. Delete files materialize LITE, once per distinct set.
         # include_metadata_columns needs a per-(spec, partition) split, so
@@ -1538,15 +1397,49 @@ def _part_json(part: Dict[str, Any]) -> Optional[str]:
     return json.dumps({k: str(v) for k, v in sorted(part.items())})
 
 
-def _pred_vector_ok(pred: E.Predicate) -> bool:
-    """True when every node shape is one the vectorized matcher covers —
-    known statically from the bound predicate, so prepare() can skip
-    deriving metric VECTORS a per-row fallback would never read."""
-    if isinstance(pred, (E.And, E.Or)):
-        return _pred_vector_ok(pred.left) and _pred_vector_ok(pred.right)
-    if isinstance(pred, (E.BinaryPred, E.BoundBinaryPred)):
-        return pred.op not in (E.STARTS_WITH, E.NOT_STARTS_WITH)
-    return True
+def _match_memoized(index: "_DeleteFileIndex", cols: ManifestColumns, ix,
+                    fkey: tuple) -> tuple:
+    """``index.match_arrays`` memoized per (manifest path, mtime,
+    delete-manifest set): manifests are immutable, so a warm replan of a
+    live MOR table reuses the matched sets outright. The key carries no
+    predicate, so only AlwaysTrue plans (whose survivors are every live
+    data row) may use it. Returns ``(ix, sets)``."""
+    global _fast_match_cache_rows
+    with _delete_index_lock:
+        hit = _fast_match_cache.get(fkey)
+        if hit is not None:
+            _fast_match_cache.move_to_end(fkey)
+            return hit
+    sets = index.match_arrays(cols, ix)
+    with _delete_index_lock:
+        if fkey not in _fast_match_cache:
+            _fast_match_cache[fkey] = (ix, sets)
+            _fast_match_cache_rows += len(ix)
+            while (len(_fast_match_cache) > _FAST_MATCH_MAX_ENTRIES
+                   or _fast_match_cache_rows > _FAST_MATCH_MAX_ROWS):
+                _, (oix, _s) = _fast_match_cache.popitem(last=False)
+                _fast_match_cache_rows -= len(oix)
+    return ix, sets
+
+
+def _concat_sets(a: Optional[list], b: Optional[list]) -> Optional[list]:
+    """Per-survivor concatenation of two ``match_arrays`` results over the
+    same survivors (None = no deletes), re-interned so equal inputs share
+    one output tuple."""
+    if a is None or b is None:
+        return b if a is None else a
+    memo: dict = {}
+    out: list = []
+    for x, y in zip(a, b):
+        if x is None or y is None:
+            out.append(y if x is None else x)
+            continue
+        key = (id(x), id(y))
+        got = memo.get(key)
+        if got is None:
+            got = memo[key] = (x[0] + y[0], x[1] + y[1])
+        out.append(got)
+    return out
 
 
 def _pred_columns(pred: E.Predicate) -> frozenset:
@@ -1716,25 +1609,22 @@ class _DeleteFileIndex:
                     d.lower_bounds.get("file_path"),
                     d.upper_bounds.get("file_path"), d)
 
-    def add_columns(self, cols: ManifestColumns) -> List[ManifestEntry]:
+    def add_columns(self, cols: ManifestColumns) -> List[int]:
         """Route every live delete entry of a columnar manifest view;
-        returns stray DATA entries found in the delete manifest (external
-        writers could mix content). Touches only flat arrays — per-row
-        delete objects stay unbuilt until a survivor matches."""
+        returns the row indices of live DATA entries (a delete manifest
+        written by an external tool could mix content, and a data manifest
+        routed here for its stray deletes is all data rows). Touches only
+        flat arrays — per-row delete objects stay unbuilt until a survivor
+        matches."""
         import numpy as np
+        live = cols.status != STATUS_DELETED
+        strays = np.nonzero(live & (cols.content == CONTENT_DATA))[0].tolist()
         if cols._tab is None:
-            strays = []
             for e in cols.entries():
-                if e.status == STATUS_DELETED:
-                    continue
-                if e.data_file.content == CONTENT_DATA:
-                    strays.append(e)
-                else:
+                if (e.status != STATUS_DELETED
+                        and e.data_file.content != CONTENT_DATA):
                     self.add_entry(e)
             return strays
-        live = cols.status != STATUS_DELETED
-        strays = [cols.entry(int(i)) for i in
-                  np.nonzero(live & (cols.content == CONTENT_DATA))[0]]
         del_rows = np.nonzero(live & (cols.content != CONTENT_DATA))[0]
         if not len(del_rows):
             return strays
@@ -1781,39 +1671,6 @@ class _DeleteFileIndex:
             return src[0].data_file_lite(src[1])
         return src
 
-    def match(self, entry: ManifestEntry, task: "FileScanTask") -> None:
-        df_ = entry.data_file
-        seq = entry.sequence_number
-        p = _norm_path_py(df_.file_path)
-        scoped = self.by_path.get(p)
-        if scoped:
-            for dseq, content, src in scoped:
-                if content == CONTENT_POSITION_DELETES and dseq >= seq:
-                    task.pos_deletes.append(self._file(src))
-                elif content == CONTENT_EQUALITY_DELETES and dseq > seq:
-                    task.eq_deletes.append(self._file(src))
-        # partition-scoped deletes match only files of the SAME spec
-        # (delete_file_index.rs:194,211): a partition-key name/value
-        # collision across evolved specs must not attach foreign deletes
-        # (eq-deletes are not self-limiting at read time)
-        scopes = (self.global_scope,) if not df_.partition else \
-            (self.global_scope,
-             self.by_partition.get((df_.spec_id,
-                                    self._pk(df_.partition))))
-        for scope in scopes:
-            if scope is None:
-                continue
-            for dseq, _content, src in scope.pos:
-                if dseq >= seq:
-                    task.pos_deletes.append(self._file(src))
-            if scope.bounded is not None:
-                for dseq, _content, src in scope.bounded.stab(p):
-                    if dseq >= seq:
-                        task.pos_deletes.append(self._file(src))
-            for dseq, _content, src in scope.eq:
-                if dseq > seq:
-                    task.eq_deletes.append(self._file(src))
-
     @property
     def empty(self) -> bool:
         g = self.global_scope
@@ -1821,13 +1678,15 @@ class _DeleteFileIndex:
                     or g.pos or g.eq or g.bounded)
 
     def match_arrays(self, cols: "ManifestColumns", idx) -> Optional[list]:
-        """Bulk twin of ``match`` for the AlwaysTrue array fast plan: one
-        pass over the survivor-index array of a DATA manifest, returning a
-        list aligned with ``idx`` whose elements are None (no applicable
-        deletes) or an INTERNED ``(pos_srcs, eq_srcs)`` tuple of rec
-        sources (materialize via ``_file`` only when a consumer builds
-        tasks/DataFrames). Same seq-visibility and (spec_id, partition)
-        scoping rules as ``match`` — the per-survivor work is dict lookups
+        """The planner's delete attachment: one pass over the
+        survivor-index array of a data manifest, returning a list aligned
+        with ``idx`` whose elements are None (no applicable deletes) or an
+        INTERNED ``(pos_srcs, eq_srcs)`` tuple of rec sources (materialize
+        via ``_file`` only when a consumer builds tasks/DataFrames).
+        Path-scoped deletes match on the exact normalized data path,
+        partition-scoped ones only files of the same (spec_id, partition),
+        global ones every file; seq visibility as in the class docstring.
+        The per-survivor work is dict lookups
         against pre-grouped state: scope delete lists memoize per
         (scope, data seq), partition keys come from the run-deduplicated
         ``partition_groups`` codes, and partition dicts never decode at

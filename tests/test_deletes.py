@@ -329,7 +329,8 @@ def test_delete_index_normalizes_uri_spelled_path_bounds():
     silently skip a delete that applies — row resurrection at read."""
     from iceberg_rust_spark.sources.manifest import (
         CONTENT_DATA, CONTENT_POSITION_DELETES, DataFile, ManifestEntry)
-    from iceberg_rust_spark.sources.scan import FileScanTask, _DeleteFileIndex
+    from iceberg_rust_spark.sources.scan import _DeleteFileIndex
+    from tests.delete_attach import attach
 
     data = DataFile(file_path="/tmp/wh/db/t/data/a.parquet",
                     content=CONTENT_DATA, record_count=10,
@@ -343,16 +344,18 @@ def test_delete_index_normalizes_uri_spelled_path_bounds():
                                           sequence_number=2,
                                           file_sequence_number=2,
                                           data_file=de)])
-    task = FileScanTask(data_file=data, sequence_number=1)
-    idx.match(ManifestEntry(status=1, snapshot_id=1, sequence_number=1,
-                            file_sequence_number=1, data_file=data), task)
+    [task] = attach(idx, ManifestEntry(status=1, snapshot_id=1,
+                                       sequence_number=1,
+                                       file_sequence_number=1,
+                                       data_file=data))
     assert task.pos_deletes == [de], \
         "URI-spelled bounds must normalize to the target's spelling"
     # and genuinely out-of-range bounds still prune
     far = DataFile(file_path="/tmp/wh/db/t/data/zzz.parquet",
                    content=CONTENT_DATA, record_count=10,
                    file_size_in_bytes=100)
-    task2 = FileScanTask(data_file=far, sequence_number=1)
-    idx.match(ManifestEntry(status=1, snapshot_id=1, sequence_number=1,
-                            file_sequence_number=1, data_file=far), task2)
+    [task2] = attach(idx, ManifestEntry(status=1, snapshot_id=1,
+                                        sequence_number=1,
+                                        file_sequence_number=1,
+                                        data_file=far))
     assert task2.pos_deletes == []

@@ -5,13 +5,14 @@ containing a non-matching row. Over-approximation (might=True with no match)
 is allowed — that's only an IO cost."""
 
 import hypothesis.strategies as st
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 
 from iceberg_rust_spark.plans import expr as E
 from iceberg_rust_spark.plans.evaluators import (ColumnMetrics,
                                                  file_might_match,
                                                  file_must_match)
-from iceberg_rust_spark.sources.types import LONG, NestedField, Schema
+from iceberg_rust_spark.sources.types import (LONG, STRING, NestedField,
+                                             Schema)
 
 S = Schema([NestedField(1, "x", LONG)])
 
@@ -129,140 +130,174 @@ def test_strict_never_false_keeps(vals, pred):
 
 
 # --------------------------------------------------------------------------
-# Compiled-matcher equivalence: the planner's hot-loop matcher
-# (TableScan._compiled_file_matcher) must agree with the interpreted
-# _metrics_for_file + file_might_match pair on every (predicate, stats)
-# combination — they share _eval_bounds, so this pins the lookup parity.
+# Planner equivalence: the planner's vectorized metrics matcher
+# (TableScan._vector_matcher) and partition mask (TableScan._partition_mask)
+# must agree with the reference evaluators in plans/evaluators.py on every
+# (predicate, stats) and (predicate, partition layout) combination.
 # --------------------------------------------------------------------------
 
+S2 = Schema([NestedField(1, "x", LONG), NestedField(2, "s", STRING)])
+
 stat_counts = st.one_of(st.none(), st.integers(0, 20))
-bound_vals = st.one_of(st.none(), st.integers(-60, 60))
+# string bounds are at most 16 chars, like a writer's truncated bounds;
+# one mixed-type value per column makes comparisons raise TypeError
+x_bounds = st.one_of(st.none(), st.integers(-60, 60), st.just("m"))
+s_bounds = st.one_of(st.none(), st.text("ab", max_size=16), st.just(7))
+prefixes = st.one_of(st.just(""), st.text("ab", min_size=1, max_size=3),
+                     st.text("ab", min_size=17, max_size=20))
 
 
-@given(pred=predicates(), vc=stat_counts, nc=stat_counts,
-       nanc=stat_counts, lo=bound_vals, hi=bound_vals,
-       rec=st.integers(0, 25))
-@settings(max_examples=300, deadline=None)
-def test_compiled_matcher_equals_interpreted(pred, vc, nc, nanc,
-                                             lo, hi, rec):
-    from iceberg_rust_spark.sources.manifest import DataFile
+@st.composite
+def s_leaves(draw):
+    c = E.col("s")
+    v = draw(st.text("ab", max_size=4))
+    pre = draw(prefixes)
+    return draw(st.sampled_from([
+        c < v, c >= v, c == v, c != v, c.is_null(), c.not_null(),
+        c.isin([v, v + "b"]), c.starts_with(pre),
+        E.BinaryPred(E.NOT_STARTS_WITH, "s", pre)]))
+
+
+@st.composite
+def mixed_predicates(draw, depth=2):
+    p = draw(st.one_of(predicates(depth=0), s_leaves()))
+    if depth > 0 and draw(st.booleans()):
+        q = draw(mixed_predicates(depth=depth - 1))
+        op = draw(st.sampled_from(["and", "or"]))
+        return (p & q) if op == "and" else (p | q)
+    return p
+
+
+def _scan_md(schema, specs):
     from iceberg_rust_spark.sources.metadata import TableMetadata
-    from iceberg_rust_spark.sources.scan import TableScan
-
-    bound = E.bind(pred, S)
-    from iceberg_rust_spark.sources.metadata import PartitionSpec
-    md = TableMetadata(location="/tmp/x", schemas=[S], current_schema_id=0,
-                       partition_specs=[PartitionSpec(0, [])],
-                       default_spec_id=0)
-    scan = TableScan(md, row_filter=pred)
-    df_ = DataFile(
-        file_path="/f.parquet", record_count=rec,
-        value_counts={} if vc is None else {"x": vc},
-        null_value_counts={} if nc is None else {"x": nc},
-        nan_value_counts={} if nanc is None else {"x": nanc},
-        lower_bounds={} if lo is None else {"x": lo},
-        upper_bounds={} if hi is None else {"x": hi},
-        schema_id=0, spec_id=0)
-    interpreted = file_might_match(
-        bound, scan._metrics_for_file(df_, S), df_.record_count)
-    compiled = scan._compiled_file_matcher(bound, S, 0)(df_)
-    assert compiled == interpreted
+    return TableMetadata(location="/tmp/x", schemas=[schema],
+                         current_schema_id=0, partition_specs=specs,
+                         default_spec_id=specs[0].spec_id)
 
 
-@given(pred=predicates(), vc=stat_counts, nc=stat_counts,
-       nanc=stat_counts, lo=bound_vals, hi=bound_vals,
-       rec=st.integers(0, 25))
-@settings(max_examples=300, deadline=None)
-def test_columnar_matcher_equals_compiled(pred, vc, nc, nanc,
-                                          lo, hi, rec):
-    """The columnar planner matcher (flat metric extracts, objects only
-    for survivors) must agree with the compiled per-DataFile matcher on
-    every (predicate, stats) combination — BOTH through a written v2
-    manifest, so the tag-scalar encode/decode is in the loop."""
+def _written_columns(entries):
+    """Columnar view of ``entries`` after a real v2 manifest write/read,
+    so the tag-scalar encode/decode is in the loop."""
     import os
     import tempfile
 
-    from iceberg_rust_spark.sources.manifest import (DataFile,
-                                                     ManifestEntry,
-                                                     read_manifest_columns,
+    from iceberg_rust_spark.sources.manifest import (read_manifest_columns,
                                                      write_manifest)
-    from iceberg_rust_spark.sources.metadata import (PartitionSpec,
-                                                     TableMetadata)
-    from iceberg_rust_spark.sources.scan import TableScan, _pred_columns
-
-    bound = E.bind(pred, S)
-    md = TableMetadata(location="/tmp/x", schemas=[S], current_schema_id=0,
-                       partition_specs=[PartitionSpec(0, [])],
-                       default_spec_id=0)
-    scan = TableScan(md, row_filter=pred)
-    df_ = DataFile(
-        file_path="/f.parquet", record_count=rec,
-        value_counts={} if vc is None else {"x": vc},
-        null_value_counts={} if nc is None else {"x": nc},
-        nan_value_counts={} if nanc is None else {"x": nanc},
-        lower_bounds={} if lo is None else {"x": lo},
-        upper_bounds={} if hi is None else {"x": hi},
-        schema_id=0, spec_id=0)
-    compiled = scan._compiled_file_matcher(bound, S, 0)(df_)
-    with tempfile.TemporaryDirectory() as d:
-        p = os.path.join(d, "m.parquet")
-        write_manifest(p, [ManifestEntry(
-            status=1, snapshot_id=1, sequence_number=1,
-            file_sequence_number=1, data_file=df_)])
-        cols = read_manifest_columns(p)
-    columnar = scan._columnar_matcher(bound, S, 0, cols,
-                                      _pred_columns(bound))(0)
-    assert columnar == compiled
-
-
-@given(pred=predicates(),
-       stats=st.lists(st.tuples(stat_counts, stat_counts, stat_counts,
-                                bound_vals, bound_vals,
-                                st.integers(0, 25)),
-                      min_size=1, max_size=8))
-@settings(max_examples=400, deadline=None)
-def test_vector_matcher_equals_per_row(pred, stats):
-    """The numpy-vectorized metrics matcher must agree with the per-row
-    _eval_bounds walker on every (predicate, stats) combination, through
-    a written v2 manifest — or decline (None) and fall back. Never a
-    third behavior."""
-    import os
-    import tempfile
-
-    from iceberg_rust_spark.sources.manifest import (DataFile,
-                                                     ManifestEntry,
-                                                     read_manifest_columns,
-                                                     write_manifest)
-    from iceberg_rust_spark.sources.metadata import (PartitionSpec,
-                                                     TableMetadata)
-    from iceberg_rust_spark.sources.scan import TableScan, _pred_columns
-
-    bound = E.bind(pred, S)
-    md = TableMetadata(location="/tmp/x", schemas=[S], current_schema_id=0,
-                       partition_specs=[PartitionSpec(0, [])],
-                       default_spec_id=0)
-    scan = TableScan(md, row_filter=pred)
-    entries = []
-    for k, (vc, nc, nanc, lo, hi, rec) in enumerate(stats):
-        entries.append(ManifestEntry(
-            status=1, snapshot_id=1, sequence_number=1,
-            file_sequence_number=1,
-            data_file=DataFile(
-                file_path=f"/f{k}.parquet", record_count=rec,
-                value_counts={} if vc is None else {"x": vc},
-                null_value_counts={} if nc is None else {"x": nc},
-                nan_value_counts={} if nanc is None else {"x": nanc},
-                lower_bounds={} if lo is None else {"x": lo},
-                upper_bounds={} if hi is None else {"x": hi},
-                schema_id=0, spec_id=0)))
     with tempfile.TemporaryDirectory() as d:
         p = os.path.join(d, "m.parquet")
         write_manifest(p, entries)
-        cols = read_manifest_columns(p)
-    ref = _pred_columns(bound)
-    vec = scan._vector_matcher(bound, S, 0, cols, ref)
-    per_row = scan._columnar_matcher(bound, S, 0, cols, ref)
-    want = [per_row(i) for i in range(cols.n)]
-    if vec is None:
-        return                      # declined: per-row path serves
+        return read_manifest_columns(p)
+
+
+@given(pred=mixed_predicates(),
+       stats=st.lists(st.tuples(stat_counts, stat_counts, stat_counts,
+                                x_bounds, x_bounds,
+                                stat_counts, stat_counts,
+                                s_bounds, s_bounds,
+                                st.integers(0, 25)),
+                      min_size=1, max_size=8))
+@settings(max_examples=400, deadline=None)
+# empty prefix; a prefix longer than a 16-char truncated bound;
+# not_starts_with with and without nulls; bounds of another type
+@example(pred=E.col("s").starts_with(""),
+         stats=[(None, None, None, None, None, 3, 0, "ab", "b", 5)])
+@example(pred=E.col("s").starts_with("a" * 17),
+         stats=[(None, None, None, None, None, 3, 0, "a" * 16, "a" * 16, 5),
+                (None, None, None, None, None, 3, 0, "a" * 16, "b", 5)])
+@example(pred=E.BinaryPred(E.NOT_STARTS_WITH, "s", "ab"),
+         stats=[(None, None, None, None, None, 3, 0, "ab", "abb", 5),
+                (None, None, None, None, None, 3, 2, "ab", "abb", 5)])
+@example(pred=(E.col("x") == 3) | E.col("s").isin(["a", "b"]),
+         stats=[(4, 0, None, "m", 1, 4, 0, 7, "b", 5),
+                (4, 0, None, 9, "m", 4, 0, "b", 7, 5)])
+def test_vector_matcher_equals_per_row(pred, stats):
+    """The numpy-vectorized metrics matcher must agree, row by row, with
+    file_might_match over _metrics_for_file — including starts_with /
+    not_starts_with on truncated string bounds and bounds that do not
+    compare with the literal."""
+    from iceberg_rust_spark.sources.manifest import DataFile, ManifestEntry
+    from iceberg_rust_spark.sources.metadata import PartitionSpec
+    from iceberg_rust_spark.sources.scan import TableScan, _pred_columns
+
+    bound = E.bind(pred, S2)
+    scan = TableScan(_scan_md(S2, [PartitionSpec(0, [])]), row_filter=pred)
+
+    def only(col, v):
+        return {} if v is None else {col: v}
+
+    files = []
+    for k, (vc, nc, nanc, xlo, xhi, svc, snc, slo, shi, rec) in \
+            enumerate(stats):
+        files.append(DataFile(
+            file_path=f"/f{k}.parquet", record_count=rec,
+            value_counts={**only("x", vc), **only("s", svc)},
+            null_value_counts={**only("x", nc), **only("s", snc)},
+            nan_value_counts=only("x", nanc),
+            lower_bounds={**only("x", xlo), **only("s", slo)},
+            upper_bounds={**only("x", xhi), **only("s", shi)},
+            schema_id=0, spec_id=0))
+    cols = _written_columns([ManifestEntry(
+        status=1, snapshot_id=1, sequence_number=1, file_sequence_number=1,
+        data_file=f) for f in files])
+    vec = scan._vector_matcher(bound, S2, 0, cols, _pred_columns(bound))
+    want = [file_might_match(bound, scan._metrics_for_file(f, S2),
+                             f.record_count) for f in files]
     assert list(map(bool, vec)) == want, (pred, stats)
+
+
+@st.composite
+def partition_layouts(draw):
+    """(spec id, partition dict) per file over two specs — identity(x) as
+    ``x`` and truncate[2](s) as ``s_trunc`` — with empty partitions
+    (files written unpartitioned) mixed in."""
+    out = []
+    for _ in range(draw(st.integers(1, 20))):
+        spec = draw(st.integers(0, 1))
+        if draw(st.integers(0, 4)) == 0:
+            part = {}
+        elif spec == 0:
+            part = {"x": draw(st.integers(-8, 8))}
+        else:
+            part = {"s_trunc": draw(st.text("abc", max_size=2))}
+        out.append((spec, part))
+    return out
+
+
+@given(pred=mixed_predicates(), layout=partition_layouts(),
+       written=st.booleans())
+@settings(max_examples=300, deadline=None)
+def test_partition_mask_equals_per_entry(pred, layout, written):
+    """The planner's partition mask (one partition_might_match per
+    distinct (partition, spec) pair, scattered by partition_groups codes)
+    must equal the per-entry partition_might_match over random multi-spec
+    layouts, object-backed and through a written manifest."""
+    import numpy as np
+
+    from iceberg_rust_spark.functions.transforms import parse_transform
+    from iceberg_rust_spark.plans.evaluators import (PartitionFieldInfo,
+                                                     inclusive_projection,
+                                                     partition_might_match)
+    from iceberg_rust_spark.sources.manifest import (DataFile,
+                                                     ManifestColumns,
+                                                     ManifestEntry)
+    from iceberg_rust_spark.sources.scan import TableScan
+
+    specs = {0: [PartitionFieldInfo("x", "x", parse_transform("identity"),
+                                    LONG)],
+             1: [PartitionFieldInfo("s", "s_trunc",
+                                    parse_transform("truncate[2]"),
+                                    STRING)]}
+    bound = E.bind(pred, S2)
+    ppred = {k: inclusive_projection(bound, v) for k, v in specs.items()}
+    entries = [ManifestEntry(
+        status=1, snapshot_id=1, sequence_number=1, file_sequence_number=1,
+        data_file=DataFile(file_path=f"/f{i}.parquet", record_count=1,
+                           partition=part, schema_id=0, spec_id=spec))
+        for i, (spec, part) in enumerate(layout)]
+    cols = (_written_columns(entries) if written
+            else ManifestColumns.from_entries(entries))
+    rows = np.arange(cols.n)
+    got = TableScan._partition_mask(cols, rows, ppred.__getitem__)
+    want = [not part or partition_might_match(ppred[spec], part)
+            for spec, part in layout]
+    assert list(map(bool, got)) == want, (pred, layout)

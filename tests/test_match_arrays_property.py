@@ -1,12 +1,13 @@
-"""Property test pinning the r12 bulk delete matcher
-(_DeleteFileIndex.match_arrays) to the per-entry object path (match):
-random mixes of DV path-scoped / file_path-bounded / partition-scoped /
-global / equality deletes over random data-file layouts must produce
-IDENTICAL per-file attachment sets under both paths — same seq-visibility
-gating (pos: dseq >= seq, eq: dseq > seq), same (spec_id, partition)
-scoping, same path normalization. Also pins ManifestColumns
-.partition_groups (run-deduplicated decode) to _partitions_all on random
-fixed-width and ragged partition maps."""
+"""Property test pinning the planner's bulk delete matcher
+(_DeleteFileIndex.match_arrays) to the spec's delete-attachment rules,
+written out brute force in the test: random mixes of DV path-scoped /
+file_path-bounded / partition-scoped / global / equality deletes over
+random data-file layouts must produce exactly the per-file attachment sets
+the rules give — pos deletes when dseq >= seq, eq deletes when dseq > seq,
+same (spec_id, partition) or global scope, exact referenced_data_file,
+file_path bounds. Also pins ManifestColumns.partition_groups
+(run-deduplicated decode) to _partitions_all on random fixed-width and
+ragged partition maps."""
 
 import hypothesis.strategies as st
 from hypothesis import given, settings
@@ -15,7 +16,7 @@ from iceberg_rust_spark.sources.manifest import (CONTENT_EQUALITY_DELETES,
                                                  CONTENT_POSITION_DELETES,
                                                  DataFile, ManifestColumns,
                                                  ManifestEntry)
-from iceberg_rust_spark.sources.scan import FileScanTask, _DeleteFileIndex
+from iceberg_rust_spark.sources.scan import _DeleteFileIndex
 
 
 def _data_entry(i, seq, part, spec=0):
@@ -36,12 +37,13 @@ def mor_layout(draw):
         seq = draw(st.integers(1, 6))
         p = draw(st.integers(0, n_parts - 1))
         part = {} if draw(st.booleans()) and p == 0 else {"p": p}
-        files.append((i, seq, part))
+        files.append((i, seq, part, draw(st.integers(0, 1))))
     dels = []
     n_dels = draw(st.integers(0, 16))
     for j in range(n_dels):
         kind = draw(st.sampled_from(["dv", "bounded", "pos", "eq", "geq"]))
         dseq = draw(st.integers(1, 7))
+        dspec = draw(st.integers(0, 1))
         p = draw(st.integers(0, n_parts - 1))
         if kind == "dv":
             ref_i = draw(st.integers(0, n_files - 1))
@@ -51,7 +53,7 @@ def mor_layout(draw):
                 record_count=1, file_size_in_bytes=16,
                 referenced_data_file=f"/d/f{ref_i:04d}.parquet",
                 content_offset=4, content_size_in_bytes=8,
-                schema_id=0, spec_id=0))
+                schema_id=0, spec_id=dspec))
         elif kind == "bounded":
             lo = draw(st.integers(0, n_files - 1))
             hi = draw(st.integers(lo, n_files - 1))
@@ -61,53 +63,73 @@ def mor_layout(draw):
                 record_count=5, file_size_in_bytes=64,
                 lower_bounds={"file_path": f"/d/f{lo:04d}.parquet"},
                 upper_bounds={"file_path": f"/d/f{hi:04d}.parquet"},
-                schema_id=0, spec_id=0))
+                schema_id=0, spec_id=dspec))
         elif kind == "pos":
             dels.append(DataFile(
                 file_path=f"/del/pp{j}.parquet",
                 content=CONTENT_POSITION_DELETES, partition={"p": p},
                 record_count=5, file_size_in_bytes=64,
-                schema_id=0, spec_id=0))
+                schema_id=0, spec_id=dspec))
         elif kind == "eq":
             dels.append(DataFile(
                 file_path=f"/del/eq{j}.parquet",
                 content=CONTENT_EQUALITY_DELETES, partition={"p": p},
                 record_count=5, file_size_in_bytes=64, equality_ids=[3],
-                schema_id=0, spec_id=0))
+                schema_id=0, spec_id=dspec))
         else:                               # global equality delete
             dels.append(DataFile(
                 file_path=f"/del/geq{j}.parquet",
                 content=CONTENT_EQUALITY_DELETES, partition={},
                 record_count=5, file_size_in_bytes=64, equality_ids=[3],
-                schema_id=0, spec_id=0))
+                schema_id=0, spec_id=dspec))
         dels[-1] = (dels[-1], dseq)
     return files, dels
 
 
-def _attach_via_match(index, entries):
+def _attach_by_rules(entries, dels):
+    """Brute-force oracle: every (data file, delete) pair checked against
+    the spec's rules, independent of the index's data structures."""
     out = {}
     for e in entries:
-        task = FileScanTask(data_file=e.data_file,
-                            sequence_number=e.sequence_number)
-        index.match(e, task)
-        out[e.data_file.file_path] = (
-            sorted(d.file_path for d in task.pos_deletes),
-            sorted(d.file_path for d in task.eq_deletes))
+        f, seq = e.data_file, e.sequence_number
+        pos, eq = [], []
+        for d, dseq in dels:
+            if d.referenced_data_file is not None:
+                applies = d.referenced_data_file == f.file_path
+            elif d.partition:
+                applies = (bool(f.partition) and d.spec_id == f.spec_id
+                           and d.partition == f.partition)
+            else:
+                applies = True
+            lo = d.lower_bounds.get("file_path")
+            hi = d.upper_bounds.get("file_path")
+            if (applies and d.content == CONTENT_POSITION_DELETES
+                    and d.referenced_data_file is None
+                    and lo is not None and hi is not None):
+                applies = lo <= f.file_path <= hi
+            if not applies:
+                continue
+            if d.content == CONTENT_POSITION_DELETES and dseq >= seq:
+                pos.append(d.file_path)
+            elif d.content == CONTENT_EQUALITY_DELETES and dseq > seq:
+                eq.append(d.file_path)
+        out[f.file_path] = (sorted(pos), sorted(eq))
     return out
 
 
 @settings(max_examples=200, deadline=None)
 @given(layout=mor_layout())
-def test_match_arrays_equals_object_match(layout):
+def test_match_arrays_equals_spec_rules(layout):
     import numpy as np
     files, dels = layout
-    entries = [_data_entry(i, seq, part) for i, seq, part in files]
+    entries = [_data_entry(i, seq, part, spec)
+               for i, seq, part, spec in files]
     index = _DeleteFileIndex()
     for df_, dseq in dels:
         index.add_entry(ManifestEntry(
             status=1, snapshot_id=2, sequence_number=dseq,
             file_sequence_number=dseq, data_file=df_))
-    want = _attach_via_match(index, entries)
+    want = _attach_by_rules(entries, dels)
 
     cols = ManifestColumns.from_entries(entries)
     idx = np.arange(cols.n)

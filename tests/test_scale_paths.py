@@ -11,6 +11,7 @@ from iceberg_rust_spark.sources.manifest import (CONTENT_EQUALITY_DELETES,
                                                  DataFile, ManifestEntry)
 from iceberg_rust_spark.sources.scan import _DeleteFileIndex
 from iceberg_rust_spark.sources.types import schema_from_spark
+from tests.delete_attach import attach
 
 
 def _ids(spark, n, parts=4):
@@ -115,9 +116,7 @@ def test_delete_index_partition_scoping():
     global_del = _entry(2, CONTENT_EQUALITY_DELETES, path="del-glob.parquet")
     idx = _DeleteFileIndex([same_part, other_part, global_del])
 
-    from iceberg_rust_spark.sources.scan import FileScanTask
-    task = FileScanTask(data_file=data.data_file, sequence_number=1)
-    idx.match(data, task)
+    [task] = attach(idx, data)
     assert [d.file_path for d in task.pos_deletes] == ["del-same.parquet"]
     assert [d.file_path for d in task.eq_deletes] == ["del-glob.parquet"]
 
@@ -130,9 +129,7 @@ def test_delete_index_sequence_visibility():
     new_eq = _entry(6, CONTENT_EQUALITY_DELETES, path="new-eq.parquet")
     idx = _DeleteFileIndex([old_pos, same_pos, same_eq, new_eq])
 
-    from iceberg_rust_spark.sources.scan import FileScanTask
-    task = FileScanTask(data_file=data.data_file, sequence_number=5)
-    idx.match(data, task)
+    [task] = attach(idx, data)
     # pos: seq >= data.seq applies; eq: strictly greater only
     assert [d.file_path for d in task.pos_deletes] == ["same-pos.parquet"]
     assert [d.file_path for d in task.eq_deletes] == ["new-eq.parquet"]
@@ -145,11 +142,7 @@ def test_delete_index_referenced_data_file_exact():
                   path="dv.puffin")
     idx = _DeleteFileIndex([dv_a])
 
-    from iceberg_rust_spark.sources.scan import FileScanTask
-    ta = FileScanTask(data_file=data_a.data_file, sequence_number=1)
-    tb = FileScanTask(data_file=data_b.data_file, sequence_number=1)
-    idx.match(data_a, ta)
-    idx.match(data_b, tb)
+    ta, tb = attach(idx, data_a, data_b)
     assert len(ta.pos_deletes) == 1 and not tb.pos_deletes
 
 
@@ -160,12 +153,10 @@ def test_delete_index_linear_planning_speed():
     deletes = [_entry(2, CONTENT_POSITION_DELETES, partition={"b": i % 50},
                       path=f"del-{i}.parquet") for i in range(1000)]
     idx = _DeleteFileIndex(deletes)
-    from iceberg_rust_spark.sources.scan import FileScanTask
     t0 = time.time()
-    for i in range(10_000):
-        e = _entry(1, 0, partition={"b": i % 50}, path=f"data-{i}.parquet")
-        task = FileScanTask(data_file=e.data_file, sequence_number=1)
-        idx.match(e, task)
+    data = [_entry(1, 0, partition={"b": i % 50}, path=f"data-{i}.parquet")
+            for i in range(10_000)]
+    for task in attach(idx, *data):
         assert len(task.pos_deletes) == 20
     assert time.time() - t0 < 5.0
 
@@ -306,7 +297,6 @@ def test_delete_index_from_columns_matches_entry_built(tmp_path):
 
     from iceberg_rust_spark.sources.manifest import (read_manifest_columns,
                                                      write_manifest)
-    from iceberg_rust_spark.sources.scan import FileScanTask
 
     dels = [
         _entry(2, CONTENT_POSITION_DELETES, ref="/w/data-A.parquet",
@@ -333,18 +323,15 @@ def test_delete_index_from_columns_matches_entry_built(tmp_path):
                         ("/w/data-C.parquet", {"b": 1}),
                         ("/w/data-A.parquet", {"b": 2})]:
         e = _entry(1, 0, partition=part, path=dpath)
-        ta = FileScanTask(data_file=e.data_file, sequence_number=1)
-        tb = FileScanTask(data_file=e.data_file, sequence_number=1)
-        from_entries.match(e, ta)
-        from_cols.match(e, tb)
+        [ta] = attach(from_entries, e)
+        [tb] = attach(from_cols, e)
         assert sorted(d.file_path for d in ta.pos_deletes) == \
             sorted(d.file_path for d in tb.pos_deletes), (dpath, part)
         assert sorted(d.file_path for d in ta.eq_deletes) == \
             sorted(d.file_path for d in tb.eq_deletes), (dpath, part)
     # data-A in partition b=1: DV + bounded + nobounds pos, eq attached
     e = _entry(1, 0, partition={"b": 1}, path="/w/data-A.parquet")
-    t = FileScanTask(data_file=e.data_file, sequence_number=1)
-    from_cols.match(e, t)
+    [t] = attach(from_cols, e)
     assert sorted(d.file_path for d in t.pos_deletes) == \
         ["/w/bounded.parquet", "/w/dv.puffin", "/w/nobounds.parquet"]
     assert [d.file_path for d in t.eq_deletes] == ["/w/eq.parquet"]
@@ -418,7 +405,6 @@ def test_delete_index_spec_scoped_partitions():
     partition spec (delete_file_index.rs:194,211): a key name/value
     collision across evolved specs must not attach foreign eq-deletes
     (which, unlike pos-deletes, are not self-limiting at read time)."""
-    from iceberg_rust_spark.sources.scan import FileScanTask
 
     def entry(seq, content, spec_id, partition, path):
         f = DataFile(file_path=path, content=content, partition=partition,
@@ -432,10 +418,7 @@ def test_delete_index_spec_scoped_partitions():
 
     data0 = entry(1, 0, 0, {"b": 3}, "d0.parquet")
     data1 = entry(1, 0, 1, {"b": 3}, "d1.parquet")
-    t0 = FileScanTask(data_file=data0.data_file, sequence_number=1)
-    t1 = FileScanTask(data_file=data1.data_file, sequence_number=1)
-    idx.match(data0, t0)
-    idx.match(data1, t1)
+    t0, t1 = attach(idx, data0, data1)
     assert [d.file_path for d in t0.eq_deletes] == ["eq0.parquet"]
     assert not t0.pos_deletes
     assert [d.file_path for d in t1.pos_deletes] == ["pd1.parquet"]
@@ -443,24 +426,31 @@ def test_delete_index_spec_scoped_partitions():
 
 
 # --------------------------------------------------- r11: fast array plans
+def _counters(plan):
+    return (plan.total_manifests, plan.skipped_manifests,
+            plan.total_data_files, plan.skipped_by_partition,
+            plan.skipped_by_metrics)
+
+
 def test_fast_plan_matches_object_plan(warehouse):
-    """An AlwaysTrue scan plans into survivor-index arrays (plan._fast);
-    .tasks must lazily materialize EXACTLY what the object path builds,
-    and the plan counters must be identical."""
+    """Every scan plans into survivor-index arrays (plan._fast): an
+    AlwaysTrue scan and a trivially-true metrics predicate must both stay
+    array plans, lazily materialize EXACTLY the same tasks, and report
+    identical plan counters."""
     t = _fab_table(warehouse, n_manifests=4, files_per_manifest=30)
     fast = t.scan().plan_files()
     assert fast._fast is not None and fast._tasks is None
-    # object path: a trivially-true metrics predicate walks every entry
-    obj = t.scan(row_filter=E.col("k") >= 0).plan_files()
-    assert obj._fast is None
-    assert fast.total_data_files == obj.total_data_files == 120
-    assert fast.total_manifests == obj.total_manifests
+    filtered = t.scan(row_filter=E.col("k") >= 0).plan_files()
+    assert filtered._fast is not None and filtered._tasks is None
+    assert _counters(fast) == _counters(filtered)
+    assert fast.total_data_files == 120
     # touching .tasks materializes — identical file sets, seqs, no deletes
     f_tasks = {(x.data_file.file_path, x.sequence_number)
                for x in fast.tasks}
     o_tasks = {(x.data_file.file_path, x.sequence_number)
-               for x in obj.tasks}
+               for x in filtered.tasks}
     assert f_tasks == o_tasks and len(f_tasks) == 120
+    assert _attach_sig(fast) == _attach_sig(filtered)
     assert all(not x.pos_deletes and not x.eq_deletes for x in fast.tasks)
 
 
@@ -763,7 +753,9 @@ def test_fast_plan_with_deletes_matches_object_plan(warehouse):
     assert fast._fast is not None and fast._tasks is None
     assert any(sets is not None for _, _, sets in fast._fast)
     obj = t.scan(row_filter=E.col("k") >= 0).plan_files()
-    assert obj._fast is None
+    assert obj._fast is not None and obj._tasks is None
+    assert any(sets is not None for _, _, sets in obj._fast)
+    assert _counters(fast) == _counters(obj)
     fsig, osig = _attach_sig(fast), _attach_sig(obj)
     assert fsig == osig
     # the late manifest's files carry NO deletes (all deletes have lower
@@ -775,6 +767,85 @@ def test_fast_plan_with_deletes_matches_object_plan(warehouse):
     f0 = by_file["/nonexistent/m1/f7.parquet"]
     assert len(f0[0]) == 2 and len(f0[1]) == 1
     assert any("dv7" in p for p in f0[0])
+
+
+def test_filtered_plan_builds_no_entries(warehouse):
+    """A filtered plan is an array plan too: planning cold builds no
+    ManifestEntry objects for any row, survivors included, until a
+    consumer touches .tasks."""
+    from iceberg_rust_spark.sources.scan import (_manifest_cache,
+                                                 load_manifest_columns,
+                                                 load_manifest_list)
+    t = _fab_table(warehouse, n_manifests=3, files_per_manifest=20)
+    _manifest_cache.cache_clear()
+    plan = t.scan(row_filter=E.col("k") >= 0).plan_files()
+    mlist = load_manifest_list(t.metadata.current_snapshot().manifest_list)
+    cols = [load_manifest_columns(m.manifest_path) for m in mlist]
+    assert all(not c._entry_memo and c._entries is None for c in cols)
+    assert len(plan.tasks) == 60
+    assert any(c._entry_memo for c in cols)
+
+
+def _fab_stray_table(warehouse):
+    """Content mixed the way external tools may write it: a DATA manifest
+    holding a live equality delete (partition 0) and a DELETE manifest
+    holding a live data file (partition 1) next to a partition-scoped
+    positional delete."""
+    t = _fab_table(warehouse, n_manifests=2, files_per_manifest=10)
+    stray_eq = DataFile(
+        file_path="/nonexistent/stray/eq0.parquet",
+        content=CONTENT_EQUALITY_DELETES, partition={"p": 0},
+        record_count=5, file_size_in_bytes=512, equality_ids=[3],
+        schema_id=0, spec_id=0)
+    t = t._commit_retry(lambda md: t._snapshot_update(
+        md, "append", added=[stray_eq]))
+    stray_data = DataFile(
+        file_path="/nonexistent/stray/data1.parquet", record_count=100,
+        file_size_in_bytes=1 << 20, partition={"p": 1},
+        value_counts={"k": 100, "p": 100, "v": 100},
+        null_value_counts={"k": 0, "p": 0, "v": 0},
+        lower_bounds={"k": 0, "p": 1, "v": 5000},
+        upper_bounds={"k": 10 ** 9, "p": 1, "v": 5000},
+        schema_id=0, spec_id=0)
+    pd1 = DataFile(
+        file_path="/nonexistent/stray/pd1.parquet",
+        content=CONTENT_POSITION_DELETES, partition={"p": 1},
+        record_count=10, file_size_in_bytes=1 << 10,
+        schema_id=0, spec_id=0)
+    return t._commit_retry(lambda md: t._snapshot_update(
+        md, "delete", added_deletes=[stray_data, pd1]))
+
+
+def test_stray_content_plans(warehouse):
+    """Stray entries keep their planning semantics, AlwaysTrue and
+    filtered: the stray equality delete (seq 3) attaches to partition 0's
+    earlier data files, the stray data file (seq 4) plans like any data
+    file and takes partition 1's positional delete (seq 4 >= 4), and
+    pruning counters include the stray data file."""
+    t = _fab_stray_table(warehouse)
+    eq0, pd1 = ("/nonexistent/stray/eq0.parquet",
+                "/nonexistent/stray/pd1.parquet")
+    stray = "/nonexistent/stray/data1.parquet"
+    want = {f"/nonexistent/m0/f{i}.parquet": ((), (eq0,)) for i in range(10)}
+    want.update({f"/nonexistent/m1/f{i}.parquet": ((pd1,), ())
+                 for i in range(10)})
+    want[stray] = ((pd1,), ())
+
+    full = t.scan().plan_files()
+    assert {f: (p, e) for f, p, e in _attach_sig(full)} == want
+    assert full.total_data_files == 21
+
+    metrics = t.scan(row_filter=E.col("v") >= 1005).plan_files()
+    assert {f: (p, e) for f, p, e in _attach_sig(metrics)} == {
+        f: want[f] for f in want
+        if f == stray or f.startswith("/nonexistent/m1/")
+        and int(f.split("/f")[-1].split(".")[0]) >= 5}
+    assert (metrics.total_data_files, metrics.skipped_by_metrics) == (21, 15)
+
+    part = t.scan(row_filter=E.col("p") == 0).plan_files()
+    assert {f: (p, e) for f, p, e in _attach_sig(part)} == {
+        f: want[f] for f in want if f.startswith("/nonexistent/m0/")}
+    assert part.skipped_manifests == 2
 
 
 def test_fast_plan_with_deletes_count_rows(warehouse):
