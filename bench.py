@@ -90,7 +90,7 @@ def _parallel_probe_df(spark):
     for _ in range(6):
         h = f"xxhash64({h})"
     # sum a bounded residue, not the raw hash: the session runs ANSI mode
-    # and a long-sum of 256M full-range hashes overflows
+    # and a long-sum of 96M full-range hashes overflows
     return (spark.range(0, 96_000_000, 1, 64)
             .selectExpr(f"pmod({h}, 1048576) AS h")
             .agg(F.sum("h").alias("s")))

@@ -11,6 +11,7 @@ applies to INT96, arrow/reader/pipeline.rs:201-216).
 from __future__ import annotations
 
 import os
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,6 +51,37 @@ def get_spark(app_name: str = "iceberg_rust_spark",
     )
 
 
+SESSION_MEMO_CAP = 256
+
+
+class _SessionMemo(OrderedDict):
+    """LRU of at most ``SESSION_MEMO_CAP`` values: ``get`` refreshes a
+    key's recency, ``put`` evicts the oldest keys past the cap."""
+
+    def get(self, key, default=None):
+        if key not in self:
+            return default
+        self.move_to_end(key)
+        return self[key]
+
+    def put(self, key, value):
+        self[key] = value
+        self.move_to_end(key)
+        while len(self) > SESSION_MEMO_CAP:
+            self.popitem(last=False)
+        return value
+
+
+def session_memo(spark: SparkSession, name: str) -> _SessionMemo:
+    """The session's LRU memo called ``name``. Memos hold lazy JVM
+    DataFrames (and the rows collected from them), so they live on the
+    session object and die with it instead of crossing JVMs."""
+    memos = getattr(spark, "_irs_memos", None)
+    if memos is None:
+        memos = spark._irs_memos = {}
+    return memos.setdefault(name, _SessionMemo())
+
+
 def local_df(spark: SparkSession, rows, schema: str,
              parts: int | None = None) -> DataFrame:
     """Small driver-local DataFrame via the ARROW createDataFrame path.
@@ -67,6 +99,7 @@ def local_df(spark: SparkSession, rows, schema: str,
     represent the values. ``parts``: optional coalesce for consumers that
     launch a Python task per partition (mapInPandas over a tiny fixture).
     """
+    rows = list(rows)   # read once per column, and again by the fallback
     try:
         import pandas as pd
         from pyspark.sql.types import _parse_datatype_string
@@ -84,7 +117,7 @@ def local_df(spark: SparkSession, rows, schema: str,
             spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
         df = spark.createDataFrame(pdf, schema=st)
     except Exception:
-        df = spark.createDataFrame(list(rows), schema)
+        df = spark.createDataFrame(rows, schema)
     if parts is not None:
         df = df.coalesce(parts)
     return df
@@ -102,17 +135,12 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     burst) — ~30-60ms per table that multi-table queries paid up to six
     times over. The cache lives on the session wrapper, so it dies with
     the session and never crosses JVMs."""
-    cache = getattr(spark, "_irs_read_table_cache", None)
-    if cache is None:
-        cache = {}
-        spark._irs_read_table_cache = cache
+    memo = session_memo(spark, "read_table")
     key = (sf_dir, name)
-    got = cache.get(key)
-    if got is not None:
-        return got
-    df = _read_table_uncached(spark, sf_dir, name)
-    cache[key] = df
-    return df
+    got = memo.get(key)
+    if got is None:
+        got = memo.put(key, _read_table_uncached(spark, sf_dir, name))
+    return got
 
 
 def _read_table_uncached(spark: SparkSession, sf_dir: str,

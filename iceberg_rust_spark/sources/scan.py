@@ -23,7 +23,7 @@ from __future__ import annotations
 import functools
 import os
 import threading
-from collections import OrderedDict
+from collections import Counter, OrderedDict
 from dataclasses import dataclass, field as dc_field
 from typing import Any, Dict, List, Optional, Sequence, Tuple
 
@@ -34,6 +34,7 @@ from ..plans import expr as E
 from ..plans.evaluators import (ColumnMetrics, FieldSummary, PartitionFieldInfo,
                                 inclusive_projection, manifest_might_match,
                                 partition_might_match)
+from ..session import session_memo
 from .io import (file_io_for, localize_paths, mirror_remap_pattern,
                  spark_native_path)
 from .manifest import (CONTENT_DATA, CONTENT_EQUALITY_DELETES,
@@ -44,76 +45,106 @@ from .metadata import Snapshot, TableMetadata
 from .types import Schema, type_to_spark
 
 
-class _ManifestCache:
-    """ENTRY-weighted LRU over parsed manifests (the reference's
-    byte-weighted object cache, io/object_cache.rs:22-60). Manifests vary
-    1..10k+ entries, so a count-capped lru_cache retains O(files) driver
-    memory in the worst case (4096 manifests x 1000 entries ~ 9 GB);
-    weighting by len() bounds retained ManifestEntry objects (~2.3 KB
-    each measured) regardless of manifest shape. Default budget 512k
-    entries (~1.2 GB), env ICEBERG_SPARK_MANIFEST_CACHE_ENTRIES.
-    Thread-safe for the planner's pool: lookups/inserts lock, the decode
-    itself runs unlocked (a concurrent miss may decode twice — benign,
-    manifests are immutable)."""
+# Per-entry weights of the cached kinds, measured with tracemalloc on
+# fabricated tables (see ARCHITECTURE.md "One object cache"). A manifest
+# entry is weighed at the most it grows to: ~356 B of Arrow rows, ~285 B of
+# eager and derived numpy extracts, ~1.8 KB once ``entries()`` builds its
+# objects. A manifest-list entry measured ~870 B with one partition field
+# summary, a delete-index entry ~354 B of routing records.
+_MANIFEST_ENTRY_BYTES = 2400
+_MANIFEST_LIST_ENTRY_BYTES = 1000
+_DELETE_INDEX_ENTRY_BYTES = 400
 
-    def __init__(self, max_entries: Optional[int] = None):
-        import threading
-        if max_entries is None:
-            max_entries = int(os.environ.get(
-                "ICEBERG_SPARK_MANIFEST_CACHE_ENTRIES", str(512 * 1024)))
-        self.max_entries = max_entries
+
+def _memory_budget() -> int:
+    """1/8 of physical memory; 1 GiB where the platform cannot say."""
+    try:
+        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 8
+    except (AttributeError, OSError, ValueError):
+        return 1 << 30
+
+
+class _ManifestCache:
+    """The one cache for immutable metadata objects: one byte-weighted LRU
+    (the reference's object cache, io/object_cache.rs:22-60) keyed by
+    ``(kind, path, mtime_ns, extra)``. Kinds: ``manifest`` (``get``, with
+    the opt-in disk tier), ``manifest_list``, ``delete_index`` (path None;
+    ``extra`` is the surviving delete-manifest set with each stamp),
+    ``delete_match`` and ``dv``. Every value is weighed once, at insert,
+    and the least recently used values go once the bytes held pass the
+    budget. Thread-safe for the planner's pool: lookups and inserts lock,
+    loads run unlocked, and on concurrent misses the first insert wins.
+    ``stats(kind)`` reads cumulative hits, misses and evictions, and the
+    bytes the kind holds."""
+
+    def __init__(self, budget_bytes: Optional[int] = None):
+        self.budget_bytes = (_memory_budget() if budget_bytes is None
+                             else budget_bytes)
         self._lock = threading.Lock()
         self._data: "OrderedDict[tuple, tuple]" = OrderedDict()
-        self._weight = 0
+        self._counts: Counter = Counter()       # (kind, what) -> n
+        self.bytes = 0
 
-    def get(self, path: str, mtime_ns: int) -> "ManifestColumns":
-        key = (path, mtime_ns)
+    def lookup(self, key: tuple) -> Any:
+        """The cached value for ``key`` or None (counts a hit or a miss)."""
+        with self._lock:
+            got = self._data.get(key)
+            if got is None:
+                self._counts[key[0], "misses"] += 1
+                return None
+            self._data.move_to_end(key)
+            self._counts[key[0], "hits"] += 1
+            return got[0]
+
+    def insert(self, key: tuple, value: Any, weight: int) -> Any:
+        """Hold ``value`` unless ``key`` is already held; returns the held
+        value, so concurrent loaders all get the first insert."""
         with self._lock:
             got = self._data.get(key)
             if got is not None:
-                self._data.move_to_end(key)
-                return got
-        got = _disk_cache_load(path, mtime_ns)
-        if got is not None:
-            with self._lock:
-                if key not in self._data:
-                    self._data[key] = got
-                    self._weight += max(1, got.n)
-                    while (self._weight > self.max_entries
-                           and len(self._data) > 1):
-                        _, old = self._data.popitem(last=False)
-                        self._weight -= max(1, old.n)
-            return got
-        if path.endswith(".avro"):
-            # spec-layout manifest written by a real Iceberg implementation
-            # (interop path); self-decoding via embedded schema
-            from .avro_manifest import read_avro_manifest
-            from .manifest import ManifestColumns
-            val = ManifestColumns.from_entries(read_avro_manifest(path))
-        else:
-            from .manifest import read_manifest_columns
-            val = read_manifest_columns(path)
+                return got[0]
+            self._data[key] = (value, weight)
+            self.bytes += weight
+            self._counts[key[0], "bytes"] += weight
+            while self.bytes > self.budget_bytes and len(self._data) > 1:
+                (kind, *_), (_, w) = self._data.popitem(last=False)
+                self.bytes -= w
+                self._counts[kind, "bytes"] -= w
+                self._counts[kind, "evictions"] += 1
+        return value
+
+    def load(self, kind: str, path: Optional[str], mtime_ns: Optional[int],
+             extra: Any, loader, weigh) -> Any:
+        """The value under ``(kind, path, mtime_ns, extra)``, built by
+        ``loader()`` and weighed by ``weigh(value)`` on a miss."""
+        key = (kind, path, mtime_ns, extra)
+        got = self.lookup(key)
+        if got is None:
+            got = loader()
+            got = self.insert(key, got, weigh(got))
+        return got
+
+    def get(self, path: str, mtime_ns: int) -> "ManifestColumns":
+        """A manifest's columnar view (the ``manifest`` kind): a miss tries
+        the opt-in disk tier, then decodes."""
+        return self.load("manifest", path, mtime_ns, None,
+                         lambda: (_disk_cache_load(path, mtime_ns)
+                                  or _decode_manifest(path)),
+                         lambda v: max(1, v.n) * _MANIFEST_ENTRY_BYTES)
+
+    def stats(self, kind: str) -> Dict[str, int]:
         with self._lock:
-            if key not in self._data:
-                self._data[key] = val
-                self._weight += max(1, val.n)
-                while self._weight > self.max_entries and len(self._data) > 1:
-                    _, old = self._data.popitem(last=False)
-                    self._weight -= max(1, old.n)
-        return val
+            return {what: self._counts[kind, what]
+                    for what in ("hits", "misses", "evictions", "bytes")}
 
     def cache_clear(self) -> None:
+        """Drop every held value of every kind (counters keep counting)."""
         with self._lock:
             self._data.clear()
-            self._weight = 0
-        # indexes reference cached views; same locking discipline as the
-        # get/popitem sections (a bare clear is GIL-safe today but torn
-        # under free-threaded builds)
-        with _delete_index_lock:
-            _delete_index_cache.clear()
-            _fast_match_cache.clear()
-            global _fast_match_cache_rows
-            _fast_match_cache_rows = 0
+            self.bytes = 0
+            for k in self._counts:
+                if k[1] == "bytes":
+                    self._counts[k] = 0
 
 
 _manifest_cache = _ManifestCache()
@@ -214,47 +245,31 @@ def _disk_cache_store(path: str, mtime_ns: int, cols: "ManifestColumns") -> None
     except Exception:
         pass                            # best-effort: never fail a plan
 
-# built _DeleteFileIndex per surviving-delete-manifest set; entries are
-# (index, stray_data_entries). Small LRU: an index references the cols
-# views already held by the manifest cache, adding only routing dicts.
-# Lock shared with nothing else: plan_files may run on caller threads
-# concurrently (the manifest cache above locks for the same reason);
-# a benign double-build on a concurrent miss is fine, a torn OrderedDict
-# is not.
-_delete_index_cache: "OrderedDict[tuple, tuple]" = OrderedDict()
-# bulk delete-attachment memo for the array fast plan: (manifest path,
-# mtime, delete-manifest-set key) -> (survivor idx array, per-survivor
-# interned delete sets). Entries reference cols views the manifest cache
-# already holds plus small rec tuples; capped LRU, same lock.
-_fast_match_cache: "OrderedDict[tuple, tuple]" = OrderedDict()
-# retained-size bound for _fast_match_cache (ADVICE r12): an entry's
-# weight is its survivor count — each survivor holds an interned delete
-# set slot, so weight tracks the real retained footprint where a bare
-# entry cap would not (a churning MOR table mints a NEW delete-set key
-# per snapshot, and 4096 × 100k-survivor lists is hundreds of MB).
-_fast_match_cache_rows = 0
-_FAST_MATCH_MAX_ENTRIES = 256
-_FAST_MATCH_MAX_ROWS = 2_000_000
-_delete_index_lock = __import__("threading").Lock()
-
 
 def load_manifest(path: str) -> Sequence[ManifestEntry]:
     """Manifests are immutable once written; cache keyed by (path, mtime).
     Entry objects materialize lazily from the cached columnar view (and
     memoize inside it), so maintenance/metadata callers see the old list
     API while the planner never pays for objects it prunes."""
-    from .io import file_io_for
-    return _manifest_cache.get(path, file_io_for(path).mtime_ns(path)).entries()
+    return load_manifest_columns(path).entries()
 
 
 def load_manifest_columns(path: str) -> "ManifestColumns":
     """Columnar view for the planner (same cache as load_manifest)."""
-    from .io import file_io_for
     return _manifest_cache.get(path, file_io_for(path).mtime_ns(path))
 
 
-@functools.lru_cache(maxsize=1024)
-def _cached_manifest_list(path: str, mtime_ns: int) -> tuple:
+def _decode_manifest(path: str) -> "ManifestColumns":
+    if path.endswith(".avro"):
+        # spec-layout manifest written by a real Iceberg implementation
+        # (interop path); self-decoding via embedded schema
+        from .avro_manifest import read_avro_manifest
+        return ManifestColumns.from_entries(read_avro_manifest(path))
+    from .manifest import read_manifest_columns     # resolved per call
+    return read_manifest_columns(path)
+
+
+def _read_manifest_list(path: str) -> tuple:
     if path.endswith(".avro"):
         from .avro_manifest import read_avro_manifest_list
         return tuple(read_avro_manifest_list(path))
@@ -263,8 +278,10 @@ def _cached_manifest_list(path: str, mtime_ns: int) -> tuple:
 
 def load_manifest_list(path: str) -> Sequence[ManifestFile]:
     """Manifest lists are immutable too (io/object_cache.rs:49 counterpart)."""
-    from .io import file_io_for
-    return _cached_manifest_list(path, file_io_for(path).mtime_ns(path))
+    return _manifest_cache.load(
+        "manifest_list", path, file_io_for(path).mtime_ns(path), None,
+        lambda: _read_manifest_list(path),
+        lambda v: max(1, len(v)) * _MANIFEST_LIST_ENTRY_BYTES)
 
 
 def _lite_file(memo: Dict[int, "DataFile"], src) -> "DataFile":
@@ -549,10 +566,8 @@ class TableScan:
                                      for m in surviving_dels]))
         dkey = tuple((m.manifest_path, _mt(m.manifest_path))
                      for m in surviving_dels)
-        with _delete_index_lock:
-            cached = _delete_index_cache.get(dkey)
-            if cached is not None:
-                _delete_index_cache.move_to_end(dkey)
+        dindex_key = ("delete_index", None, None, dkey)
+        cached = _manifest_cache.lookup(dindex_key)
 
         def prepare(cols: ManifestColumns) -> ManifestColumns:
             """Pool stage: manifest decode + the C-side metric/partition
@@ -653,11 +668,10 @@ class TableScan:
                 stray_data.extend(cols.entry(i)
                                   for i in delete_index.add_columns(cols))
             _persist(surviving_dels, del_cols)
-            with _delete_index_lock:
-                if dkey not in _delete_index_cache:
-                    _delete_index_cache[dkey] = (delete_index, stray_data)
-                    while len(_delete_index_cache) > 8:
-                        _delete_index_cache.popitem(last=False)
+            delete_index, stray_data = _manifest_cache.insert(
+                dindex_key, (delete_index, stray_data),
+                max(1, sum(c.n for c in del_cols))
+                * _DELETE_INDEX_ENTRY_BYTES)
         else:
             delete_index, stray_data = cached
         loaded = [f.result() for f in data_futs]
@@ -688,9 +702,8 @@ class TableScan:
             if len(ix) and not delete_index.empty:
                 if always_true and mfm is not None:
                     ix, sets = _match_memoized(
-                        delete_index, cols, ix,
-                        (mfm.manifest_path, mtime_of[mfm.manifest_path],
-                         dkey))
+                        delete_index, cols, ix, mfm.manifest_path,
+                        mtime_of[mfm.manifest_path], dkey)
                 else:
                     sets = delete_index.match_arrays(cols, ix)
             if overlay is not None:
@@ -1398,28 +1411,17 @@ def _part_json(part: Dict[str, Any]) -> Optional[str]:
 
 
 def _match_memoized(index: "_DeleteFileIndex", cols: ManifestColumns, ix,
-                    fkey: tuple) -> tuple:
+                    path: str, mtime_ns: int, dkey: tuple) -> tuple:
     """``index.match_arrays`` memoized per (manifest path, mtime,
     delete-manifest set): manifests are immutable, so a warm replan of a
     live MOR table reuses the matched sets outright. The key carries no
     predicate, so only AlwaysTrue plans (whose survivors are every live
-    data row) may use it. Returns ``(ix, sets)``."""
-    global _fast_match_cache_rows
-    with _delete_index_lock:
-        hit = _fast_match_cache.get(fkey)
-        if hit is not None:
-            _fast_match_cache.move_to_end(fkey)
-            return hit
-    sets = index.match_arrays(cols, ix)
-    with _delete_index_lock:
-        if fkey not in _fast_match_cache:
-            _fast_match_cache[fkey] = (ix, sets)
-            _fast_match_cache_rows += len(ix)
-            while (len(_fast_match_cache) > _FAST_MATCH_MAX_ENTRIES
-                   or _fast_match_cache_rows > _FAST_MATCH_MAX_ROWS):
-                _, (oix, _s) = _fast_match_cache.popitem(last=False)
-                _fast_match_cache_rows -= len(oix)
-    return ix, sets
+    data row) may use it. Returns ``(ix, sets)``, weighed as the survivor
+    array plus one 8-byte list slot per survivor."""
+    return _manifest_cache.load(
+        "delete_match", path, mtime_ns, dkey,
+        lambda: (ix, index.match_arrays(cols, ix)),
+        lambda v: v[0].nbytes + 8 * len(v[0]))
 
 
 def _concat_sets(a: Optional[list], b: Optional[list]) -> Optional[list]:
@@ -1846,28 +1848,21 @@ class _DeleteDFCache:
         return df
 
 
-# decoded deletion-vector positions, cached ACROSS scans (the per-scan
-# _DeleteDFCache can't help a second query on the same table): keyed by
-# (path, offset, length, mtime) like the manifest caches, so a rewritten
-# puffin file naturally invalidates. Values are numpy arrays — bounded by
-# the referenced file's row count, i.e. metadata-sized.
-@functools.lru_cache(maxsize=512)
 def _dv_positions(path: str, offset: int, length: int, mtime_ns: int):
+    """Decoded deletion-vector positions, cached ACROSS scans (the per-scan
+    _DeleteDFCache can't help a second query on the same table) under the
+    blob file's FileIO stamp, so a rewritten puffin file invalidates."""
     from .puffin import BlobMetadata, deserialize_dv, read_blob
-    blob = read_blob(path, BlobMetadata(
-        type="deletion-vector-v1", fields=[], snapshot_id=0,
-        sequence_number=0, offset=offset, length=length))
-    return deserialize_dv(blob)
+
+    def decode():
+        return deserialize_dv(read_blob(path, BlobMetadata(
+            type="deletion-vector-v1", fields=[], snapshot_id=0,
+            sequence_number=0, offset=offset, length=length)))
+    return _manifest_cache.load("dv", path, mtime_ns, (offset, length),
+                                decode, lambda v: v.nbytes)
 
 
 _DV_DRIVER_DECODE_BYTES = 1 << 20  # 1 MiB of blobs ≈ a few hundred k positions
-
-
-def _dv_mtime(path: str) -> int:
-    try:
-        return os.stat(path).st_mtime_ns
-    except OSError:
-        return 0
 
 
 def dv_pairs_df(spark: SparkSession, dv_files: List["DataFile"]) -> DataFrame:
@@ -1886,10 +1881,13 @@ def dv_pairs_df(spark: SparkSession, dv_files: List["DataFile"]) -> DataFrame:
         import numpy as np
         import pandas as pd
         refs, parts = [], []
+        # one stamp per puffin file: many DVs share one, and a remote
+        # FileIO pays a round-trip per stamp
+        stamps = {p: file_io_for(p).mtime_ns(p)
+                  for p in {d.file_path for d in dv_files}}
         for d in dv_files:
             pos = _dv_positions(d.file_path, d.content_offset,
-                                d.content_size_in_bytes,
-                                _dv_mtime(d.file_path))
+                                d.content_size_in_bytes, stamps[d.file_path])
             refs.extend([d.referenced_data_file] * len(pos))
             parts.append(pos)
         allpos = np.concatenate(parts) if parts else np.array([], dtype="int64")
@@ -1931,13 +1929,10 @@ def cached_parquet_relation(spark: SparkSession, files: Sequence[str],
     scan of the same file set. Iceberg data/delete files are immutable and
     never reused at the same path (UUID names), so the analyzed relation is
     content-addressed by its path list: memoize it, LRU-capped, exactly
-    like _pos_parquet_pairs_df's delete-relation cache. The cache lives on
-    the session wrapper (dies with the session) and holds lazy PLANS, never
-    results — every action still reads the parquet inputs."""
-    cache = getattr(spark, "_irs_parquet_rel_cache", None)
-    if cache is None:
-        cache = OrderedDict()
-        spark._irs_parquet_rel_cache = cache
+    like _pos_parquet_pairs_df's delete-relation cache. The memo lives on
+    the session (session_memo) and holds lazy PLANS, never results — every
+    action still reads the parquet inputs."""
+    memo = session_memo(spark, "parquet_relation")
     if read_schema is None:
         skey = None
     elif isinstance(read_schema, str):
@@ -1945,17 +1940,12 @@ def cached_parquet_relation(spark: SparkSession, files: Sequence[str],
     else:
         skey = read_schema.json()
     key = (tuple(files), skey)
-    got = cache.get(key)
-    if got is not None:
-        cache.move_to_end(key)
-        return got
-    reader = spark.read if read_schema is None \
-        else spark.read.schema(read_schema)
-    df = reader.parquet(*files)
-    cache[key] = df
-    while len(cache) > 256:
-        cache.popitem(last=False)
-    return df
+    got = memo.get(key)
+    if got is None:
+        reader = spark.read if read_schema is None \
+            else spark.read.schema(read_schema)
+        got = memo.put(key, reader.parquet(*files))
+    return got
 
 
 # spec-fixed layout of positional-delete parquet files (field ids
@@ -1971,17 +1961,15 @@ def _pos_parquet_pairs_df(spark: SparkSession,
     memoized per session keyed by (paths, mtimes): delete files are
     immutable once written (a rewrite changes mtime, like the manifest
     caches), so re-resolving the relation on every scan of the same table
-    only repeated driver-side source resolution (~60ms of py4j per scan)."""
-    cache = getattr(spark, "_irs_pos_delete_cache", None)
-    if cache is None:
-        cache = OrderedDict()
-        spark._irs_pos_delete_cache = cache
+    only repeated driver-side source resolution (~60ms of py4j per scan).
+    The LRU cap keeps a long session over many delete rewrites from pinning
+    every historical relation (each holds a JVM logical plan)."""
+    memo = session_memo(spark, "pos_delete_pairs")
     key = (tuple(paths),
            tuple(file_io_for(p).mtime_ns(p) for p in paths))
     localized = bool(paths) and not spark_native_path(paths[0])
-    got = cache.get(key)
+    got = memo.get(key)
     if got is not None:
-        cache.move_to_end(key)
         if localized:
             # the memoized relation reads local mirror copies, and the
             # mirror is LRU-capped: re-run localize_paths on every hit so
@@ -1993,15 +1981,10 @@ def _pos_parquet_pairs_df(spark: SparkSession,
     read_paths = list(paths)
     if localized:
         read_paths = localize_paths(read_paths)
-    df = (spark.read.schema(_POS_DELETE_READ_SCHEMA).parquet(*read_paths)
-          .select(F.col("file_path").alias("_del_file"),
-                  F.col("pos").alias("_del_pos")))
-    cache[key] = df
-    # LRU cap: a long session over many delete rewrites would otherwise
-    # pin every historical relation (each holds a JVM logical plan)
-    while len(cache) > 256:
-        cache.popitem(last=False)
-    return df
+    return memo.put(key, (
+        spark.read.schema(_POS_DELETE_READ_SCHEMA).parquet(*read_paths)
+        .select(F.col("file_path").alias("_del_file"),
+                F.col("pos").alias("_del_pos"))))
 
 
 def _pos_delete_df(spark: SparkSession, pos_deletes: List["DataFile"],

@@ -25,6 +25,7 @@ from typing import Dict, List, Optional
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans import expr as E
+from ..session import session_memo
 from .catalog import FileSystemCatalog, NoSuchNamespace, NoSuchTable
 from .table import Table
 from .views import ViewCatalog
@@ -1505,14 +1506,8 @@ def run_sql(spark: SparkSession, catalog: FileSystemCatalog, query: str,
             sf_key = tuple(sorted((t, str(p))
                            for t, p in scan_filters.items()))
             memo_key = (catalog.warehouse, query, sf_key)
-            memo = getattr(spark, "_irs_run_sql_memo", None)
-            if memo is None:
-                from collections import OrderedDict
-                memo = OrderedDict()
-                spark._irs_run_sql_memo = memo
-            hit = memo.get(memo_key)
+            hit = session_memo(spark, "run_sql").get(memo_key)
             if hit is not None and hit[0] == memo_fp:
-                memo.move_to_end(memo_key)
                 return hit[1]
 
     auto, per_ref = _auto_scan_filters_ex(query, catalog)
@@ -1622,11 +1617,7 @@ def run_sql(spark: SparkSession, catalog: FileSystemCatalog, query: str,
             rewritten = pat.sub(view_name, rewritten)
     out = spark.sql(rewritten)
     if memo_key is not None:
-        memo = spark._irs_run_sql_memo
-        memo[memo_key] = (memo_fp, out)
-        memo.move_to_end(memo_key)
-        while len(memo) > 64:
-            memo.popitem(last=False)
+        session_memo(spark, "run_sql").put(memo_key, (memo_fp, out))
     return out
 
 

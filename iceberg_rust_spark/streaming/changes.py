@@ -24,7 +24,7 @@ from typing import Dict, List, Optional, Set
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..session import local_df
+from ..session import local_df, session_memo
 from pyspark.sql import functions as F
 
 from ..sources.manifest import (CONTENT_DATA, CONTENT_EQUALITY_DELETES,
@@ -517,10 +517,7 @@ def _pos_delete_targets_batch(
     # of immutable parquet pos-delete files: memoize the collected rows per
     # session, exactly like the scan layer's delete caches (plan-time
     # metadata, bounded by _TARGET_LIST_CAP, keyed on the full assignment)
-    memo = getattr(spark, "_irs_pos_target_memo", None)
-    if memo is None:
-        memo = {}
-        spark._irs_pos_target_memo = memo
+    memo = session_memo(spark, "pos_targets")
     mkey = tuple(sorted(pq_assign))
     cached_rows = memo.get(mkey)
     if cached_rows is not None:
@@ -549,10 +546,7 @@ def _pos_delete_targets_batch(
         rows = (raw.join(F.broadcast(pmap), "_src")
                 .select("_ord", "file_path").distinct()
                 .limit(_TARGET_LIST_CAP + 1).collect())
-    memo[mkey] = [(r["_ord"], r["file_path"]) for r in rows]
-    if len(memo) > 256:
-        memo.clear()
-        memo[mkey] = [(r["_ord"], r["file_path"]) for r in rows]
+    memo.put(mkey, [(r["_ord"], r["file_path"]) for r in rows])
     dv_total = sum(len(s) for s in out.values() if s)
     if len(rows) + dv_total > _TARGET_LIST_CAP:
         for _p, o in pq_assign:

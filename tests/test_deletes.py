@@ -196,14 +196,56 @@ def test_dv_positions_lru_reused_across_scans(spark, warehouse):
     t = t.append(spark, df)
     t = t.delete_where(spark, E.col("g") == 3, mode="dv")
 
-    scan_mod._dv_positions.cache_clear()
+    scan_mod._manifest_cache.cache_clear()
+    misses0 = scan_mod._manifest_cache.stats("dv")["misses"]
     assert t.to_df(spark).count() == 150
-    info1 = scan_mod._dv_positions.cache_info()
-    assert info1.misses >= 1
+    info1 = scan_mod._manifest_cache.stats("dv")
+    assert info1["misses"] > misses0
     assert t.to_df(spark).count() == 150   # second scan: all hits
-    info2 = scan_mod._dv_positions.cache_info()
-    assert info2.misses == info1.misses
-    assert info2.hits > info1.hits
+    info2 = scan_mod._manifest_cache.stats("dv")
+    assert info2["misses"] == info1["misses"]
+    assert info2["hits"] > info1["hits"]
+
+
+def test_dv_positions_restamped_through_file_io(spark):
+    """DV blobs key on their FileIO stamp: a blob rewritten in place at a
+    registered-scheme path (same offset and length, new mtime) must serve
+    its new positions, not the cached old ones."""
+    from iceberg_rust_spark.sources import io as iomod
+    from iceberg_rust_spark.sources.manifest import (CONTENT_POSITION_DELETES,
+                                                     DataFile)
+    from iceberg_rust_spark.sources.puffin import serialize_dv
+    from iceberg_rust_spark.sources.scan import dv_pairs_df
+
+    store = {}
+
+    class StampIO(iomod.FileIO):
+        spark_native = False
+
+        def read_bytes(self, path, offset=None, length=None):
+            return store[path][0][offset:offset + length]
+
+        def mtime_ns(self, path):
+            return store[path][1]
+
+    path, ref = "dvstamp://b/dv.puffin", "dvstamp://b/data.parquet"
+    iomod.register_file_io("dvstamp", lambda p: StampIO())
+    try:
+        def positions(blob, mtime):
+            store[path] = (blob, mtime)
+            dv = DataFile(file_path=path, file_format="puffin",
+                          content=CONTENT_POSITION_DELETES,
+                          referenced_data_file=ref, content_offset=0,
+                          content_size_in_bytes=len(blob))
+            return sorted(r["_del_pos"]
+                          for r in dv_pairs_df(spark, [dv]).collect())
+
+        old, new = serialize_dv([1, 2]), serialize_dv([3, 4])
+        assert len(old) == len(new)
+        assert positions(old, 100) == [1, 2]
+        assert positions(new, 200) == [3, 4]
+    finally:
+        iomod.unregister_file_io("dvstamp")
 
 
 def test_deleted_metadata_column(spark, users_table):

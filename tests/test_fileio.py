@@ -289,8 +289,8 @@ def test_pos_delete_relation_cache_survives_mirror_eviction(
 
     monkeypatch.setattr(iomod, "IO_CACHE_ROOT", str(tmp_path / "mirror"))
     monkeypatch.setattr(iomod, "_SESSION_MIRROR_PATHS", set())
-    monkeypatch.setattr(spark, "_irs_pos_delete_cache", None,
-                        raising=False)
+    from iceberg_rust_spark.session import session_memo
+    session_memo(spark, "pos_delete_pairs").clear()
     iomod.register_file_io("tiny", lambda p: TinyIO())
     try:
         paths = list(store)

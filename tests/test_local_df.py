@@ -35,3 +35,10 @@ def test_local_df_parts(spark):
     df = local_df(spark, [(i,) for i in range(10)], "x long", parts=2)
     assert df.rdd.getNumPartitions() <= 2
     assert sorted(r.x for r in df.collect()) == list(range(10))
+
+
+def test_local_df_generator_rows(spark):
+    """A generator of rows is read once: every column keeps its values."""
+    rows = ((i, f"s{i}") for i in range(5))
+    df = local_df(spark, rows, "x long, s string")
+    assert _sorted(df.collect()) == [(i, f"s{i}") for i in range(5)]

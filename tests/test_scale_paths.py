@@ -211,40 +211,141 @@ def test_concurrent_plan_prunes_and_counts(warehouse):
     assert plan.skipped_manifests == 0
 
 
-def test_manifest_cache_is_entry_weighted():
-    """Driver memory during planning is bounded by the cache's ENTRY
-    budget, not by manifest count (io/object_cache.rs:22-60 counterpart)."""
-    from iceberg_rust_spark.sources.scan import _ManifestCache
+class _Cols:
+    """Stand-in for a decoded manifest: the cache reads only ``n``."""
+
+    def __init__(self, n):
+        self.n = n
+
+
+def _stub_manifest_decoder(monkeypatch, n=100):
+    """Route the manifest kind's decode through a stub of ``n`` entries;
+    returns the list of decoded paths."""
+    from iceberg_rust_spark.sources import manifest as man_mod
     calls = []
 
-    class _Probe(_ManifestCache):
-        def get(self, path, mtime_ns):  # route decode through a stub
-            key = (path, mtime_ns)
-            with self._lock:
-                got = self._data.get(key)
-                if got is not None:
-                    self._data.move_to_end(key)
-                    return got
-            calls.append(path)
-            val = tuple(range(100))  # "100 entries"
-            with self._lock:
-                if key not in self._data:
-                    self._data[key] = val
-                    self._weight += len(val)
-                    while (self._weight > self.max_entries
-                           and len(self._data) > 1):
-                        _, old = self._data.popitem(last=False)
-                        self._weight -= len(old)
-            return val
+    def decode(path):
+        calls.append(path)
+        return _Cols(n)
+    monkeypatch.delenv("ICEBERG_SPARK_MANIFEST_DISK_CACHE", raising=False)
+    monkeypatch.setattr(man_mod, "read_manifest_columns", decode)
+    return calls
 
-    c = _Probe(max_entries=250)
-    for i in range(10):
-        c.get(f"m{i}", 0)
-    assert c._weight <= 250 and len(c._data) == 2
-    c.get("m9", 0)                      # LRU hit, no decode
-    assert calls.count("m9") == 1
-    c.get("m0", 0)                      # evicted long ago -> re-decode
-    assert calls.count("m0") == 2
+
+def test_object_cache_evicts_bytes_in_lru_order_across_kinds(monkeypatch):
+    """One byte budget over every kind: the least recently used values go
+    first, whatever their kind."""
+    from iceberg_rust_spark.sources.scan import (_MANIFEST_ENTRY_BYTES,
+                                                 _ManifestCache)
+    calls = _stub_manifest_decoder(monkeypatch)
+    m = 100 * _MANIFEST_ENTRY_BYTES
+    c = _ManifestCache(budget_bytes=2 * m + 1000)
+    c.get("m0", 1)
+    c.load("dv", "d0", 1, (0, 8), lambda: "dv0", lambda v: 1000)
+    c.get("m1", 1)
+    assert c.bytes == 2 * m + 1000
+    c.get("m0", 1)                      # m0 is now the most recent
+    c.load("dv", "d1", 1, (0, 8), lambda: "dv1", lambda v: 1000)
+    # over budget by the new 1000 B: the oldest value (dv d0) goes
+    assert c.stats("dv") == {"hits": 0, "misses": 2, "evictions": 1,
+                             "bytes": 1000}
+    c.get("m2", 1)                      # LRU order m1, m0, d1: m1 goes
+    assert c.stats("manifest")["evictions"] == 1
+    assert c.bytes == 2 * m + 1000
+    c.get("m0", 1)                      # still held: no decode
+    c.get("m1", 1)                      # evicted: decodes again, and the
+    assert c.stats("dv")["evictions"] == 2      # LRU d1, then m2, make room
+    assert c.stats("manifest")["evictions"] == 2
+    assert c.bytes == 2 * m
+    assert calls == ["m0", "m1", "m2", "m1"]
+
+
+def test_object_cache_hit_returns_same_object(monkeypatch):
+    from iceberg_rust_spark.sources.scan import _ManifestCache
+    _stub_manifest_decoder(monkeypatch)
+    c = _ManifestCache(budget_bytes=1 << 30)
+    assert c.get("m", 5) is c.get("m", 5)
+    assert c.get("m", 6) is not c.get("m", 5)      # a new stamp misses
+    v = c.load("manifest_list", "l", 5, None, lambda: ("a",), len)
+    assert c.load("manifest_list", "l", 5, None, lambda: ("b",), len) is v
+
+
+def test_object_cache_clear_empties_every_kind(monkeypatch):
+    from iceberg_rust_spark.sources.scan import _ManifestCache
+    calls = _stub_manifest_decoder(monkeypatch)
+    c = _ManifestCache(budget_bytes=1 << 30)
+    kinds = ("manifest_list", "delete_index", "delete_match", "dv")
+    c.get("m", 1)
+    for k in kinds:
+        c.load(k, "p", 1, None, lambda: [k], lambda v: 10)
+    c.cache_clear()
+    assert c.bytes == 0
+    for k in ("manifest",) + kinds:
+        assert c.stats(k)["bytes"] == 0
+        assert c.lookup((k, "p" if k != "manifest" else "m", 1, None)) \
+            is None
+    c.get("m", 1)
+    assert calls == ["m", "m"]
+
+
+def test_object_cache_counters(monkeypatch):
+    from iceberg_rust_spark.sources.scan import _ManifestCache
+    _stub_manifest_decoder(monkeypatch, n=0)
+    c = _ManifestCache(budget_bytes=1 << 30)
+    for _ in range(3):
+        c.load("dv", "d", 1, (0, 4), lambda: "x", lambda v: 7)
+    c.get("m", 1)
+    c.get("m", 1)
+    assert c.stats("dv") == {"hits": 2, "misses": 1, "evictions": 0,
+                             "bytes": 7}
+    st = c.stats("manifest")
+    assert (st["hits"], st["misses"], st["evictions"]) == (1, 1, 0)
+    assert c.bytes == 7 + st["bytes"] and st["bytes"] > 0  # empty: weight 1
+    assert c.stats("delete_index") == {"hits": 0, "misses": 0,
+                                       "evictions": 0, "bytes": 0}
+    c.cache_clear()                     # counters keep counting
+    assert c.stats("dv")["hits"] == 2
+
+
+def test_object_cache_concurrent_misses_mixed_kinds(monkeypatch):
+    """8 threads miss on the same keys of mixed kinds at once: each key
+    loads possibly more than once, but the first insert wins — every
+    thread gets the identical object and the bytes held are the sum of
+    the held weights, counted once."""
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from iceberg_rust_spark.sources.scan import (_MANIFEST_ENTRY_BYTES,
+                                                 _ManifestCache)
+    _stub_manifest_decoder(monkeypatch, n=3)
+    c = _ManifestCache(budget_bytes=1 << 30)
+    barrier = threading.Barrier(8, timeout=30)
+    kinds = ("manifest_list", "delete_index", "delete_match", "dv")
+
+    def one(_):
+        barrier.wait()
+        got = [c.get(f"m{i}", 1) for i in range(4)]
+        for k in kinds:
+            for i in range(4):
+                got.append(c.load(k, f"p{i}", 1, None,
+                                  lambda: object(), lambda v: 10))
+        return got
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)         # switch threads inside the locks
+    try:
+        with ThreadPoolExecutor(max_workers=8) as ex:
+            results = list(ex.map(one, range(8), timeout=60))
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(results) == 8
+    for r in results[1:]:
+        assert all(a is b for a, b in zip(r, results[0]))
+    assert c.bytes == 4 * 3 * _MANIFEST_ENTRY_BYTES + len(kinds) * 4 * 10
+    for k in kinds:
+        st = c.stats(k)
+        assert st["bytes"] == 40 and st["hits"] + st["misses"] == 32
 
 
 def test_concurrent_plans_share_cache_safely(warehouse):
@@ -860,16 +961,19 @@ def test_fast_plan_with_deletes_count_rows(warehouse):
 
 def test_fast_plan_with_deletes_warm_replan_uses_memo(warehouse):
     """A warm replan of the same MOR table must hit the bulk-match memo
-    (_fast_match_cache) and produce the identical plan."""
-    from iceberg_rust_spark.sources.scan import (_fast_match_cache,
-                                                 _manifest_cache)
+    (the object cache's ``delete_match`` kind) and produce the identical
+    plan."""
+    from iceberg_rust_spark.sources.scan import _manifest_cache
     _manifest_cache.cache_clear()
     t = _fab_mor_table(warehouse, n_manifests=2, files_per_manifest=20)
     p1 = t.scan().plan_files()
-    n_memo = len(_fast_match_cache)
-    assert n_memo >= 1
+    st1 = _manifest_cache.stats("delete_match")
+    assert st1["bytes"] > 0
     p2 = t.scan().plan_files()
-    assert len(_fast_match_cache) == n_memo     # pure hits, no growth
+    st2 = _manifest_cache.stats("delete_match")
+    assert st2["misses"] == st1["misses"]       # pure hits, no insert
+    assert st2["hits"] > st1["hits"]
+    assert st2["bytes"] == st1["bytes"]
     assert _attach_sig(p1) == _attach_sig(p2)
 
 

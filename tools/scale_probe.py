@@ -563,8 +563,8 @@ def main() -> None:
             "is cleared per shape, so cold no longer inherits the previous",
             "shape's decodes — walls are honestly cold); warm is the",
             "steady state of repeated planning on a live table",
-            "(entry-weighted manifest cache, default 512k-entry budget",
-            "~ 1.2 GB RSS ceiling, ICEBERG_SPARK_MANIFEST_CACHE_ENTRIES).",
+            "(one byte-weighted object cache, budget 1/8 of physical",
+            "memory, ~2.4 KB weighed per cached manifest entry).",
             "disk-warm is a RESTARTED driver planning through the opt-in",
             "persistent cache (ICEBERG_SPARK_MANIFEST_DISK_CACHE): decode",
             "served from pickled columnar views, everything else cold.",
