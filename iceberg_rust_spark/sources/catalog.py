@@ -15,25 +15,78 @@ which Transaction retries with refresh-and-reapply
 from __future__ import annotations
 
 import os
-import re
+import uuid
 from typing import List, Optional, Tuple
 
-from .io import file_io_for, posix_join
+from .io import FileIO, file_io_for, posix_join
 from .metadata import TableMetadata
-
-VERSION_RE = re.compile(r"^v(\d+)\.metadata\.json$")
 
 
 def ptr_version(ptr: str) -> int:
     """Version number from a metadata-file pointer. Accepts the reference's
-    `00001-<uuid>.metadata.json`, our `v1-<uuid>...`, and the filesystem
-    catalog's `v1.metadata.json` spellings."""
+    `00001-<uuid>.metadata.json`, the older `v1-<uuid>...`, and the
+    filesystem catalog's `v1.metadata.json` spellings."""
     import re
     m = re.search(r"/(?:v)?(\d+)(?:-[0-9a-f-]{36})?\.metadata\.json(?:\.gz)?$",
                   ptr)
     if m is None:
         raise NoSuchTable(f"unparseable metadata pointer {ptr}")
     return int(m.group(1))
+
+
+# -- the metadata-file rule every catalog shares -------------------------
+# A catalog writes the next metadata file under a name from
+# new_metadata_location (FileSystemCatalog: its fixed v{N} name, whose
+# exclusive create is its CAS), encodes it with metadata_bytes and reads it
+# back with read_metadata; only the pointer swap is catalog-specific.
+
+def metadata_suffix(md: TableMetadata) -> str:
+    """`.metadata.json`, plus `.gz` under
+    write.metadata.compression-codec=gzip."""
+    codec = md.properties.get("write.metadata.compression-codec", "none")
+    return ".metadata.json.gz" if codec.lower() == "gzip" else ".metadata.json"
+
+
+def new_metadata_location(directory: str, version: int,
+                          md: TableMetadata) -> str:
+    """Reference naming (metadata_location.rs:127):
+    `{version:05}-{uuid}.metadata.json[.gz]`, unique per attempt, so a
+    losing committer never overwrites the winner's file — the pointer swap
+    decides which file becomes current."""
+    return posix_join(directory,
+                      f"{version:05d}-{uuid.uuid4()}{metadata_suffix(md)}")
+
+
+def metadata_bytes(io: FileIO, md: TableMetadata, path: str,
+                   previous: Optional[str] = None) -> bytes:
+    """The bytes of ``md`` to publish at ``path``. When the superseded file
+    ``previous`` exists it joins the spec metadata-log, stamped with its
+    mtime and capped by write.metadata.previous-versions-max (default
+    100). Gzip when ``path`` ends in `.gz`. Records ``path`` on ``md``."""
+    if previous is not None and io.is_file(previous):
+        md.metadata_log.append({
+            "timestamp-ms": io.mtime_ns(previous) // 1_000_000,
+            "metadata-file": previous})
+        keep = int(md.properties.get(
+            "write.metadata.previous-versions-max", "100"))
+        md.metadata_log = md.metadata_log[-keep:]
+    data = md.to_json().encode()
+    if path.endswith(".gz"):
+        import gzip
+        data = gzip.compress(data, mtime=0)    # deterministic bytes
+    md.metadata_file_location = path
+    return data
+
+
+def read_metadata(io: FileIO, location: str,
+                  versioned: bool = True) -> Tuple[TableMetadata, int]:
+    """The metadata file at ``location`` (gzip detected by its magic bytes,
+    whatever the name) with ``location`` recorded on it, and its version
+    from ``ptr_version``. ``versioned=False`` accepts any file name and
+    returns version -1 (a static table or a registration source)."""
+    md = TableMetadata.from_json(io.read_text(location))
+    md.metadata_file_location = location
+    return md, (ptr_version(location) if versioned else -1)
 
 
 class CommitConflict(Exception):
@@ -179,7 +232,7 @@ class FileSystemCatalog:
         plain = posix_join(md_dir, f"v{version}.metadata.json")
         # write.metadata.compression-codec=gzip tables name files .json.gz
         path = plain if self.io.is_file(plain) else plain + ".gz"
-        return TableMetadata.from_json(self.io.read_text(path)), version
+        return read_metadata(self.io, path)
 
     def drop_table(self, identifier: str, purge: bool = True) -> None:
         tdir = self._table_dir(identifier)
@@ -204,40 +257,29 @@ class FileSystemCatalog:
         src_md = self._metadata_dir(src)
         dst_md = self._metadata_dir(dst)
         self.io.makedirs(dst_md)
-        md, version = self.load_table(src)
+        md, _ = self.load_table(src)
         for f in self.io.list_dir(src_md):
             if (f.endswith(".metadata.json") or f.endswith(".metadata.json.gz")
                     or f == "version-hint.text"):
                 self.io.rename(posix_join(src_md, f), posix_join(dst_md, f))
         # metadata-log entries pointed at the moved version files — re-anchor
+        # them in the moved current file, keeping its name and codec
         for entry in md.metadata_log:
             entry["metadata-file"] = entry["metadata-file"].replace(
                 src_md, dst_md, 1)
-        self.io.write_text(posix_join(dst_md, f"v{version}.metadata.json"),
-                           md.to_json())
+        current = md.metadata_file_location.replace(src_md, dst_md, 1)
+        self.io.write_bytes(current, metadata_bytes(self.io, md, current))
 
     def commit_table(self, identifier: str, base_version: int,
                      metadata: TableMetadata) -> int:
         """CAS commit: succeed only if base_version is still current."""
         new_version = base_version + 1
         md_dir = self._metadata_dir(identifier)
-        target = posix_join(md_dir, self._md_name(new_version, metadata))
-        # spec metadata-log: record the superseded metadata file, capped by
-        # write.metadata.previous-versions-max (default 100)
+        target = self._md_path(md_dir, new_version, metadata)
         prev = posix_join(md_dir, f"v{base_version}.metadata.json")
         if not self.io.is_file(prev):
             prev = prev + ".gz"
-        if self.io.is_file(prev):
-            metadata.metadata_log.append({
-                "timestamp-ms": self.io.mtime_ns(prev) // 1_000_000,
-                "metadata-file": prev})
-            keep = int(metadata.properties.get(
-                "write.metadata.previous-versions-max", "100"))
-            metadata.metadata_log = metadata.metadata_log[-keep:]
-        payload = metadata.to_json().encode()
-        if target.endswith(".gz"):
-            import gzip
-            payload = gzip.compress(payload, mtime=0)
+        payload = metadata_bytes(self.io, metadata, target, prev)
         try:
             self.io.create_exclusive(target, payload)
         except FileExistsError:
@@ -255,25 +297,23 @@ class FileSystemCatalog:
         ICEBERG LOCATION`` factory (table_provider_factory.rs:100-155)."""
         if self.table_exists(identifier):
             raise TableAlreadyExists(identifier)
-        from .io import file_io_for
-        md = TableMetadata.from_json(
-            file_io_for(metadata_location).read_text(metadata_location))
+        md, _ = read_metadata(file_io_for(metadata_location),
+                              metadata_location, versioned=False)
         self.io.makedirs(self._metadata_dir(identifier))
         self._write_version(identifier, 1, md)
         return md
 
     # -- helpers -----------------------------------------------------------
     @staticmethod
-    def _md_name(version: int, metadata: TableMetadata) -> str:
-        codec = metadata.properties.get(
-            "write.metadata.compression-codec", "none").lower()
-        suffix = ".gz" if codec == "gzip" else ""
-        return f"v{version}.metadata.json{suffix}"
+    def _md_path(md_dir: str, version: int, metadata: TableMetadata) -> str:
+        # a fixed v{N} name, not new_metadata_location's unique one: the
+        # exclusive create of this name is the commit's CAS
+        return posix_join(md_dir, f"v{version}{metadata_suffix(metadata)}")
 
     def _write_version(self, identifier: str, version: int, metadata: TableMetadata) -> None:
         md_dir = self._metadata_dir(identifier)
-        self.io.write_text(posix_join(md_dir, self._md_name(version, metadata)),
-                           metadata.to_json())
+        path = self._md_path(md_dir, version, metadata)
+        self.io.write_bytes(path, metadata_bytes(self.io, metadata, path))
         self._write_hint(md_dir, version)
 
     def _write_hint(self, md_dir: str, version: int) -> None:

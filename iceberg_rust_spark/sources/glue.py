@@ -22,12 +22,12 @@ from __future__ import annotations
 import http.client
 import json
 import urllib.parse
-import uuid
 from typing import Dict, List, Optional, Tuple
 
 from . import sigv4
 from .catalog import (CommitConflict, NamespaceNotEmpty, NoSuchNamespace,
-                      NoSuchTable, TableAlreadyExists)
+                      NoSuchTable, TableAlreadyExists, metadata_bytes,
+                      new_metadata_location, ptr_version, read_metadata)
 from .hms import hive_type  # same type-string rules as the Glue builder
 from .io import file_io_for, posix_join
 from .metadata import TableMetadata
@@ -262,23 +262,6 @@ class GlueCatalog:
         ns, name = self._split(identifier)
         return posix_join(self.warehouse, ns, name)
 
-    @staticmethod
-    def _md_file_name(version: int, metadata=None) -> str:
-        # v{N}-{uuid} — unique per attempt so losers never clobber winners
-        # (same scheme as SqlCatalog / reference metadata_location.rs);
-        # .gz under write.metadata.compression-codec=gzip
-        suffix = ""
-        if metadata is not None and metadata.properties.get(
-                "write.metadata.compression-codec",
-                "none").lower() == "gzip":
-            suffix = ".gz"
-        return f"v{version}-{uuid.uuid4()}.metadata.json{suffix}"
-
-    @staticmethod
-    def _ptr_version(ptr: str) -> int:
-        from .catalog import ptr_version
-        return ptr_version(ptr)
-
     def create_table(self, identifier: str,
                      metadata: TableMetadata) -> TableMetadata:
         ns, name = self._split(identifier)
@@ -289,8 +272,8 @@ class GlueCatalog:
         md_dir = posix_join(location, "metadata")
         self.io.makedirs(md_dir)
         self.io.makedirs(posix_join(location, "data"))
-        target = posix_join(md_dir, self._md_file_name(1, metadata))
-        self.io.write_text(target, metadata.to_json())
+        target = new_metadata_location(md_dir, 1, metadata)
+        self.io.write_bytes(target, metadata_bytes(self.io, metadata, target))
         try:
             self._call("CreateTable",
                        {"DatabaseName": ns,
@@ -306,8 +289,7 @@ class GlueCatalog:
         ptr = (tbl.get("Parameters") or {}).get(METADATA_LOCATION)
         if not ptr:
             raise NoSuchTable(f"{identifier}: no {METADATA_LOCATION}")
-        md = TableMetadata.from_json(self.io.read_text(ptr))
-        return md, self._ptr_version(ptr)
+        return read_metadata(self.io, ptr)
 
     def commit_table(self, identifier: str, base_version: int,
                      metadata: TableMetadata) -> int:
@@ -316,20 +298,14 @@ class GlueCatalog:
         params = tbl.get("Parameters") or {}
         current = params.get(METADATA_LOCATION)
         version_id = tbl.get("VersionId")
-        if current is None or self._ptr_version(current) != base_version:
+        if current is None or ptr_version(current) != base_version:
             raise CommitConflict(
                 f"{identifier}: base v{base_version} is no longer current")
         new_version = base_version + 1
-        target = posix_join(current.rsplit("/", 1)[0],
-                            self._md_file_name(new_version, metadata))
-        if self.io.is_file(current):
-            metadata.metadata_log.append({
-                "timestamp-ms": self.io.mtime_ns(current) // 1_000_000,
-                "metadata-file": current})
-            keep = int(metadata.properties.get(
-                "write.metadata.previous-versions-max", "100"))
-            metadata.metadata_log = metadata.metadata_log[-keep:]
-        self.io.write_text(target, metadata.to_json())
+        target = new_metadata_location(current.rsplit("/", 1)[0],
+                                       new_version, metadata)
+        self.io.write_bytes(
+            target, metadata_bytes(self.io, metadata, target, current))
         body = {"DatabaseName": ns, "SkipArchive": True,
                 "TableInput": _table_input(name, metadata, target,
                                            prev_metadata_location=current)}
@@ -353,7 +329,7 @@ class GlueCatalog:
         ns, name = self._split(identifier)
         if self.table_exists(identifier):
             raise TableAlreadyExists(identifier)
-        md = TableMetadata.from_json(self.io.read_text(metadata_location))
+        md, _ = read_metadata(self.io, metadata_location)
         try:
             self._call("CreateTable",
                        {"DatabaseName": ns,

@@ -184,6 +184,10 @@ class TableMetadata:
     encryption_keys: List[Dict[str, Any]] = dc_field(default_factory=list)
     # v3 row lineage (table_metadata.rs:140): next first-row-id to assign
     next_row_id: int = 0
+    # the file this metadata was read from or last encoded to (Java's
+    # TableMetadata.metadataFileLocation()); transient, never serialized
+    metadata_file_location: Optional[str] = dc_field(default=None,
+                                                     compare=False)
 
     # -- lookups -----------------------------------------------------------
     def schema(self, schema_id: Optional[int] = None) -> Schema:

@@ -31,7 +31,8 @@ import threading
 from typing import Any, Callable, Dict, List, Optional, Tuple
 
 from .catalog import (CommitConflict, NamespaceNotEmpty, NoSuchNamespace,
-                      NoSuchTable, TableAlreadyExists)
+                      NoSuchTable, TableAlreadyExists, metadata_bytes,
+                      new_metadata_location, ptr_version, read_metadata)
 from .io import file_io_for, posix_join
 from .metadata import TableMetadata
 from .updates import RequirementFailed, apply_updates, check_requirement
@@ -41,10 +42,10 @@ Transport = Callable[[str, str, Optional[dict]], Tuple[int, dict]]
 
 # ---------------------------------------------------------------------------
 # MemoryCatalog (catalog/memory/src/catalog.rs): identifier -> metadata in a
-# mutex-guarded map; metadata JSON is still written through FileIO at the
-# table location so StaticTable / metadata-log reads work, but the COMMIT
-# point (the CAS) is the in-memory version counter, like the reference's
-# HashMap<TableIdent, String> behind a Mutex.
+# mutex-guarded map; metadata files are still written through FileIO, next
+# to the current pointer, so StaticTable / metadata-log reads work, but the
+# COMMIT point (the CAS) is the in-memory pointer's version, like the
+# reference's HashMap<TableIdent, String> behind a Mutex.
 # ---------------------------------------------------------------------------
 
 class MemoryCatalog:
@@ -55,13 +56,12 @@ class MemoryCatalog:
         self.io = file_io_for(self.warehouse)
         self.io.makedirs(self.warehouse)
         self._lock = threading.Lock()
-        # identifier -> (metadata_json, version); JSON (not the object) is
-        # stored so each load round-trips serialization like a real catalog
-        self._tables: Dict[str, Tuple[str, int]] = {}
+        # identifier -> (metadata_json, metadata file location); JSON (not
+        # the object) is stored so each load round-trips serialization like
+        # a real catalog
+        self._tables: Dict[str, Tuple[str, str]] = {}
         self._namespaces: set = set()
         self._ns_props: Dict[str, dict] = {}
-        # externally-registered tables: (ident, version) -> metadata path
-        self._registered: Dict[Tuple[str, int], str] = {}
 
     # -- namespaces --------------------------------------------------------
     def create_namespace(self, namespace: str,
@@ -128,18 +128,23 @@ class MemoryCatalog:
             if identifier in self._tables:
                 raise TableAlreadyExists(identifier)
             metadata.location = self._table_dir(identifier)
+            md_dir = posix_join(metadata.location, "metadata")
             self.io.makedirs(posix_join(metadata.location, "data"))
-            self.io.makedirs(posix_join(metadata.location, "metadata"))
-            self._write_metadata_file(identifier, 1, metadata)
-            self._tables[identifier] = (metadata.to_json(), 1)
+            self.io.makedirs(md_dir)
+            target = new_metadata_location(md_dir, 1, metadata)
+            self.io.write_bytes(target,
+                                metadata_bytes(self.io, metadata, target))
+            self._tables[identifier] = (metadata.to_json(), target)
             return metadata
 
     def load_table(self, identifier: str) -> Tuple[TableMetadata, int]:
         with self._lock:
             if identifier not in self._tables:
                 raise NoSuchTable(identifier)
-            text, version = self._tables[identifier]
-        return TableMetadata.from_json(text), version
+            text, location = self._tables[identifier]
+        md = TableMetadata.from_json(text)
+        md.metadata_file_location = location
+        return md, ptr_version(location)
 
     def drop_table(self, identifier: str, purge: bool = True) -> None:
         with self._lock:
@@ -164,47 +169,28 @@ class MemoryCatalog:
             if identifier not in self._tables:
                 raise NoSuchTable(identifier)
             _, current = self._tables[identifier]
-            if current != base_version:
+            if ptr_version(current) != base_version:
                 raise CommitConflict(
-                    f"{identifier}: v{current} committed since v{base_version}")
+                    f"{identifier}: {current} committed since v{base_version}")
             new_version = base_version + 1
-            prev_path = posix_join(self.metadata_location(identifier, base_version))
-            metadata.metadata_log.append({
-                "timestamp-ms": metadata.last_updated_ms,
-                "metadata-file": prev_path})
-            keep = int(metadata.properties.get(
-                "write.metadata.previous-versions-max", "100"))
-            metadata.metadata_log = metadata.metadata_log[-keep:]
-            self._write_metadata_file(identifier, new_version, metadata)
-            self._tables[identifier] = (metadata.to_json(), new_version)
+            target = new_metadata_location(current.rsplit("/", 1)[0],
+                                           new_version, metadata)
+            self.io.write_bytes(
+                target, metadata_bytes(self.io, metadata, target, current))
+            self._tables[identifier] = (metadata.to_json(), target)
             return new_version
 
-    # -- helpers -----------------------------------------------------------
     def register_table(self, identifier: str,
                        metadata_location: str) -> TableMetadata:
         """Catalog::register_table (REST spec POST .../register): adopt
         EXISTING metadata by path; nothing is copied or rewritten."""
-        from .catalog import ptr_version
-        text = file_io_for(metadata_location).read_text(metadata_location)
-        version = ptr_version(metadata_location)
+        md, _ = read_metadata(file_io_for(metadata_location),
+                              metadata_location)
         with self._lock:
             if identifier in self._tables:
                 raise TableAlreadyExists(identifier)
-            self._tables[identifier] = (text, version)
-            self._registered[(identifier, version)] = metadata_location
-        return TableMetadata.from_json(text)
-
-    def metadata_location(self, identifier: str, version: int) -> str:
-        reg = self._registered.get((identifier, version))
-        if reg is not None:
-            return reg
-        return posix_join(self._table_dir(identifier), "metadata",
-                          f"v{version}.metadata.json")
-
-    def _write_metadata_file(self, identifier: str, version: int,
-                             metadata: TableMetadata) -> None:
-        self.io.write_text(self.metadata_location(identifier, version),
-                           metadata.to_json())
+            self._tables[identifier] = (md.to_json(), metadata_location)
+        return md
 
 
 # ---------------------------------------------------------------------------
@@ -474,9 +460,7 @@ class RestCatalogServer:
                 ident = f"{ns}.{body['name']}"
                 md = self.backing.register_table(
                     ident, body["metadata-location"])
-                return 200, {"metadata-location": body["metadata-location"],
-                             "metadata": json.loads(md.to_json()),
-                             "config": {}}
+                return 200, self._load_result(md)
             if len(parts) == 4 and parts[3] == "tables":
                 if method == "POST":
                     return self._create_table(ns, body)
@@ -502,23 +486,20 @@ class RestCatalogServer:
         return 404, {"error": {"message": f"no route {method} /{path}",
                                "type": "NotFound"}}
 
-    def _load_result(self, ident: str, md: TableMetadata, version: int) -> dict:
-        loc = (self.backing.metadata_location(ident, version)
-               if hasattr(self.backing, "metadata_location")
-               else posix_join(md.location, "metadata",
-                               f"v{version}.metadata.json"))
-        return {"metadata-location": loc,
+    @staticmethod
+    def _load_result(md: TableMetadata) -> dict:
+        return {"metadata-location": md.metadata_file_location,
                 "metadata": json.loads(md.to_json()), "config": {}}
 
     def _load_table(self, ident: str) -> Tuple[int, dict]:
-        md, version = self.backing.load_table(ident)
-        return 200, self._load_result(ident, md, version)
+        md, _ = self.backing.load_table(ident)
+        return 200, self._load_result(md)
 
     def _create_table(self, ns: str, body: dict) -> Tuple[int, dict]:
         md = TableMetadata.from_json(json.dumps(body["metadata"]))
         ident = f"{ns}.{body['name']}"
         md = self.backing.create_table(ident, md)
-        return 200, self._load_result(ident, md, 1)
+        return 200, self._load_result(md)
 
     def _commit_table(self, ident: str, body: dict) -> Tuple[int, dict]:
         md, version = self.backing.load_table(ident)
@@ -526,8 +507,8 @@ class RestCatalogServer:
             check_requirement(md, req)
         new_md = apply_updates_ext(md, body.get("updates", []))
         new_md.last_updated_ms = max(new_md.last_updated_ms, md.last_updated_ms)
-        new_version = self.backing.commit_table(ident, version, new_md)
-        return 200, self._load_result(ident, new_md, new_version)
+        self.backing.commit_table(ident, version, new_md)
+        return 200, self._load_result(new_md)
 
 
 def apply_updates_ext(md: TableMetadata,
@@ -695,17 +676,12 @@ class RestCatalog:
         _, body = self._call(
             "POST", self._p(f"namespaces/{ns}/tables"),
             {"name": name, "metadata": json.loads(metadata.to_json())})
-        md = TableMetadata.from_json(json.dumps(body["metadata"]))
-        self._bases[(identifier, 1)] = copy.deepcopy(md)
-        return md
+        return self._adopt(identifier, body)[0]
 
     def load_table(self, identifier: str) -> Tuple[TableMetadata, int]:
         ns, name = identifier.rsplit(".", 1)
         _, body = self._call("GET", self._p(f"namespaces/{ns}/tables/{name}"), None)
-        md = TableMetadata.from_json(json.dumps(body["metadata"]))
-        version = _version_of(body["metadata-location"])
-        self._bases[(identifier, version)] = copy.deepcopy(md)
-        return md, version
+        return self._adopt(identifier, body)
 
     def register_table(self, identifier: str,
                        metadata_location: str) -> TableMetadata:
@@ -715,10 +691,7 @@ class RestCatalog:
         _, body = self._call(
             "POST", self._p(f"namespaces/{ns}/register"),
             {"name": name, "metadata-location": metadata_location})
-        md = TableMetadata.from_json(json.dumps(body["metadata"]))
-        version = _version_of(body["metadata-location"])
-        self._bases[(identifier, version)] = copy.deepcopy(md)
-        return md
+        return self._adopt(identifier, body)[0]
 
     def drop_table(self, identifier: str, purge: bool = True) -> None:
         ns, name = identifier.rsplit(".", 1)
@@ -750,10 +723,19 @@ class RestCatalog:
         if status >= 300:
             raise RuntimeError(f"commit failed {status}: {body}")
         self._bases.pop((identifier, base_version), None)
-        new_version = _version_of(body["metadata-location"])
-        self._bases[(identifier, new_version)] = TableMetadata.from_json(
-            json.dumps(body["metadata"]))
+        new, new_version = self._adopt(identifier, body)
+        metadata.metadata_file_location = new.metadata_file_location
         return new_version
+
+    def _adopt(self, identifier: str,
+               body: dict) -> Tuple[TableMetadata, int]:
+        """The response's metadata and version, kept as the base the next
+        commit diffs against."""
+        md = TableMetadata.from_json(json.dumps(body["metadata"]))
+        md.metadata_file_location = body["metadata-location"]
+        version = ptr_version(md.metadata_file_location)
+        self._bases[(identifier, version)] = copy.deepcopy(md)
+        return md, version
 
     # -- plumbing ----------------------------------------------------------
     def _call(self, method: str, path: str,
@@ -823,12 +805,6 @@ class RestCatalog:
                 f"token fetch failed ({status}): "
                 f"{resp.get('error', resp)}")
         self._token = resp["access_token"]
-
-
-def _version_of(metadata_location: str) -> int:
-    # accepts v1 / 00001-<uuid> / .gz spellings (shared parser)
-    from .catalog import ptr_version
-    return ptr_version(metadata_location)
 
 
 def _post_form(url: str, form: Dict[str, str]) -> Tuple[int, dict]:

@@ -22,12 +22,12 @@ from __future__ import annotations
 import http.client
 import json
 import urllib.parse
-import uuid
 from typing import Dict, List, Optional, Tuple
 
 from . import sigv4
 from .catalog import (CommitConflict, NamespaceNotEmpty, NoSuchNamespace,
-                      NoSuchTable, TableAlreadyExists)
+                      NoSuchTable, TableAlreadyExists, metadata_bytes,
+                      new_metadata_location, ptr_version, read_metadata)
 from .io import file_io_for, posix_join
 from .metadata import TableMetadata
 
@@ -205,23 +205,6 @@ class S3TablesCatalog:
         except NoSuchTable:
             return False
 
-    @staticmethod
-    def _md_file_name(version: int, metadata=None) -> str:
-        # v{N}-{uuid} — unique per attempt so losers never clobber winners
-        # (same scheme as SqlCatalog / reference metadata_location.rs);
-        # .gz under write.metadata.compression-codec=gzip
-        suffix = ""
-        if metadata is not None and metadata.properties.get(
-                "write.metadata.compression-codec",
-                "none").lower() == "gzip":
-            suffix = ".gz"
-        return f"v{version}-{uuid.uuid4()}.metadata.json{suffix}"
-
-    @staticmethod
-    def _ptr_version(ptr: str) -> int:
-        from .catalog import ptr_version
-        return ptr_version(ptr)
-
     def create_table(self, identifier: str,
                      metadata: TableMetadata) -> TableMetadata:
         ns, name = self._split(identifier)
@@ -247,8 +230,8 @@ class S3TablesCatalog:
         md_dir = posix_join(location, "metadata")
         io.makedirs(md_dir)
         io.makedirs(posix_join(location, "data"))
-        target = posix_join(md_dir, self._md_file_name(1, metadata))
-        io.write_text(target, metadata.to_json())
+        target = new_metadata_location(md_dir, 1, metadata)
+        io.write_bytes(target, metadata_bytes(io, metadata, target))
         self._call("PUT", self._table_path(ns, name, "/metadata-location"),
                    body={"metadataLocation": target, "versionToken": token})
         return metadata
@@ -258,8 +241,7 @@ class S3TablesCatalog:
         ptr = got.get("metadataLocation")
         if not ptr:
             raise NoSuchTable(f"{identifier}: no metadataLocation yet")
-        md = TableMetadata.from_json(self._io(ptr).read_text(ptr))
-        return md, self._ptr_version(ptr)
+        return read_metadata(self._io(ptr), ptr)
 
     def commit_table(self, identifier: str, base_version: int,
                      metadata: TableMetadata) -> int:
@@ -267,21 +249,14 @@ class S3TablesCatalog:
         got = self._get_table(identifier)
         current = got.get("metadataLocation")
         token = got["versionToken"]
-        if current is None or self._ptr_version(current) != base_version:
+        if current is None or ptr_version(current) != base_version:
             raise CommitConflict(
                 f"{identifier}: base v{base_version} is no longer current")
         new_version = base_version + 1
-        target = posix_join(current.rsplit("/", 1)[0],
-                            self._md_file_name(new_version, metadata))
+        target = new_metadata_location(current.rsplit("/", 1)[0],
+                                       new_version, metadata)
         io = self._io(target)
-        if io.is_file(current):
-            metadata.metadata_log.append({
-                "timestamp-ms": io.mtime_ns(current) // 1_000_000,
-                "metadata-file": current})
-            keep = int(metadata.properties.get(
-                "write.metadata.previous-versions-max", "100"))
-            metadata.metadata_log = metadata.metadata_log[-keep:]
-        io.write_text(target, metadata.to_json())
+        io.write_bytes(target, metadata_bytes(io, metadata, target, current))
         try:
             self._call("PUT",
                        self._table_path(ns, name, "/metadata-location"),

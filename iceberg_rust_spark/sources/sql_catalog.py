@@ -26,7 +26,8 @@ import sqlite3
 from typing import List, Optional, Tuple
 
 from .catalog import (CommitConflict, NamespaceNotEmpty, NoSuchNamespace,
-                      NoSuchTable, TableAlreadyExists)
+                      NoSuchTable, TableAlreadyExists, metadata_bytes,
+                      new_metadata_location, ptr_version, read_metadata)
 from .io import file_io_for, posix_join
 from .metadata import TableMetadata
 
@@ -182,24 +183,6 @@ class SqlCatalog:
                 (self.name, ns, name)).fetchone()
         return row[0] if row else None
 
-    @staticmethod
-    def _md_file_name(version: int, metadata=None) -> str:
-        """Reference naming (metadata_location.rs:127): every create/commit
-        attempt writes `{version:05}-{uuid}.metadata.json`, so a losing
-        committer can never overwrite the winner's committed file — the CAS
-        decides which uniquely-named file becomes the pointer. A `.gz`
-        suffix is added under write.metadata.compression-codec=gzip."""
-        import uuid
-        suffix = ""
-        if metadata is not None and metadata.properties.get(
-                "write.metadata.compression-codec", "none").lower() == "gzip":
-            suffix = ".gz"
-        return f"{version:05d}-{uuid.uuid4()}.metadata.json{suffix}"
-
-    def _md_path(self, identifier: str, version: int, metadata=None) -> str:
-        return posix_join(self._metadata_dir(identifier),
-                          self._md_file_name(version, metadata))
-
     def create_table(self, identifier: str,
                      metadata: TableMetadata) -> TableMetadata:
         ns, name = self._split(identifier)
@@ -211,8 +194,8 @@ class SqlCatalog:
         self.io.makedirs(md_dir)
         self.io.makedirs(posix_join(self._table_dir(identifier), "data"))
         metadata.location = self._table_dir(identifier)
-        target = self._md_path(identifier, 1, metadata)
-        self.io.write_text(target, metadata.to_json())
+        target = new_metadata_location(md_dir, 1, metadata)
+        self.io.write_bytes(target, metadata_bytes(self.io, metadata, target))
         try:
             with self._conn() as c:
                 c.execute(
@@ -234,10 +217,9 @@ class SqlCatalog:
         ns, name = self._split(identifier)
         if self.table_exists(identifier):
             raise TableAlreadyExists(identifier)
-        from .io import file_io_for
-        md = TableMetadata.from_json(
-            file_io_for(metadata_location).read_text(metadata_location))
-        self._ptr_version(metadata_location)  # must be a versioned name
+        # a versioned name, so later commits can number the next file
+        md, _ = read_metadata(file_io_for(metadata_location),
+                              metadata_location)
         try:
             with self._conn() as c:
                 c.execute(
@@ -250,23 +232,11 @@ class SqlCatalog:
             raise TableAlreadyExists(identifier)
         return md
 
-    @staticmethod
-    def _ptr_version(ptr: str) -> int:
-        # accepts both reference-style `00001-<uuid>.metadata.json` and the
-        # filesystem catalog's legacy `v1.metadata.json`
-        import re
-        m = re.search(
-            r"/(?:v)?(\d+)(?:-[0-9a-f-]{36})?\.metadata\.json(?:\.gz)?$", ptr)
-        if not m:
-            raise NoSuchTable(f"unparseable metadata pointer {ptr}")
-        return int(m.group(1))
-
     def load_table(self, identifier: str) -> Tuple[TableMetadata, int]:
         ptr = self._pointer(identifier)
         if ptr is None:
             raise NoSuchTable(identifier)
-        md = TableMetadata.from_json(self.io.read_text(ptr))
-        return md, self._ptr_version(ptr)
+        return read_metadata(self.io, ptr)
 
     def commit_table(self, identifier: str, base_version: int,
                      metadata: TableMetadata) -> int:
@@ -279,20 +249,14 @@ class SqlCatalog:
         expected = self._pointer(identifier)
         if expected is None:
             raise NoSuchTable(identifier)
-        if self._ptr_version(expected) != base_version:
+        if ptr_version(expected) != base_version:
             raise CommitConflict(
                 f"{identifier}: base v{base_version} is no longer current")
         new_version = base_version + 1
-        target = posix_join(expected.rsplit("/", 1)[0],
-                            self._md_file_name(new_version, metadata))
-        if self.io.is_file(expected):
-            metadata.metadata_log.append({
-                "timestamp-ms": self.io.mtime_ns(expected) // 1_000_000,
-                "metadata-file": expected})
-            keep = int(metadata.properties.get(
-                "write.metadata.previous-versions-max", "100"))
-            metadata.metadata_log = metadata.metadata_log[-keep:]
-        self.io.write_text(target, metadata.to_json())
+        target = new_metadata_location(expected.rsplit("/", 1)[0],
+                                       new_version, metadata)
+        self.io.write_bytes(
+            target, metadata_bytes(self.io, metadata, target, expected))
         with self._conn() as c:
             cur = c.execute(
                 "UPDATE iceberg_tables SET metadata_location = ?, "

@@ -29,7 +29,8 @@ from pyspark.sql import types as T
 from ..plans import expr as E
 from ..plans.evaluators import file_must_match
 from .io import file_io_for, posix_join
-from .catalog import CommitConflict, FileSystemCatalog, ValidationConflict
+from .catalog import (CommitConflict, FileSystemCatalog, ValidationConflict,
+                      read_metadata)
 from .manifest import (CONTENT_DATA, CONTENT_EQUALITY_DELETES,
                        CONTENT_POSITION_DELETES, STATUS_ADDED, STATUS_EXISTING,
                        DataFile, FieldSummaryRec, ManifestEntry, ManifestFile,
@@ -88,10 +89,9 @@ class Table:
     def from_metadata_path(metadata_path: str) -> "Table":
         """StaticTable (table.rs:344 counterpart): read-only table loaded
         straight from a metadata JSON file, no catalog. Commits raise."""
-        from .io import file_io_for, posix_join
-        md = TableMetadata.from_json(file_io_for(metadata_path).read_text(metadata_path))
-        t = Table(None, f"static:{metadata_path}", md, -1)  # type: ignore[arg-type]
-        return t
+        md, _ = read_metadata(file_io_for(metadata_path), metadata_path,
+                              versioned=False)
+        return Table(None, f"static:{metadata_path}", md, -1)  # type: ignore[arg-type]
 
     def refresh(self) -> "Table":
         self.metadata, self.version = self.catalog.load_table(self.identifier)
@@ -1638,9 +1638,8 @@ class Table:
         history (metadata-log) plus the current file, newest last."""
         rows = [(e["timestamp-ms"], e["metadata-file"])
                 for e in self.metadata.metadata_log]
-        md_dir = posix_join(self.location, "metadata")
         rows.append((self.metadata.last_updated_ms,
-                     posix_join(md_dir, f"v{self.version}.metadata.json")))
+                     self.metadata.metadata_file_location))
         return spark.createDataFrame(
             rows, "timestamp_ms long, file string")
 

@@ -146,26 +146,38 @@ def _project_batch(batch, projection):
     return pa.RecordBatch.from_arrays(arrays, names=names)
 
 
+# weights of the worker's delete caches in the object cache, measured with
+# tracemalloc (ARCHITECTURE.md "One object cache")
+_POS_INDEX_KEY_BYTES = 300     # path key + ndarray header + dict slot
+_EQ_SET_TUPLE_BYTES = 200      # a 1-2 column tuple and its set slot
+
+
+def _stamp(path: str) -> int:
+    from ..sources.io import file_io_for
+    return file_io_for(path).mtime_ns(path)
+
+
 def _pos_delete_index(delete_path: str):
     """Worker-local: one positional-delete parquet parsed ONCE into a
     {data_file_path: sorted positions} index serving every data file the
     worker reads (one delete file commonly references thousands of data
     files — re-reading it per data-file partition would make delete I/O
-    O(data_files x delete_files))."""
-    idx = _POS_INDEX_CACHE.get(delete_path)
-    if idx is None:
-        import pandas as pd
+    O(data_files x delete_files)). Held in the object cache under the
+    file's stamp, so a rewritten delete file is parsed again."""
+    from ..sources.scan import _manifest_cache
+
+    def parse():
         import pyarrow.parquet as pq
         tb = pq.read_table(delete_path, columns=["file_path", "pos"])
         pdf = tb.to_pandas()
         # normalize file:/file:// spellings once, index by bare path
         pdf["file_path"] = pdf["file_path"].str.replace(
             r"^file:/*", "/", regex=True)
-        idx = {k: g["pos"].to_numpy() for k, g in pdf.groupby("file_path")}
-        if len(_POS_INDEX_CACHE) > 64:      # bounded
-            _POS_INDEX_CACHE.clear()
-        _POS_INDEX_CACHE[delete_path] = idx
-    return idx
+        return {k: g["pos"].to_numpy() for k, g in pdf.groupby("file_path")}
+    return _manifest_cache.load(
+        "pos_index", delete_path, _stamp(delete_path), None, parse,
+        lambda idx: sum(a.nbytes + _POS_INDEX_KEY_BYTES
+                        for a in idx.values()))
 
 
 def _deleted_positions(partition: _FilePartition):
@@ -184,51 +196,39 @@ def _deleted_positions(partition: _FilePartition):
         if hit is not None:
             pos_parts.append(hit)
     if partition.dv_blobs:
-        from ..sources.puffin import BlobMetadata, deserialize_dv, read_blob
+        from ..sources.scan import _dv_positions
         for p, off, length in partition.dv_blobs:
-            key = (p, off, length)
-            dv = _DV_CACHE.get(key)
-            if dv is None:
-                blob = read_blob(p, BlobMetadata(
-                    type="deletion-vector-v1", fields=[], snapshot_id=0,
-                    sequence_number=0, offset=off, length=length))
-                dv = deserialize_dv(blob).astype("int64")
-                if len(_DV_CACHE) > 256:    # bounded
-                    _DV_CACHE.clear()
-                _DV_CACHE[key] = dv
-            pos_parts.append(dv)
+            pos_parts.append(_dv_positions(p, off, length, _stamp(p))
+                             .astype("int64", copy=False))
     if not pos_parts:
         return None
     return np.unique(np.concatenate(pos_parts))
 
 
-# executor-process-local caches: Python DataSource workers are reused
-# across tasks, so an equality-delete set parsed once serves every data
-# file in the worker (the caching delete loader's job,
-# caching_delete_file_loader.rs:265, at worker granularity)
-_EQ_SET_CACHE: dict = {}
-_POS_INDEX_CACHE: dict = {}
-_DV_CACHE: dict = {}
-
-
 def _eq_delete_sets(partition: _FilePartition):
     """(cols, set-of-value-tuples) per equality-delete group; rows whose
     eq columns are all non-null and match a tuple are dropped (null-keep
-    semantics, caching_delete_file_loader.rs:422-426)."""
+    semantics, caching_delete_file_loader.rs:422-426). Python DataSource
+    workers are reused across tasks, so each set is held in the object
+    cache under every delete file's stamp and serves every data file the
+    worker reads (the caching delete loader's job,
+    caching_delete_file_loader.rs:265, at worker granularity)."""
     import pyarrow.parquet as pq
+
+    from ..sources.scan import _manifest_cache
 
     out = []
     for cols, paths in partition.eq_groups:
-        key = (cols, paths)
-        rows = _EQ_SET_CACHE.get(key)
-        if rows is None:
+        def parse():
             rows = set()
             for p in paths:
                 tb = pq.read_table(p, columns=list(cols))
                 rows.update(zip(*(tb.column(c).to_pylist() for c in cols)))
-            if len(_EQ_SET_CACHE) > 64:     # bounded
-                _EQ_SET_CACHE.clear()
-            _EQ_SET_CACHE[key] = rows
+            return rows
+        stamped = tuple((p, _stamp(p)) for p in paths)
+        rows = _manifest_cache.load(
+            "eq_set", None, None, (cols, stamped), parse,
+            lambda v: max(1, len(v)) * _EQ_SET_TUPLE_BYTES)
         out.append((list(cols), rows))
     return out
 

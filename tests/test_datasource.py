@@ -458,3 +458,30 @@ def test_stream_datasource_projects_evolved_files(spark, warehouse,
     # grp values arrive under the stream's old column name g
     assert sorted(r["g"] for r in rows) == [1, 2]
     assert all(set(r) == {"id", "g"} for r in rows)
+
+
+def test_pos_delete_index_restamped_on_rewrite(tmp_path):
+    """The worker's position-delete index is held in the object cache under
+    the delete file's stamp: a delete file rewritten at the same path with
+    a newer mtime is parsed again, not served from the old index."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from iceberg_rust_spark.streaming.datasource import _pos_delete_index
+
+    path = str(tmp_path / "pos-deletes.parquet")
+    data = str(tmp_path / "data.parquet")
+
+    def write(positions, mtime_s):
+        pq.write_table(pa.table({"file_path": [data] * len(positions),
+                                 "pos": pa.array(positions, pa.int64())}),
+                       path)
+        os.utime(path, (mtime_s, mtime_s))
+
+    write([1, 2], 1_700_000_000)
+    assert np.array_equal(_pos_delete_index(path)[data], [1, 2])
+    write([3, 4], 1_700_000_100)
+    assert np.array_equal(_pos_delete_index(path)[data], [3, 4])

@@ -223,32 +223,3 @@ def test_thrift_client_reconnects_after_stale_socket(tmp_path):
         cat.close()
     finally:
         server.stop()
-
-
-def test_hms_gzip_metadata_codec(spark, tmp_path):
-    """gzip codec over HMS: .metadata.json.gz versions are REAL gzip on
-    disk (the FileIO layer compresses .gz paths transparently) and load
-    back through the metastore pointer."""
-    import glob
-    import gzip as _gzip
-
-    server = FakeHms()
-    uri = server.start()
-    try:
-        cat = HmsCatalog(uri, str(tmp_path / "wh"))
-        cat.create_namespace("db")
-        df = spark.createDataFrame([(1, "a")], "id long, s string")
-        t = Table.create(
-            cat, "db.gz", schema_from_spark(df.schema),
-            properties={"write.metadata.compression-codec": "gzip"})
-        t.append(spark, df)
-        files = sorted(glob.glob(
-            str(tmp_path / "wh/db/gz/metadata/*.metadata.json*")))
-        assert files and all(f.endswith(".json.gz") for f in files)
-        raw = open(files[-1], "rb").read()
-        assert raw[:2] == b"\x1f\x8b"
-        assert b'"format-version"' in _gzip.decompress(raw)
-        assert Table.load(cat, "db.gz").to_df(spark).count() == 1
-        cat.close()
-    finally:
-        server.stop()
