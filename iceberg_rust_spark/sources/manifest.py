@@ -15,6 +15,7 @@ v1 files (per-cell type-tagged JSON) stay readable.
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 from dataclasses import dataclass, field as dc_field
@@ -23,7 +24,8 @@ from typing import Any, Dict, List, Optional
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from .datum import de_value, ser_scalar, ser_value
+from .datum import (days_from_date, de_value, micros_from_ts, ser_scalar,
+                    ser_value)
 
 # DataContentType (spec/manifest/data_file.rs)
 CONTENT_DATA = 0
@@ -164,10 +166,14 @@ def _write_pq_via_io(table: "pa.Table", path: str) -> int:
 
 
 def _read_pq_via_io(path: str) -> "pa.Table":
-    import io as _io
-
+    """Read a metadata parquet (manifest or manifest list) through FileIO.
+    One ``ParquetFile`` read on the calling thread: ``pq.read_table`` goes
+    through the dataset API and Arrow's own thread pool, which inside the
+    planner's decode pool cost 5.0 ms against 3.2 ms per 1000-entry
+    manifest."""
     from .io import file_io_for
-    return pq.read_table(_io.BytesIO(file_io_for(path).read_bytes(path)))
+    data = file_io_for(path).read_bytes(path)
+    return pq.ParquetFile(pa.BufferReader(data)).read(use_threads=False)
 
 
 def write_manifest(path: str, entries: List[ManifestEntry]) -> int:
@@ -263,6 +269,67 @@ def _read_manifest_v1(t: "pa.Table") -> List[ManifestEntry]:
     return out
 
 
+# the tags whose body is an integer, with the range the per-value decode
+# accepts (date_from_days / ts_from_micros raise outside it)
+_INT_TAGS = {
+    "i": None,
+    "d": (days_from_date(dt.date.min), days_from_date(dt.date.max)),
+    "t": (micros_from_ts(dt.datetime.min), micros_from_ts(dt.datetime.max)),
+}
+
+
+def decode_bounds(items: "pa.Array") -> tuple:
+    """``(values, nan)`` for a string array of tag-scalar cells (see
+    ``datum.ser_scalar``): ``values`` is an object array whose element i
+    equals ``to_comparable(de_scalar(items[i]))`` in type and value (None
+    for a null cell), ``nan`` a bool array marking float NaN values.
+
+    Decodes per tag group in Arrow kernels: ``i``/``d``/``t`` cast the
+    body to int64 (the comparable form of a date or timestamp is its
+    int), ``s`` slices, ``f`` casts to float64 (bit-exact on ``repr``
+    output, nan and the infinities included). ``c``, ``x``, ``b``,
+    unknown tags and any group whose cast raises or whose ints fall
+    outside the per-value decode's range decode per value, raising where
+    it raises. Values stay Python objects, so the planner's comparisons
+    against literals stay exact (an int64 bound against a float64 literal
+    would round above 2^53)."""
+    import numpy as np
+    import pyarrow.compute as pc
+    n = len(items)
+    values = np.full(n, None, dtype=object)
+    nan = np.zeros(n, dtype=bool)
+    if n == items.null_count:
+        return values, nan
+    tags = pc.utf8_slice_codeunits(items, 0, 1)
+    body = pc.utf8_slice_codeunits(items, 2)
+    for tag in pc.unique(tags.drop_null()).to_pylist():
+        mask = pc.fill_null(pc.equal(tags, tag), False)
+        rows = np.nonzero(mask.to_numpy(zero_copy_only=False))[0]
+        got = None
+        try:
+            if tag in _INT_TAGS:
+                ints = pc.cast(body.filter(mask), pa.int64()).to_numpy()
+                lim = _INT_TAGS[tag]
+                if lim is None or (lim[0] <= ints.min()
+                                   and ints.max() <= lim[1]):
+                    got = ints.tolist()
+            elif tag == "s":
+                got = body.filter(mask).to_pylist()
+            elif tag == "f":
+                floats = pc.cast(body.filter(mask), pa.float64()).to_numpy()
+                nan[rows] = np.isnan(floats)
+                got = floats.tolist()
+        except pa.ArrowInvalid:
+            pass                        # decoded per value below
+        if got is None:
+            from .datum import de_scalar, to_comparable
+            got = [to_comparable(de_scalar(v))
+                   for v in items.filter(mask).to_pylist()]
+            nan[rows] = [isinstance(v, float) and v != v for v in got]
+        values[rows] = got
+    return values, nan
+
+
 class ManifestColumns:
     """Columnar view of one manifest for O(metadata) planning (counterpart
     of the reference streaming Avro entries through the evaluator without
@@ -273,8 +340,9 @@ class ManifestColumns:
     pair, ~0.8s avoided per cold plan).
 
     Eager: the five per-row primitives planning always touches, as numpy.
-    Lazy (built on first touch, memoized): per-column metric arrays
-    (``metric_arrays``), partition dicts, full entry objects."""
+    Lazy (built on first touch, memoized): per-column metric vectors
+    (``metric_vectors``), partition groups and dicts, full entry
+    objects."""
 
     __slots__ = ("n", "status", "content", "spec_id", "schema_id_raw",
                  "record_count", "sequence_number", "_tab", "_cols",
@@ -378,6 +446,21 @@ class ManifestColumns:
         return self._obj_col("first_row_id",
                              lambda e: e.data_file.first_row_id)
 
+    def has_file_scheme(self, name: str) -> bool:
+        """Whether some path of string column ``name`` starts with
+        ``file:`` — one Arrow kernel per column, memoized, so path
+        normalization runs per path only in columns that need it.
+        Object-backed views answer True (normalize every path)."""
+        if self._tab is None:
+            return True
+        key = "__file_scheme__" + name
+        got = self._cols.get(key)
+        if got is None:
+            import pyarrow.compute as pc
+            got = self._cols[key] = bool(
+                pc.any(pc.starts_with(self._chunk(name), "file:")).as_py())
+        return got
+
     def _map_parts(self, name: str):
         """(offsets numpy, keys flat Arrow, items flat Arrow) of a map
         column — the C-decoded raw parts every per-key extraction slices.
@@ -391,95 +474,81 @@ class ManifestColumns:
                 arr.keys, arr.items)
         return got
 
-    def metric_arrays(self, file_name: str) -> tuple:
-        """Per-row (value_count, null_count, nan_count, lower, upper) for
-        ONE file-local column name, aligned to rows (None where absent);
-        bounds are de_scalar-decoded then comparison-normalized
-        (datum.to_comparable), ready for _eval_bounds. Extraction is one
-        C-side equality scan + numpy scatter per (manifest, column),
-        memoized — the planner touches only the predicate's referenced
-        columns."""
+    def metric_vectors(self, file_name: str) -> tuple:
+        """The per-row metrics of ONE file-local column name, extracted
+        once per (manifest, column) and memoized: counts as exact int64
+        PLUS a presence bool mask (a NaN-sentinel float64 encoding would
+        silently lose precision above 2^53 and could read ``vc == nc``
+        spuriously true — a prune, not a conservative keep), bounds as
+        object arrays of ``to_comparable(de_scalar(v))`` values (see
+        ``decode_bounds``) with NaN bounds nulled, plus presence masks.
+        Returns ``(vc, vc_p, nc, nc_p, nanc, nanc_p, lo, lo_p, hi, hi_p)``
+        — what the planner's metrics matcher (scan._vector_matcher) and
+        the delete index's file_path bounds read. Arrow-backed, each map
+        column costs one key-equality kernel and one ``take``; the planner
+        touches only the predicate's referenced columns."""
         got = self._metrics.get(file_name)
         if got is not None:
             return got
         import numpy as np
-        from .datum import de_scalar, to_comparable
+        n = self.n
         if self._tab is None:
-            es = self._entries
-            vc = [e.data_file.value_counts.get(file_name) for e in es]
-            nc = [e.data_file.null_value_counts.get(file_name) for e in es]
-            nanc = [e.data_file.nan_value_counts.get(file_name) for e in es]
-            lo = [to_comparable(e.data_file.lower_bounds.get(file_name))
-                  for e in es]
-            hi = [to_comparable(e.data_file.upper_bounds.get(file_name))
-                  for e in es]
-            got = self._metrics[file_name] = (vc, nc, nanc, lo, hi)
-            return got
-        import pyarrow.compute as pc
+            import math
 
-        def extract(col, decode):
-            offs, keys, items = self._map_parts(col)
-            mask = pc.equal(keys, file_name).to_numpy(zero_copy_only=False)
-            idx = np.nonzero(mask)[0]
-            out = np.full(self.n, None, dtype=object)
-            if len(idx):
+            from .datum import to_comparable
+            dfs = [e.data_file for e in self._entries]
+
+            def counts(attr):
+                a = [getattr(f, attr).get(file_name) for f in dfs]
+                return (np.array([0 if v is None else int(v) for v in a],
+                                 dtype="int64"),
+                        np.array([v is not None for v in a], dtype=bool))
+
+            def bounds(attr):
+                vals = np.array(
+                    [None if (v is None or (isinstance(v, float)
+                                            and math.isnan(v))) else v
+                     for v in (to_comparable(getattr(f, attr).get(file_name))
+                               for f in dfs)], dtype=object)
+                return vals, np.array([v is not None for v in vals],
+                                      dtype=bool)
+        else:
+            import pyarrow.compute as pc
+
+            def take(col):
+                """(rows, items) of the cells keyed ``file_name``."""
+                offs, keys, items = self._map_parts(col)
+                mask = pc.equal(keys, file_name).to_numpy(
+                    zero_copy_only=False)
+                idx = np.nonzero(mask)[0]
                 rows = np.searchsorted(offs, idx, side="right") - 1
-                vals = items.take(pa.array(idx, type=pa.int64())).to_pylist()
-                if decode is not None:
-                    vals = [decode(v) for v in vals]
-                out[rows] = vals
-            return out
+                return rows, items.take(pa.array(idx, type=pa.int64()))
 
-        def debound(v):
-            return to_comparable(de_scalar(v))
+            def counts(col):
+                rows, got = take(col)
+                vals = np.zeros(n, dtype="int64")
+                present = np.zeros(n, dtype=bool)
+                vals[rows] = pc.fill_null(got, 0).to_numpy(
+                    zero_copy_only=False)
+                present[rows] = got.is_valid().to_numpy(
+                    zero_copy_only=False)
+                return vals, present
+
+            def bounds(col):
+                rows, got = take(col)
+                dec, nan = decode_bounds(got)
+                dec[nan] = None
+                vals = np.full(n, None, dtype=object)
+                present = np.zeros(n, dtype=bool)
+                vals[rows] = dec
+                present[rows] = (got.is_valid().to_numpy(zero_copy_only=False)
+                                 & ~nan)
+                return vals, present
 
         got = self._metrics[file_name] = (
-            extract("value_counts", None),
-            extract("null_value_counts", None),
-            extract("nan_value_counts", None),
-            extract("lower_bounds", debound),
-            extract("upper_bounds", debound))
-        return got
-
-    def metric_vectors(self, file_name: str) -> tuple:
-        """Vector-friendly derivation of ``metric_arrays`` for ONE file
-        column, memoized: counts as exact int64 PLUS a presence bool mask
-        (a NaN-sentinel float64 encoding would silently lose precision
-        above 2^53 and could read ``vc == nc`` spuriously true — a prune,
-        not a conservative keep), bounds as object arrays with
-        NaN-poisoned values nulled at build plus presence masks. Returns
-        ``(vc, vc_p, nc, nc_p, nanc, nanc_p, lo, lo_p, hi, hi_p)``. These
-        feed the planner's metrics matcher (scan._vector_matcher)."""
-        key = "__vec__" + file_name
-        got = self._metrics.get(key)
-        if got is not None:
-            return got
-        import math
-
-        import numpy as np
-        vc, nc, nanc, lo, hi = self.metric_arrays(file_name)
-
-        def counts(a):
-            vals = np.array([0 if v is None else int(v) for v in a],
-                            dtype="int64")
-            present = np.array([v is not None for v in a], dtype=bool)
-            return vals, present
-
-        def bounds(a):
-            vals = np.array(
-                [None if (v is None or (isinstance(v, float)
-                                        and math.isnan(v))) else v
-                 for v in a], dtype=object)
-            present = np.array([v is not None for v in vals], dtype=bool)
-            return vals, present
-
-        vc_v, vc_p = counts(vc)
-        nc_v, nc_p = counts(nc)
-        nanc_v, nanc_p = counts(nanc)
-        lo_v, lo_p = bounds(lo)
-        hi_v, hi_p = bounds(hi)
-        got = self._metrics[key] = (
-            vc_v, vc_p, nc_v, nc_p, nanc_v, nanc_p, lo_v, lo_p, hi_v, hi_p)
+            *counts("value_counts"), *counts("null_value_counts"),
+            *counts("nan_value_counts"), *bounds("lower_bounds"),
+            *bounds("upper_bounds"))
         return got
 
     def _map_row(self, name: str, i: int, decode=None) -> Dict[str, Any]:
@@ -682,8 +751,9 @@ class ManifestColumns:
         matcher pay O(distinct partitions) instead of O(rows) dict builds
         (the per-row decode was ~2.5us x 110k delete rows per cold 100k-file
         MOR plan). Fixed-width maps (one partition spec — the common case)
-        group via vectorized numpy run detection over the flat key/value
-        arrays; ragged maps fall back to a per-row memoized loop."""
+        find run boundaries in Arrow kernels over the flat key/value arrays
+        and decode only each run's first row; ragged maps fall back to a
+        per-row memoized loop."""
         import numpy as np
         got = self._cols.get("__pgroups__")
         if got is not None:
@@ -713,8 +783,6 @@ class ManifestColumns:
             got = (np.zeros(n, dtype=np.int64), [{}])
             self._cols["__pgroups__"] = got
             return got
-        ks = np.asarray(keys.to_pylist(), dtype=object)
-        vs = np.asarray(items.to_pylist(), dtype=object)
         codes = np.empty(n, dtype=np.int64)
         parts: list = []
         memo: dict = {}
@@ -731,21 +799,34 @@ class ManifestColumns:
         L = int(lengths[0])
         off0 = int(offs[0])                   # chunk offsets may not be 0-based
         if L > 0 and (lengths == L).all():
-            # fixed width: reshape flat arrays to (n, L); a row differs
-            # from its predecessor iff any of its L cells differ — one
-            # vectorized object-compare pass finds run boundaries, then
-            # one decode per run start (deduped across runs by raw value)
-            K = ks[off0:off0 + n * L].reshape(n, L)
-            V = vs[off0:off0 + n * L].reshape(n, L)
-            if n > 1:
-                change = ((K[1:] != K[:-1]) | (V[1:] != V[:-1])).any(axis=1)
-                starts = np.concatenate(
-                    ([0], np.nonzero(change)[0] + 1, [n]))
-            else:
-                starts = np.array([0, n])
-            for s, e_ in zip(starts[:-1], starts[1:]):
-                codes[s:e_] = decode(K[s].tolist(), V[s].tolist())
+            # fixed width: row i is flat cells [i*L, (i+1)*L); a row starts
+            # a run iff one of its cells differs from the cell L places
+            # before it (Arrow not_equal, with an xor of is_null so a null
+            # equals a null); then one decode per run start (deduped
+            # across runs by raw value)
+            import pyarrow.compute as pc
+            K = keys.slice(off0, n * L)
+            V = items.slice(off0, n * L)
+            change = np.zeros((n - 1) * L, dtype=bool)
+            for a in (K, V):
+                cur, prev = a.slice(L), a.slice(0, (n - 1) * L)
+                change |= pc.or_(
+                    pc.fill_null(pc.not_equal(cur, prev), False),
+                    pc.xor(cur.is_null(), prev.is_null())).to_numpy(
+                        zero_copy_only=False)
+            starts = np.concatenate(
+                ([0], np.nonzero(change.reshape(n - 1, L).any(axis=1))[0]
+                 + 1))
+            cells = pa.array((starts[:, None] * L + np.arange(L)).ravel())
+            ks = K.take(cells).to_pylist()
+            vs = V.take(cells).to_pylist()
+            ends = np.append(starts[1:], n).tolist()
+            for j, (s, e_) in enumerate(zip(starts.tolist(), ends)):
+                codes[s:e_] = decode(ks[j * L:(j + 1) * L],
+                                     vs[j * L:(j + 1) * L])
         else:
+            ks = np.asarray(keys.to_pylist(), dtype=object)
+            vs = np.asarray(items.to_pylist(), dtype=object)
             for i in range(n):
                 lo, hi = int(offs[i]), int(offs[i + 1])
                 codes[i] = decode(ks[lo:hi].tolist(), vs[lo:hi].tolist())

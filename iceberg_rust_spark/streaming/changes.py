@@ -45,6 +45,12 @@ DELETE = "delete"
 _MERGE_SCAN_GROUPS = 8
 
 
+def _bq(c: str) -> str:
+    """A column name as a Spark SQL identifier: backticks around it, each
+    embedded backtick doubled."""
+    return "`" + c.replace("`", "``") + "`"
+
+
 def _read_parquet_raw(spark: SparkSession, paths: List[str]) -> DataFrame:
     """Content-only parquet read of manifest-listed URIs through the FileIO
     data plane: non-spark_native schemes (memory://, registered shims) are
@@ -178,7 +184,7 @@ def changes_df(spark: SparkSession, table: Table,
         # py4j round-trip (~1.5 ms on this box) and stamp runs per part
         esc = change.replace("'", "''")
         return df.selectExpr(
-            *[f"`{c}`" for c in names],
+            *[_bq(c) for c in names],
             f"'{esc}' AS _change_type",
             f"CAST({int(ordinal)} AS int) AS _change_ordinal",
             f"CAST({int(snap_id)} AS long) AS _commit_snapshot_id")
@@ -587,21 +593,20 @@ def net_changes(changes: DataFrame, keys: List[str]) -> DataFrame:
                 if c not in ("_change_type", "_change_ordinal",
                              "_commit_snapshot_id")]
 
-    def bq(c: str) -> str:
-        return "`" + c.replace("`", "``") + "`"
-
-    row = ("struct(" + ", ".join([bq(c) for c in val_cols])
+    row = ("struct(" + ", ".join([_bq(c) for c in val_cols])
            + ", _change_type)")
     ord_key = "struct(_change_ordinal, _change_type)"
-    agg = changes.groupBy(*[bq(k) for k in keys]).agg(
+    agg = changes.groupBy(*[_bq(k) for k in keys]).agg(
         F.expr(f"min_by({row}, {ord_key})").alias("_first"),
         F.expr(f"max_by({row}, {ord_key})").alias("_last"))
     # pre-image: present iff the key's FIRST change is a delete (rows
     # inserted within the window have no pre-image); post-image likewise
     has_d = f"_first._change_type = '{DELETE}'"
     has_i = f"_last._change_type = '{INSERT}'"
-    d_struct = "struct(" + ", ".join(f"_first.{bq(c)}" for c in val_cols) + ")"
-    i_struct = "struct(" + ", ".join(f"_last.{bq(c)}" for c in val_cols) + ")"
+    d_struct = ("struct(" + ", ".join(f"_first.{_bq(c)}" for c in val_cols)
+                + ")")
+    i_struct = ("struct(" + ", ".join(f"_last.{_bq(c)}" for c in val_cols)
+                + ")")
     changed = (f"(NOT ({has_d}) OR NOT ({has_i}) "
                f"OR NOT ({d_struct} <=> {i_struct}))")
     # ONE pass over the aggregate (r14, guide §2.4): the former
@@ -619,16 +624,16 @@ def net_changes(changes: DataFrame, keys: List[str]) -> DataFrame:
         return "'" + c.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
     d_named = ("named_struct(" + ", ".join(
-        f"{nq(c)}, _first.{bq(c)}" for c in val_cols)
+        f"{nq(c)}, _first.{_bq(c)}" for c in val_cols)
         + f", '_change_type', '{DELETE}')")
     i_named = ("named_struct(" + ", ".join(
-        f"{nq(c)}, _last.{bq(c)}" for c in val_cols)
+        f"{nq(c)}, _last.{_bq(c)}" for c in val_cols)
         + f", '_change_type', '{INSERT}')")
     return (agg.where(changed)
             .selectExpr(f"explode(array(if({has_d}, {d_named}, null), "
                         f"if({has_i}, {i_named}, null))) AS _r")
             .where("_r IS NOT NULL")
-            .selectExpr(*[f"_r.{bq(c)} AS {bq(c)}" for c in val_cols],
+            .selectExpr(*[f"_r.{_bq(c)} AS {_bq(c)}" for c in val_cols],
                         "_r._change_type AS _change_type"))
 
 

@@ -406,3 +406,28 @@ def test_merged_pos_deletes_mixed_spelling_dedups_to_one_row(
     # pos 3 appears under BOTH spellings -> exactly one row out
     assert got == [(2, "delete", 7, 99), (3, "delete", 7, 99),
                    (5, "delete", 7, 99)]
+
+
+def test_changes_column_name_with_backtick(spark, warehouse, tmp_path):
+    """A column whose name holds a backtick reads through changes_df: the
+    stamped projection doubles the embedded backtick when it quotes the
+    name. The file is imported with add_files, which writes nothing
+    through Spark SQL."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from iceberg_rust_spark.sources.types import (LONG, NestedField,
+                                                  Schema)
+
+    path = str(tmp_path / "tick.parquet")
+    pq.write_table(pa.table({"id": pa.array(range(6), pa.int64()),
+                             "a`b": pa.array([i % 3 for i in range(6)],
+                                             pa.int64())}), path)
+    t = Table.create(warehouse, "db.cdc_tick", Schema(
+        [NestedField(1, "id", LONG), NestedField(2, "a`b", LONG)], 0))
+    t = t.add_files(spark, [path])
+    ch = changes_df(spark, t)
+    assert "a`b" in ch.columns
+    assert sorted((r["id"], r["a`b"], r["_change_type"])
+                  for r in ch.collect()) == \
+        [(i, i % 3, "insert") for i in range(6)]

@@ -4,6 +4,9 @@ silently loses data), and file_must_match must never say True for a file
 containing a non-matching row. Over-approximation (might=True with no match)
 is allowed — that's only an IO cost."""
 
+import datetime as dt
+import math
+
 import hypothesis.strategies as st
 from hypothesis import example, given, settings
 
@@ -11,8 +14,8 @@ from iceberg_rust_spark.plans import expr as E
 from iceberg_rust_spark.plans.evaluators import (ColumnMetrics,
                                                  file_might_match,
                                                  file_must_match)
-from iceberg_rust_spark.sources.types import (LONG, STRING, NestedField,
-                                             Schema)
+from iceberg_rust_spark.sources.types import (DATE, DOUBLE, LONG, STRING,
+                                             NestedField, Schema)
 
 S = Schema([NestedField(1, "x", LONG)])
 
@@ -168,6 +171,46 @@ def mixed_predicates(draw, depth=2):
     return p
 
 
+# a date and a double column: their bounds decode through the int64 and
+# float64 casts of the written manifest (nan, +-inf, -0.0 and 2^53
+# against an int literal of 2^53 + 1 included)
+S3 = Schema([NestedField(1, "x", LONG), NestedField(2, "s", STRING),
+             NestedField(3, "d", DATE), NestedField(4, "f", DOUBLE)])
+DAY0 = dt.date(2020, 1, 1)
+d_values = st.integers(0, 12).map(lambda k: DAY0 + dt.timedelta(days=k))
+f_values = st.one_of(st.floats(-4, 4), st.sampled_from(
+    [math.nan, math.inf, -math.inf, -0.0, 2.0 ** 53]))
+f_literals = st.one_of(st.floats(-4, 4), st.sampled_from(
+    [math.inf, -math.inf, 0, 2 ** 53 + 1]))
+
+
+@st.composite
+def typed_leaves(draw):
+    d, f = E.col("d"), E.col("f")
+    dv, fv = draw(d_values), draw(f_literals)
+    return draw(st.sampled_from([
+        d < dv, d >= dv, d == dv, d.isin([dv, dv + dt.timedelta(days=2)]),
+        d.is_null(), d.not_null(), f < fv, f > fv, f == fv, f.is_nan(),
+        f.not_nan(), f.isin([fv, 1.5])]))
+
+
+@st.composite
+def typed_predicates(draw, depth=2):
+    p = draw(st.one_of(predicates(depth=0), s_leaves(), typed_leaves()))
+    if depth > 0 and draw(st.booleans()):
+        q = draw(typed_predicates(depth=depth - 1))
+        return (p & q) if draw(st.booleans()) else (p | q)
+    return p
+
+
+# per-file (d lower, d upper, f nan count, f lower, f upper); files past
+# the end of the list carry no d/f metrics
+typed_stats = st.lists(st.tuples(
+    st.one_of(st.none(), d_values), st.one_of(st.none(), d_values),
+    stat_counts, st.one_of(st.none(), f_values),
+    st.one_of(st.none(), f_values)), max_size=8)
+
+
 def _scan_md(schema, specs):
     from iceberg_rust_spark.sources.metadata import TableMetadata
     return TableMetadata(location="/tmp/x", schemas=[schema],
@@ -189,38 +232,52 @@ def _written_columns(entries):
         return read_manifest_columns(p)
 
 
-@given(pred=mixed_predicates(),
+@given(pred=typed_predicates(),
        stats=st.lists(st.tuples(stat_counts, stat_counts, stat_counts,
                                 x_bounds, x_bounds,
                                 stat_counts, stat_counts,
                                 s_bounds, s_bounds,
                                 st.integers(0, 25)),
-                      min_size=1, max_size=8))
+                      min_size=1, max_size=8),
+       typed=typed_stats)
 @settings(max_examples=400, deadline=None)
 # empty prefix; a prefix longer than a 16-char truncated bound;
 # not_starts_with with and without nulls; bounds of another type
 @example(pred=E.col("s").starts_with(""),
-         stats=[(None, None, None, None, None, 3, 0, "ab", "b", 5)])
+         stats=[(None, None, None, None, None, 3, 0, "ab", "b", 5)],
+         typed=[])
 @example(pred=E.col("s").starts_with("a" * 17),
          stats=[(None, None, None, None, None, 3, 0, "a" * 16, "a" * 16, 5),
-                (None, None, None, None, None, 3, 0, "a" * 16, "b", 5)])
+                (None, None, None, None, None, 3, 0, "a" * 16, "b", 5)],
+         typed=[])
 @example(pred=E.BinaryPred(E.NOT_STARTS_WITH, "s", "ab"),
          stats=[(None, None, None, None, None, 3, 0, "ab", "abb", 5),
-                (None, None, None, None, None, 3, 2, "ab", "abb", 5)])
+                (None, None, None, None, None, 3, 2, "ab", "abb", 5)],
+         typed=[])
 @example(pred=(E.col("x") == 3) | E.col("s").isin(["a", "b"]),
          stats=[(4, 0, None, "m", 1, 4, 0, 7, "b", 5),
-                (4, 0, None, 9, "m", 4, 0, "b", 7, 5)])
-def test_vector_matcher_equals_per_row(pred, stats):
+                (4, 0, None, 9, "m", 4, 0, "b", 7, 5)],
+         typed=[])
+@example(pred=E.col("f") > 2 ** 53 + 1,
+         stats=[(None,) * 9 + (5,)] * 2,
+         typed=[(None, None, 0, 0.0, 2.0 ** 53),
+                (None, None, 1, math.nan, math.inf)])
+@example(pred=E.col("d") == DAY0 + dt.timedelta(days=3),
+         stats=[(None,) * 9 + (5,)] * 2,
+         typed=[(DAY0, DAY0 + dt.timedelta(days=2), None, None, None),
+                (DAY0, DAY0 + dt.timedelta(days=3), None, -0.0, None)])
+def test_vector_matcher_equals_per_row(pred, stats, typed):
     """The numpy-vectorized metrics matcher must agree, row by row, with
     file_might_match over _metrics_for_file — including starts_with /
     not_starts_with on truncated string bounds and bounds that do not
-    compare with the literal."""
+    compare with the literal — and date and double bounds decoded from
+    the written manifest."""
     from iceberg_rust_spark.sources.manifest import DataFile, ManifestEntry
     from iceberg_rust_spark.sources.metadata import PartitionSpec
     from iceberg_rust_spark.sources.scan import TableScan, _pred_columns
 
-    bound = E.bind(pred, S2)
-    scan = TableScan(_scan_md(S2, [PartitionSpec(0, [])]), row_filter=pred)
+    bound = E.bind(pred, S3)
+    scan = TableScan(_scan_md(S3, [PartitionSpec(0, [])]), row_filter=pred)
 
     def only(col, v):
         return {} if v is None else {col: v}
@@ -228,19 +285,23 @@ def test_vector_matcher_equals_per_row(pred, stats):
     files = []
     for k, (vc, nc, nanc, xlo, xhi, svc, snc, slo, shi, rec) in \
             enumerate(stats):
+        dlo, dhi, fnanc, flo, fhi = (typed[k] if k < len(typed)
+                                     else (None,) * 5)
         files.append(DataFile(
             file_path=f"/f{k}.parquet", record_count=rec,
             value_counts={**only("x", vc), **only("s", svc)},
             null_value_counts={**only("x", nc), **only("s", snc)},
-            nan_value_counts=only("x", nanc),
-            lower_bounds={**only("x", xlo), **only("s", slo)},
-            upper_bounds={**only("x", xhi), **only("s", shi)},
+            nan_value_counts={**only("x", nanc), **only("f", fnanc)},
+            lower_bounds={**only("x", xlo), **only("s", slo),
+                          **only("d", dlo), **only("f", flo)},
+            upper_bounds={**only("x", xhi), **only("s", shi),
+                          **only("d", dhi), **only("f", fhi)},
             schema_id=0, spec_id=0))
     cols = _written_columns([ManifestEntry(
         status=1, snapshot_id=1, sequence_number=1, file_sequence_number=1,
         data_file=f) for f in files])
-    vec = scan._vector_matcher(bound, S2, 0, cols, _pred_columns(bound))
-    want = [file_might_match(bound, scan._metrics_for_file(f, S2),
+    vec = scan._vector_matcher(bound, S3, 0, cols, _pred_columns(bound))
+    want = [file_might_match(bound, scan._metrics_for_file(f, S3),
                              f.record_count) for f in files]
     assert list(map(bool, vec)) == want, (pred, stats)
 
@@ -249,16 +310,17 @@ def test_vector_matcher_equals_per_row(pred, stats):
 def partition_layouts(draw):
     """(spec id, partition dict) per file over two specs — identity(x) as
     ``x`` and truncate[2](s) as ``s_trunc`` — with empty partitions
-    (files written unpartitioned) mixed in."""
+    (files written unpartitioned) and null partition values mixed in."""
     out = []
     for _ in range(draw(st.integers(1, 20))):
         spec = draw(st.integers(0, 1))
         if draw(st.integers(0, 4)) == 0:
             part = {}
         elif spec == 0:
-            part = {"x": draw(st.integers(-8, 8))}
+            part = {"x": draw(st.one_of(st.none(), st.integers(-8, 8)))}
         else:
-            part = {"s_trunc": draw(st.text("abc", max_size=2))}
+            part = {"s_trunc": draw(st.one_of(
+                st.none(), st.text("abc", max_size=2)))}
         out.append((spec, part))
     return out
 
@@ -266,6 +328,11 @@ def partition_layouts(draw):
 @given(pred=mixed_predicates(), layout=partition_layouts(),
        written=st.booleans())
 @settings(max_examples=300, deadline=None)
+# fixed-width runs where a null value follows a null and a value
+@example(pred=E.col("x") == 3, written=True,
+         layout=[(0, {"x": None}), (0, {"x": None}), (0, {"x": 3}),
+                 (0, {"x": None}), (1, {"s_trunc": None}),
+                 (1, {"s_trunc": "ab"})])
 def test_partition_mask_equals_per_entry(pred, layout, written):
     """The planner's partition mask (one partition_might_match per
     distinct (partition, spec) pair, scattered by partition_groups codes)

@@ -495,8 +495,10 @@ def test_v1_json_manifest_layout_stays_readable(tmp_path):
     # the columnar planner view works off the object backing too
     cols = read_manifest_columns(p)
     assert cols.n == 1 and int(cols.record_count[0]) == 100
-    vc, nc, _nan, lo, hi = cols.metric_arrays("k")
+    vc, vc_p, nc, nc_p, _nan, _nan_p, lo, lo_p, hi, hi_p = \
+        cols.metric_vectors("k")
     assert (vc[0], nc[0], lo[0], hi[0]) == (100, 0, 1, 99)
+    assert vc_p[0] and nc_p[0] and lo_p[0] and hi_p[0]
     assert cols.partition(0)["p"] == 4
 
 
