@@ -446,21 +446,6 @@ class ManifestColumns:
         return self._obj_col("first_row_id",
                              lambda e: e.data_file.first_row_id)
 
-    def has_file_scheme(self, name: str) -> bool:
-        """Whether some path of string column ``name`` starts with
-        ``file:`` — one Arrow kernel per column, memoized, so path
-        normalization runs per path only in columns that need it.
-        Object-backed views answer True (normalize every path)."""
-        if self._tab is None:
-            return True
-        key = "__file_scheme__" + name
-        got = self._cols.get(key)
-        if got is None:
-            import pyarrow.compute as pc
-            got = self._cols[key] = bool(
-                pc.any(pc.starts_with(self._chunk(name), "file:")).as_py())
-        return got
-
     def _map_parts(self, name: str):
         """(offsets numpy, keys flat Arrow, items flat Arrow) of a map
         column — the C-decoded raw parts every per-key extraction slices.

@@ -609,6 +609,11 @@ class TableScan:
                          for m in to_decode)
         # only cache misses go to the pool: a warm plan runs serially
         # (measured warm plain10k.metrics 5.8 ms pooled vs 3.1 ms serial).
+        # So does a cached manifest whose columns for this predicate were
+        # never extracted: after a full-scan plan, a first ``v`` plan over
+        # 20 cached 1000-entry manifests measured 43 ms serial vs 59 ms
+        # with those extracts pooled, on 4 cores (the Arrow kernels are
+        # short; the object-array conversion around them holds the GIL).
         # ``held`` counts nothing, so each manifest still counts one hit
         # or one miss, in ``get``. Remote mtimes are fetched on the pool,
         # so a remote set is pooled whole.
@@ -1647,9 +1652,6 @@ class _DeleteFileIndex:
         if not len(del_rows):
             return strays
         refs = cols._col("referenced_data_file")
-        # one starts_with kernel decides whether any ref needs the
-        # scheme strip; plain paths skip the per-row call
-        norm = cols.has_file_scheme("referenced_data_file")
         vecs = cols.metric_vectors("file_path")
         los, his = vecs[6], vecs[8]
         # bulk numpy->py conversions (tolist) instead of per-element int():
@@ -1667,9 +1669,7 @@ class _DeleteFileIndex:
             if ref is not None:
                 # path-scoped (the DV common case), inlined _route:
                 # normalized key — see _route for the spelling rule
-                if norm:
-                    ref = _norm_path_py(ref)
-                by_path.setdefault(ref, []).append(
+                by_path.setdefault(_norm_path_py(ref), []).append(
                     (seq_l[j], con_l[j], (cols, i)))
                 continue
             if pcodes is None:
@@ -1721,7 +1721,6 @@ class _DeleteFileIndex:
         if n == 0 or self.empty:
             return None
         fps = cols.file_paths()
-        norm = cols.has_file_scheme("file_path")
         seqs = cols.sequence_number
         specs = cols.spec_id
         by_path = self.by_path
@@ -1737,7 +1736,7 @@ class _DeleteFileIndex:
         idx_l = idx.tolist() if hasattr(idx, "tolist") else list(idx)
         for j, i in enumerate(idx_l):
             seq = int(seqs[i])
-            p = _norm_path_py(fps[i]) if norm else fps[i]
+            p = _norm_path_py(fps[i])
             pos_parts: list = []
             eq_parts: list = []
             rl = by_path.get(p)
