@@ -214,7 +214,7 @@ def write_manifest(path: str, entries: List[ManifestEntry]) -> int:
 
 def _jd(s: Optional[str]) -> dict:
     """json.loads with an empty fast path: at 100k-file scale the decode
-    runs once per entry per json column, and nan-counts/column-sizes are
+    runs once per entry per json column, and NaN counts/column sizes are
     '{}' for most writers — skipping the parser there is ~25% of cold
     manifest-decode wall (measured: loads('{}') 1.4us, 8-key dict 3.8us)."""
     if not s or s == "{}":

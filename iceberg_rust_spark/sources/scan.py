@@ -42,7 +42,7 @@ from .manifest import (CONTENT_DATA, CONTENT_EQUALITY_DELETES,
                        ManifestColumns, ManifestEntry, ManifestFile,
                        read_manifest_list)
 from .metadata import Snapshot, TableMetadata
-from .types import Schema, type_to_spark
+from .types import Schema, sql_ident, type_to_spark
 
 
 # Per-entry weights of the cached kinds, measured with tracemalloc on
@@ -2300,7 +2300,7 @@ def _project_to_schema(gdf: DataFrame, file_schema: Schema, current: Schema,
             identity = False
             break
     if identity:
-        names = [f.name for f in current.fields]
+        names = [sql_ident(f.name) for f in current.fields]
         if keep_meta:
             names += ["_file", "_pos"]
             names += [x for x in ("_spec_id", "_partition", "_row_id",
@@ -2314,7 +2314,8 @@ def _project_to_schema(gdf: DataFrame, file_schema: Schema, current: Schema,
         old = file_schema.field_by_id(f.field_id)
         tgt = type_to_spark(f.field_type)
         if old is not None and old.name in gdf.columns:
-            cols.append(_project_nested(F.col(old.name), old.field_type,
+            cols.append(_project_nested(F.col(sql_ident(old.name)),
+                                        old.field_type,
                                         f.field_type, f.name).alias(f.name))
         elif f.initial_default is not None:
             cols.append(F.lit(f.initial_default).cast(tgt).alias(f.name))

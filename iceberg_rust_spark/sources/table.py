@@ -311,6 +311,50 @@ class Table:
                            "_last_updated_sequence_number")
         return df
 
+    def _write_position_deletes(self, spark: SparkSession,
+                                hits: DataFrame) -> List[Tuple[str, dict]]:
+        """Write (file_path, pos) rows as position-delete parquet files.
+        Range-partition by data-file path: delete writes distribute across
+        the cluster AND each output file covers a contiguous path range
+        (per-data-file locality for the read-side anti-join). AQE coalesces
+        the range partitions down to one for small delete sets, so local
+        tests still produce a single file; a billion-row delete fans out."""
+        out = os.path.join(self.location, "data",
+                           f"pos-del-{uuid.uuid4().hex[:12]}")
+        return write_parquet_listing(
+            spark, hits.repartitionByRange("file_path", "pos")
+                       .sortWithinPartitions("file_path", "pos"), out)
+
+    def _delete_files(self, entries: List[Tuple[str, dict]], content: int,
+                      equality_ids: Sequence[int] = ()) -> List[DataFile]:
+        schema_id = self.metadata.schema().schema_id
+        return [DataFile(file_path=p, content=content,
+                         record_count=st["num_rows"],
+                         file_size_in_bytes=st["size"],
+                         equality_ids=list(equality_ids),
+                         schema_id=schema_id, spec_id=self.spec.spec_id)
+                for p, st in entries]
+
+    def _equality_delete_files(self, spark: SparkSession, keys_df: DataFrame,
+                               names: List[str]) -> List[DataFile]:
+        """Write the distinct ``names`` tuples of ``keys_df`` as
+        equality-delete files. dropDuplicates already hash-shuffles on the
+        key columns; the write goes straight from that distributed
+        partitioning (AQE coalesces small sets to one file), never through
+        a single task."""
+        schema = self.metadata.schema()
+        eq_ids = []
+        for name in names:
+            f = schema.field_by_name(name)
+            if f is None:
+                raise ValueError(f"no column {name}")
+            eq_ids.append(f.field_id)
+        out = os.path.join(self.location, "data",
+                           f"eq-del-{uuid.uuid4().hex[:12]}")
+        entries = write_parquet_listing(
+            spark, keys_df.select(*names).dropDuplicates(), out)
+        return self._delete_files(entries, CONTENT_EQUALITY_DELETES, eq_ids)
+
     def _delete_mor_positional(self, spark: SparkSession, pred: E.Predicate) -> "Table":
         schema = self.metadata.schema()
         bound = E.bind(pred, schema)
@@ -318,16 +362,7 @@ class Table:
             .filter(E.to_spark_column(bound)) \
             .select(F.regexp_replace(F.col("_file"), "^file:/*", "/").alias("file_path"),
                     F.col("_pos").alias("pos"))
-        out = os.path.join(self.location, "data",
-                           f"pos-del-{uuid.uuid4().hex[:12]}")
-        # Range-partition by data-file path: delete writes distribute across
-        # the cluster AND each output file covers a contiguous path range
-        # (per-data-file locality for the read-side anti-join). AQE coalesces
-        # the range partitions down to one for small delete sets, so local
-        # tests still produce a single file; a billion-row delete fans out.
-        entries = write_parquet_listing(
-            spark, hits.repartitionByRange("file_path", "pos")
-                       .sortWithinPartitions("file_path", "pos"), out)
+        entries = self._write_position_deletes(spark, hits)
         # Per-delete-file file_path BOUNDS (Iceberg DeleteFileIndex's
         # pruning signal for path-position deletes): the range write above
         # makes each output file cover a contiguous file_path range, so the
@@ -351,6 +386,8 @@ class Table:
                 referenced_data_file=(lo if lo is not None and lo == hi
                                       else None),
                 schema_id=schema.schema_id, spec_id=self.spec.spec_id))
+        if not dels:
+            return self
         # conflict matrix: positions dangle if a concurrent rewrite removed
         # a referenced file — validate existence at commit (metadata-sized
         # distinct: data-FILE paths, never positions)
@@ -507,26 +544,10 @@ class Table:
                            eq_column_names: List[str]) -> "Table":
         """Merge-on-read equality delete: write the key tuples as an
         equality-delete file (writer/base_writer/equality_delete_writer.rs
-        counterpart)."""
-        schema = self.metadata.schema()
-        eq_ids = []
-        for name in eq_column_names:
-            f = schema.field_by_name(name)
-            if f is None:
-                raise ValueError(f"no column {name}")
-            eq_ids.append(f.field_id)
-        out = os.path.join(self.location, "data", f"eq-del-{uuid.uuid4().hex[:12]}")
-        # dropDuplicates already hash-shuffles on the key columns; write
-        # straight from that distributed partitioning (AQE coalesces small
-        # sets to one file) instead of funnelling through a single task.
-        entries = write_parquet_listing(
-            spark, keys_df.select(*eq_column_names).dropDuplicates(), out)
-        dels = [DataFile(file_path=p, content=CONTENT_EQUALITY_DELETES,
-                         record_count=st["num_rows"],
-                         file_size_in_bytes=st["size"],
-                         equality_ids=eq_ids,
-                         schema_id=schema.schema_id, spec_id=self.spec.spec_id)
-                for p, st in entries]
+        counterpart). An empty key set commits nothing."""
+        dels = self._equality_delete_files(spark, keys_df, eq_column_names)
+        if not dels:
+            return self
         return self._commit_retry(lambda m: self._snapshot_update(
             m, "delete", added_deletes=dels))
 
@@ -594,31 +615,14 @@ class Table:
         tuples are a narrow projection (typically <<1% of the data width),
         and applying them at read is a broadcast/left-anti join per task —
         no read-side shuffle of the fact table."""
-        schema = self.metadata.schema()
-        eq_ids = []
-        for name in key_columns:
-            f = schema.field_by_name(name)
-            if f is None:
-                raise ValueError(f"no column {name}")
-            eq_ids.append(f.field_id)
+        # ``delete_keys_df`` widens the delete set beyond the source rows
+        # (CDC apply: keys deleted at the source have no replacement row
+        # but must still be deleted). Keys go first: a bad key column
+        # fails before any data file is written.
+        dels = self._equality_delete_files(
+            spark, source_df if delete_keys_df is None else delete_keys_df,
+            key_columns)
         data_files = write_data_files(spark, source_df, self.metadata)
-        out = os.path.join(self.location, "data",
-                           f"eq-del-{uuid.uuid4().hex[:12]}")
-        # distributed key write: dropDuplicates' own hash shuffle is the
-        # partitioning; no single-task funnel (a billion-key MERGE would
-        # otherwise pass through one executor). ``delete_keys_df`` widens
-        # the delete set beyond the source rows (CDC apply: keys deleted at
-        # the source have no replacement row but must still be deleted).
-        keys_src = (delete_keys_df if delete_keys_df is not None
-                    else source_df)
-        entries = write_parquet_listing(
-            spark, keys_src.select(*key_columns).dropDuplicates(), out)
-        dels = [DataFile(file_path=p, content=CONTENT_EQUALITY_DELETES,
-                         record_count=st["num_rows"],
-                         file_size_in_bytes=st["size"],
-                         equality_ids=eq_ids,
-                         schema_id=schema.schema_id, spec_id=self.spec.spec_id)
-                for p, st in entries]
         return self._commit_retry(lambda m: self._snapshot_update(
             m, "overwrite", added=data_files, added_deletes=dels,
             extra_summary=extra_summary))
@@ -909,18 +913,8 @@ class Table:
         hits = (spark.read.parquet(*del_paths)
                 .select("file_path", "pos")
                 .join(F.broadcast(live_df), "file_path", "left_semi"))
-        out = os.path.join(self.location, "data",
-                           f"pos-del-{uuid.uuid4().hex[:12]}")
-        entries = write_parquet_listing(
-            spark, hits.repartitionByRange("file_path", "pos")
-                       .sortWithinPartitions("file_path", "pos"), out)
-        schema = self.metadata.schema()
-        dels = [DataFile(file_path=p, content=CONTENT_POSITION_DELETES,
-                         record_count=st["num_rows"],
-                         file_size_in_bytes=st["size"],
-                         schema_id=schema.schema_id,
-                         spec_id=self.spec.spec_id)
-                for p, st in entries if st["num_rows"] > 0]
+        dels = self._delete_files(self._write_position_deletes(spark, hits),
+                                  CONTENT_POSITION_DELETES)
         removed = {f.file_path for f in old_dels}
         return self._commit_retry(lambda m: self._snapshot_update(
             m, "replace", added_deletes=dels, removed_paths=removed,
@@ -963,18 +957,8 @@ class Table:
             .select(norm(F.col("_file")).alias("file_path"),
                     F.col("_pos").alias("pos"))
         hits = base.join(live, ["file_path", "pos"], "left_anti")
-        out = os.path.join(self.location, "data",
-                           f"pos-del-{uuid.uuid4().hex[:12]}")
-        entries = write_parquet_listing(
-            spark, hits.repartitionByRange("file_path", "pos")
-                       .sortWithinPartitions("file_path", "pos"), out)
-        schema = self.metadata.schema()
-        dels = [DataFile(file_path=p, content=CONTENT_POSITION_DELETES,
-                         record_count=st["num_rows"],
-                         file_size_in_bytes=st["size"],
-                         schema_id=schema.schema_id,
-                         spec_id=self.spec.spec_id)
-                for p, st in entries if st["num_rows"] > 0]
+        dels = self._delete_files(self._write_position_deletes(spark, hits),
+                                  CONTENT_POSITION_DELETES)
         return self._commit_retry(lambda m: self._snapshot_update(
             m, "replace", added_deletes=dels, removed_paths=eq_paths,
             extra_summary={"removed-delete-files": str(len(eq_paths))}))

@@ -260,6 +260,13 @@ _PRIM_TO_SPARK = {
 }
 
 
+def sql_ident(name: str) -> str:
+    """A column name as a Spark SQL identifier: backticks around it, each
+    embedded backtick doubled (so ``F.col`` reads dots and backticks in a
+    name literally)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def type_to_spark(t: IcebergType) -> T.DataType:
     if isinstance(t, PrimitiveType):
         if t.name.startswith("decimal"):

@@ -10,12 +10,12 @@ Spark-first reshape of the reference's write stack (§2.1 of SURVEY.md):
   ``spark.sql.files.maxRecordsPerFile`` via ``write.target-file-size-bytes`` /
   estimated row width;
 - per-file column metrics (writer/file_writer/parquet_writer.rs:432-487) ->
-  distributed Parquet footer scan (``sparkContext.parallelize(files)
-  .mapPartitions``) so metric collection scales with the cluster, never the
-  driver. Parquet footers carry no NaN counts, so ``nan_value_counts`` is
-  back-filled by one column-pruned aggregate over the written files
-  (``collect_nan_counts``; disable per table via
-  ``write.metadata.nan-counts.enabled=false``) => is_nan/not_nan prune.
+  one metrics pass per written file, distributed (``sparkContext
+  .parallelize(files).mapPartitions``): ``_footer_stats`` reads the footer
+  and counts NaNs in the top-level float/double columns, which footers lack
+  (=> is_nan/not_nan prune). ``data_file_from_stats`` is the one stats ->
+  DataFile rule, shared with the DataSource writer. Zero-row files are
+  dropped, never committed.
 
 Distribution modes (write.distribution-mode table property, like Iceberg's):
   none   — no shuffle before write (fanout writers per task)
@@ -39,7 +39,7 @@ from ..functions.transforms import Transform
 from .datum import date_from_days, ts_from_micros
 from .manifest import CONTENT_DATA, DataFile
 from .metadata import PartitionSpec, TableMetadata
-from .types import (IcebergType, NestedField, PrimitiveType, Schema,
+from .types import (IcebergType, PrimitiveType, Schema, sql_ident,
                     type_to_spark)
 
 HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
@@ -57,7 +57,7 @@ def align_df_to_schema(df: DataFrame, schema: Schema,
     for f in schema.fields:
         tgt = type_to_spark(f.field_type)
         if f.name in df_cols:
-            cols.append(F.col(f.name).cast(tgt).alias(f.name))
+            cols.append(F.col(sql_ident(f.name)).cast(tgt).alias(f.name))
         elif f.write_default is not None:
             cols.append(F.lit(f.write_default).cast(tgt).alias(f.name))
         elif f.required:
@@ -66,7 +66,7 @@ def align_df_to_schema(df: DataFrame, schema: Schema,
             cols.append(F.lit(None).cast(tgt).alias(f.name))
     for name in keep_extra:
         if name in df_cols:
-            cols.append(F.col(name))
+            cols.append(F.col(sql_ident(name)))
     return df.select(*cols)
 
 
@@ -119,12 +119,13 @@ def write_data_files(spark: SparkSession, df: DataFrame, metadata: TableMetadata
     if pcols:
         for pname, srcname, transform, styp in pcols:
             writer_df = writer_df.withColumn(
-                pname, transform.spark_column(F.col(srcname), styp))
+                pname, transform.spark_column(F.col(sql_ident(srcname)), styp))
         names = [p[0] for p in pcols]
+        pkeys = [F.col(sql_ident(n)) for n in names]
         if mode == "hash":
-            writer_df = writer_df.repartition(*[F.col(n) for n in names])
+            writer_df = writer_df.repartition(*pkeys)
         if sort_cols or mode == "range":
-            writer_df = writer_df.sortWithinPartitions(*(names + sort_cols))
+            writer_df = writer_df.sortWithinPartitions(*(pkeys + sort_cols))
         writer = writer_df.write.partitionBy(*names)
     else:
         if sort_cols:
@@ -147,37 +148,57 @@ def write_data_files(spark: SparkSession, df: DataFrame, metadata: TableMetadata
     writer.mode("errorifexists").parquet(write_root)
 
     files = _list_parquet_files(write_root)
-    stats = collect_parquet_stats(spark, files)
-    nan_counts = collect_nan_counts(spark, write_root, schema,
-                                    metadata.properties)
-
-    data_files: List[DataFile] = []
-    for path in sorted(files):
-        st = stats[path]
-        if st["num_rows"] == 0:
-            # a task with an empty input partition still emits a parquet
-            # file; Iceberg writers never commit zero-row files — drop the
-            # file instead of polluting manifests (and all_files) with it
-            try:
-                os.remove(path)
-            except OSError:
-                pass
-            continue
-        partition = _parse_partition_from_path(path, write_root, pcols)
-        _apply_metrics_modes(st, schema, metadata.properties)
-        data_files.append(DataFile(
-            file_path=publish(path), file_format="parquet",
-            content=CONTENT_DATA,
-            partition=partition,
-            record_count=st["num_rows"], file_size_in_bytes=st["size"],
-            column_sizes=st["column_sizes"], value_counts=st["value_counts"],
-            null_value_counts=st["null_counts"],
-            nan_value_counts=nan_counts.get(path, {}),
-            lower_bounds=st["lower"], upper_bounds=st["upper"],
-            split_offsets=st["split_offsets"],
-            schema_id=schema.schema_id, spec_id=spec.spec_id))
+    stats = collect_parquet_stats(spark, files,
+                                  nan_columns=nan_columns(schema))
+    data_files = [data_file_from_stats(
+        publish(path), stats[path],
+        _parse_partition_from_path(path, write_root, pcols),
+        schema, spec.spec_id, metadata.properties)
+        for path in _drop_empty(files, stats)]
     stage_cleanup()
     return data_files
+
+
+def nan_columns(schema: Schema) -> Tuple[str, ...]:
+    """Top-level float/double column names: the columns whose NaN counts
+    the footer task collects."""
+    return tuple(f.name for f in schema.fields
+                 if isinstance(f.field_type, PrimitiveType)
+                 and f.field_type.name in ("float", "double"))
+
+
+def data_file_from_stats(path: str, st: dict, partition: Dict[str, Any],
+                         schema: Schema, spec_id: int,
+                         properties: Dict[str, str]) -> DataFile:
+    """The one rule from a written data file's footer stats to its
+    DataFile: the table's metrics modes applied, NaN counts carried."""
+    _apply_metrics_modes(st, properties)
+    return DataFile(
+        file_path=path, file_format="parquet", content=CONTENT_DATA,
+        partition=partition,
+        record_count=st["num_rows"], file_size_in_bytes=st["size"],
+        column_sizes=st["column_sizes"], value_counts=st["value_counts"],
+        null_value_counts=st["null_counts"],
+        nan_value_counts=st["nan_counts"],
+        lower_bounds=st["lower"], upper_bounds=st["upper"],
+        split_offsets=st["split_offsets"],
+        schema_id=schema.schema_id, spec_id=spec_id)
+
+
+def _drop_empty(files: List[str], stats: Dict[str, dict]) -> List[str]:
+    """``files`` sorted, minus zero-row ones, which are removed: an empty
+    input partition still emits a parquet file, and Iceberg writers never
+    commit one (a 0-row delete file would attach to every scan task)."""
+    kept = []
+    for path in sorted(files):
+        if stats[path]["num_rows"] > 0:
+            kept.append(path)
+            continue
+        try:
+            os.remove(path)
+        except OSError:
+            pass
+    return kept
 
 
 def _parquet_writer_options(properties: Dict[str, str]) -> Dict[str, str]:
@@ -254,7 +275,8 @@ def _sort_columns(metadata: TableMetadata) -> List[Any]:
             f = schema.field_by_id(sf.source_id)
             if f is None:
                 continue
-            c = sf.transform.spark_column(F.col(f.name), f.field_type)
+            c = sf.transform.spark_column(F.col(sql_ident(f.name)),
+                                          f.field_type)
             cols.append(c.desc() if sf.direction == "desc" else c.asc())
     return cols
 
@@ -268,13 +290,14 @@ def _list_parquet_files(root: str) -> List[str]:
 def write_parquet_listing(spark: SparkSession, df: DataFrame,
                           out: str) -> List[Tuple[str, dict]]:
     """Write ``df`` as parquet under ``out`` (FileIO-staged when the scheme
-    isn't spark_native) and return [(final_path, stats)] sorted by path —
-    the shared shape of every delete/key-file writer in table.py."""
+    isn't spark_native) and return [(final_path, stats)] sorted by path,
+    zero-row files dropped — the shared shape of every delete/key-file
+    writer in table.py."""
     root, publish, stage_cleanup = stage_for(out)
     df.write.option("maxRecordsPerFile", 8_000_000).parquet(root)
     files = _list_parquet_files(root)
     stats = collect_parquet_stats(spark, files)
-    out_pairs = [(publish(p), stats[p]) for p in sorted(files)]
+    out_pairs = [(publish(p), stats[p]) for p in _drop_empty(files, stats)]
     stage_cleanup()
     return out_pairs
 
@@ -316,12 +339,14 @@ def stage_for(out_dir: str):
 
 
 def collect_parquet_stats(spark: SparkSession, files: List[str],
-                          fileio=None) -> Dict[str, dict]:
+                          fileio=None,
+                          nan_columns: Tuple[str, ...] = ()) -> Dict[str, dict]:
     """Distributed footer scan: executors read Parquet footers with pyarrow;
     only tiny per-file stat dicts return to the driver. At 100 TB this is one
-    short all-metadata job, never a driver loop over data. With ``fileio``
-    (a picklable executor_reads FileIO) footers come through range reads of
-    the remote objects instead of local opens."""
+    short job that reads metadata plus the ``nan_columns`` chunks, never a
+    driver loop over data. With ``fileio`` (a picklable executor_reads
+    FileIO) footers come through range reads of the remote objects instead
+    of local opens."""
     if not files:
         return {}
     n_slices = max(1, min(len(files), 256))
@@ -334,10 +359,12 @@ def collect_parquet_stats(spark: SparkSession, files: List[str],
                 if fileio is not None:
                     from .executor_io import FileIORandomFile
                     f = FileIORandomFile(fileio, p)
-                    yield p, _footer_stats(_pq, f, size=f.size())
+                    yield p, _footer_stats(_pq, f, size=f.size(),
+                                           nan_columns=nan_columns)
                 else:
                     yield p, _footer_stats(
-                        _pq, p[7:] if p.startswith("file://") else p)
+                        _pq, p[7:] if p.startswith("file://") else p,
+                        nan_columns=nan_columns)
             except Exception as exc:  # surface, don't swallow
                 yield p, {"error": str(exc)}
 
@@ -346,10 +373,11 @@ def collect_parquet_stats(spark: SparkSession, files: List[str],
     if errs:
         # pyarrow's thrift schema can lag the writer's: e.g. Spark 4 VARIANT
         # footers raise "Thrift LogicalType that is not recognized". Spark
-        # just wrote these files, so fall back to a Spark-side row count and
-        # leave column bounds empty — the metrics evaluator then treats the
-        # files as always-might-match (prune loss, never wrong results).
-        result.update(_spark_fallback_stats(spark, sorted(errs)))
+        # just wrote these files, so fall back to Spark-side row and NaN
+        # counts, no bounds — the metrics evaluator then treats the files as
+        # always-might-match (prune loss, never wrong results).
+        result.update(_spark_fallback_stats(spark, sorted(errs),
+                                            nan_columns))
     return result
 
 
@@ -374,8 +402,7 @@ def _truncate_upper(s: str, width: int) -> Optional[str]:
     return None
 
 
-def _apply_metrics_modes(st: dict, schema: Schema,
-                         properties: Dict[str, str]) -> None:
+def _apply_metrics_modes(st: dict, properties: Dict[str, str]) -> None:
     """Public Iceberg metrics modes (write.metadata.metrics.default /
     .column.<name>; spec default ``truncate(16)``): ``none`` drops the
     column's stats, ``counts`` keeps counts but no bounds, ``truncate(N)``
@@ -394,8 +421,8 @@ def _apply_metrics_modes(st: dict, schema: Schema,
         if mode == "full":
             continue
         if mode == "none":
-            for key in ("value_counts", "null_counts", "lower", "upper",
-                        "column_sizes"):
+            for key in ("value_counts", "null_counts", "nan_counts",
+                        "lower", "upper", "column_sizes"):
                 st[key].pop(col, None)
             continue
         if mode == "counts":
@@ -428,48 +455,11 @@ def _apply_metrics_modes(st: dict, schema: Schema,
                 st["upper"].pop(col, None)
 
 
-def collect_nan_counts(spark: SparkSession, out_dir: str, schema: Schema,
-                       properties: Dict[str, str]) -> Dict[str, Dict[str, int]]:
-    """Per-file NaN counts for top-level float/double columns.
-
-    The reference counts NaNs in-stream while writing
-    (writer/file_writer/parquet_writer.rs:432-487 MinMaxColAggregator);
-    Spark's native parquet writer can't, and footers carry no NaN stats,
-    so we run ONE column-pruned distributed aggregate over the files just
-    written — only the float/double columns are read, grouped by
-    ``_metadata.file_path``. Skipped entirely when the schema has no
-    float/double columns or ``write.metadata.nan-counts.enabled=false``
-    (the knob for 100 TB float-heavy writes where the re-scan isn't worth
-    is_nan/not_nan pruning)."""
-    if properties.get("write.metadata.nan-counts.enabled",
-                      "true").lower() != "true":
-        return {}
-    float_cols = [f.name for f in schema.fields
-                  if isinstance(f.field_type, PrimitiveType)
-                  and f.field_type.name in ("float", "double")]
-    if not float_cols:
-        return {}
-
-    def bare(p: str) -> str:
-        from urllib.parse import unquote
-        p = unquote(p)  # _metadata.file_path is URI-spelled (%20 etc.)
-        return p[len("file://"):] if p.startswith("file://") else \
-            (p[len("file:"):] if p.startswith("file:") else p)
-
-    df = spark.read.parquet(out_dir)
-    present = set(df.columns)
-    float_cols = [c for c in float_cols if c in present]
-    if not float_cols:
-        return {}
-    aggs = [F.sum(F.when(F.isnan(F.col(c)), 1).otherwise(0)).alias(c)
-            for c in float_cols]
-    rows = (df.groupBy(F.col("_metadata.file_path").alias("__fp"))
-            .agg(*aggs).collect())
-    return {bare(r["__fp"]): {c: int(r[c]) for c in float_cols}
-            for r in rows}
-
-
-def _spark_fallback_stats(spark: SparkSession, files: List[str]) -> Dict[str, dict]:
+def _spark_fallback_stats(spark: SparkSession, files: List[str],
+                          nan_columns: Tuple[str, ...] = ()
+                          ) -> Dict[str, dict]:
+    """Row and NaN counts for files whose footer pyarrow cannot parse: one
+    grouped aggregate by ``_metadata.file_path`` over all of them."""
     import re as _re
     from .io import file_io_for
 
@@ -480,28 +470,38 @@ def _spark_fallback_stats(spark: SparkSession, files: List[str]) -> Dict[str, di
         from urllib.parse import unquote
         return _re.sub(r"^file:/+", "/", unquote(p))
 
-    per_file = (spark.read.parquet(*files)
-                .groupBy(F.col("_metadata.file_path").alias("p"))
-                .count().collect())
-    counts = {bare_path(r["p"]): r["count"] for r in per_file}
+    df = spark.read.parquet(*files)
+    nan_cols = [c for c in nan_columns if c in df.columns]
+    per_file = (df.groupBy(F.col("_metadata.file_path").alias("p"))
+                .agg(F.count(F.lit(1)).alias("n"),
+                     *[F.sum(F.isnan(F.col(sql_ident(c))).cast("long"))
+                       .alias(f"nan{i}") for i, c in enumerate(nan_cols)])
+                .collect())
+    rows = {bare_path(r["p"]): r for r in per_file}
     out = {}
     for p in files:
         # a file with zero rows yields no groupBy row at all — that's a
         # legitimate empty file, not a failed attribution
-        out[p] = {"num_rows": counts.get(bare_path(p), 0),
+        r = rows.get(bare_path(p))
+        out[p] = {"num_rows": r["n"] if r else 0,
                   "size": file_io_for(p).size(p),
                   "column_sizes": {}, "value_counts": {}, "null_counts": {},
+                  "nan_counts": {c: int(r[f"nan{i}"] or 0) if r else 0
+                                 for i, c in enumerate(nan_cols)},
                   "lower": {}, "upper": {}, "split_offsets": []}
     return out
 
 
-def _footer_stats(_pq, path, size: Optional[int] = None) -> dict:
-    """``path`` is a local path OR a seekable file-like (FileIO-backed
-    remote object); pass ``size`` explicitly for the latter."""
+def _footer_stats(_pq, path, size: Optional[int] = None,
+                  nan_columns: Tuple[str, ...] = ()) -> dict:
+    """One file's metrics keyed by dotted column path (nested ``s.id``
+    never merges into top-level ``id``); NaN counts read just the
+    ``nan_columns`` chunks. ``path`` is a local path OR a seekable file-like
+    (FileIO-backed remote object); pass ``size`` explicitly for the latter."""
     pf = _pq.ParquetFile(path)
     md = pf.metadata
     ncols = md.num_columns
-    names = [md.schema.column(i).name for i in range(ncols)]
+    names = [md.schema.column(i).path for i in range(ncols)]
     value_counts: Dict[str, int] = {}
     null_counts: Dict[str, int] = {}
     column_sizes: Dict[str, int] = {}
@@ -527,10 +527,16 @@ def _footer_stats(_pq, path, size: Optional[int] = None) -> dict:
                     lower[name] = mn
                 if name not in upper or _cmp_lt(upper[name], mx):
                     upper[name] = mx
+    import pyarrow.compute as pc
+    present = [c for c in nan_columns if c in pf.schema_arrow.names]
+    tbl = pf.read(columns=present, use_threads=False) if present else None
+    nan_counts = {c: pc.sum(pc.is_nan(tbl.column(c))).as_py() or 0
+                  for c in present}
     return {"num_rows": md.num_rows,
             "size": os.path.getsize(path) if size is None else size,
             "column_sizes": column_sizes, "value_counts": value_counts,
-            "null_counts": null_counts, "lower": lower, "upper": upper,
+            "null_counts": null_counts, "nan_counts": nan_counts,
+            "lower": lower, "upper": upper,
             "split_offsets": split_offsets}
 
 

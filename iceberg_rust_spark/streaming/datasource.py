@@ -511,6 +511,7 @@ class _IcebergWriter(DataSourceArrowWriter):
     side minimizes file counts exactly like distribution-mode `hash`."""
 
     def __init__(self, options, schema: StructType, overwrite: bool):
+        from ..sources.write import nan_columns
         t = _load_table(options)
         md_schema = t.metadata.schema()
         self._spec_fields = []
@@ -532,11 +533,13 @@ class _IcebergWriter(DataSourceArrowWriter):
         self._names = table_names
         self._write_dir = os.path.join(t.location, "data",
                                        f"ds-{uuid.uuid4().hex[:12]}")
-        self._schema_id = t.metadata.schema().schema_id
+        self._schema = md_schema
+        self._nan_columns = nan_columns(md_schema)
+        self._properties = dict(t.metadata.properties)
         self._spec_id = t.metadata.spec().spec_id
-        self._compression = t.metadata.properties.get(
+        self._compression = self._properties.get(
             "write.parquet.compression-codec", "zstd")
-        self._target_bytes = int(t.metadata.properties.get(
+        self._target_bytes = int(self._properties.get(
             "write.target-file-size-bytes", 512 * 1024 * 1024))
 
     def _partition_frame(self, tbl):
@@ -589,8 +592,7 @@ class _IcebergWriter(DataSourceArrowWriter):
         import pyarrow.parquet as pq
 
         from pyspark import TaskContext
-        from ..sources.manifest import CONTENT_DATA, DataFile
-        from ..sources.write import _footer_stats
+        from ..sources.write import _footer_stats, data_file_from_stats
 
         batches = [b for b in iterator if b.num_rows]
         if not batches:
@@ -600,23 +602,14 @@ class _IcebergWriter(DataSourceArrowWriter):
         part = tc.partitionId() if tc else 0
         os.makedirs(self._write_dir, exist_ok=True)
 
-        def emit(sub_tbl, partition, seq: int) -> DataFile:
+        def emit(sub_tbl, partition, seq: int):
             path = os.path.join(
                 self._write_dir,
                 f"part-{part:05d}-{uuid.uuid4().hex[:8]}-{seq}.parquet")
             pq.write_table(sub_tbl, path, compression=self._compression)
-            st = _footer_stats(pq, path)
-            return DataFile(
-                file_path=path, file_format="parquet", content=CONTENT_DATA,
-                partition=partition, record_count=st["num_rows"],
-                file_size_in_bytes=st["size"],
-                column_sizes=st["column_sizes"],
-                value_counts=st["value_counts"],
-                null_value_counts=st["null_counts"],
-                nan_value_counts={}, lower_bounds=st["lower"],
-                upper_bounds=st["upper"],
-                split_offsets=st["split_offsets"],
-                schema_id=self._schema_id, spec_id=self._spec_id)
+            st = _footer_stats(pq, path, nan_columns=self._nan_columns)
+            return data_file_from_stats(path, st, partition, self._schema,
+                                        self._spec_id, self._properties)
 
         # rolling (rolling_writer.rs counterpart): split any write unit
         # whose IN-MEMORY arrow size exceeds the target file size — one

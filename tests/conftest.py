@@ -1,10 +1,12 @@
+import os
 import shutil
 import sys
 import uuid
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# this checkout first, whichever directory it lives in
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 @pytest.fixture(scope="session")

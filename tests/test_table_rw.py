@@ -277,9 +277,9 @@ def test_partition_summaries_in_snapshot(spark, warehouse, lineitem):
 
 def test_nan_counts_collected_and_pruned(spark, warehouse):
     """nan_value_counts parity (reference MinMaxColAggregator,
-    parquet_writer.rs:432-487): the write path back-fills per-file NaN
-    counts with one column-pruned aggregate, and the metrics evaluator
-    prunes is_nan scans down to files that actually contain NaNs."""
+    parquet_writer.rs:432-487): the footer task counts per-file NaNs, and
+    the metrics evaluator prunes is_nan scans down to files that actually
+    contain NaNs."""
     nan = float("nan")
     df = spark.createDataFrame(
         [(1, "a", 1.0), (2, "a", nan), (3, "b", 2.0), (4, "b", 3.0)],
@@ -300,15 +300,6 @@ def test_nan_counts_collected_and_pruned(spark, warehouse):
     assert len(plan.tasks) == 1 and plan.skipped_by_metrics == 1
     assert t.scan(row_filter=E.col("v").is_nan()).to_df(spark).count() == 1
     assert t.scan(row_filter=E.col("v").not_nan()).to_df(spark).count() == 3
-
-    # knob off: no re-scan, metrics stay unknown (conservative evaluator)
-    t2 = Table.create(
-        warehouse, "db.nan_off", schema_from_spark(df.schema),
-        properties={"write.metadata.nan-counts.enabled": "false"}) \
-        .append(spark, df)
-    tasks = t2.scan().plan_files().tasks
-    assert all(task.data_file.nan_value_counts == {} for task in tasks)
-    assert t2.scan(row_filter=E.col("v").is_nan()).to_df(spark).count() == 1
 
 
 def test_history_marks_rolled_back_snapshots(spark, warehouse):

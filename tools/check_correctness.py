@@ -19,7 +19,8 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# this checkout first, whichever directory it lives in
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from iceberg_rust_spark.session import get_spark
