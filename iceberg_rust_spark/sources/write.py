@@ -149,7 +149,7 @@ def write_data_files(spark: SparkSession, df: DataFrame, metadata: TableMetadata
 
     files = _list_parquet_files(write_root)
     stats = collect_parquet_stats(spark, files,
-                                  nan_columns=nan_columns(schema))
+                                  nan_columns=float_columns(schema))
     data_files = [data_file_from_stats(
         publish(path), stats[path],
         _parse_partition_from_path(path, write_root, pcols),
@@ -159,7 +159,7 @@ def write_data_files(spark: SparkSession, df: DataFrame, metadata: TableMetadata
     return data_files
 
 
-def nan_columns(schema: Schema) -> Tuple[str, ...]:
+def float_columns(schema: Schema) -> Tuple[str, ...]:
     """Top-level float/double column names: the columns whose NaN counts
     the footer task collects."""
     return tuple(f.name for f in schema.fields

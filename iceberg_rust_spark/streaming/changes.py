@@ -598,10 +598,10 @@ def net_changes(changes: DataFrame, keys: List[str]) -> DataFrame:
     # inserted within the window have no pre-image); post-image likewise
     has_d = f"_first._change_type = '{DELETE}'"
     has_i = f"_last._change_type = '{INSERT}'"
-    d_struct = ("struct(" + ", ".join(f"_first.{sql_ident(c)}" for c in val_cols)
-                + ")")
-    i_struct = ("struct(" + ", ".join(f"_last.{sql_ident(c)}" for c in val_cols)
-                + ")")
+    d_struct = ("struct("
+                + ", ".join(f"_first.{sql_ident(c)}" for c in val_cols) + ")")
+    i_struct = ("struct("
+                + ", ".join(f"_last.{sql_ident(c)}" for c in val_cols) + ")")
     changed = (f"(NOT ({has_d}) OR NOT ({has_i}) "
                f"OR NOT ({d_struct} <=> {i_struct}))")
     # ONE pass over the aggregate (r14, guide §2.4): the former
@@ -628,7 +628,8 @@ def net_changes(changes: DataFrame, keys: List[str]) -> DataFrame:
             .selectExpr(f"explode(array(if({has_d}, {d_named}, null), "
                         f"if({has_i}, {i_named}, null))) AS _r")
             .where("_r IS NOT NULL")
-            .selectExpr(*[f"_r.{sql_ident(c)} AS {sql_ident(c)}" for c in val_cols],
+            .selectExpr(*[f"_r.{sql_ident(c)} AS {sql_ident(c)}"
+                          for c in val_cols],
                         "_r._change_type AS _change_type"))
 
 

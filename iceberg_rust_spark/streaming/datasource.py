@@ -511,7 +511,7 @@ class _IcebergWriter(DataSourceArrowWriter):
     side minimizes file counts exactly like distribution-mode `hash`."""
 
     def __init__(self, options, schema: StructType, overwrite: bool):
-        from ..sources.write import nan_columns
+        from ..sources.write import float_columns
         t = _load_table(options)
         md_schema = t.metadata.schema()
         self._spec_fields = []
@@ -534,7 +534,7 @@ class _IcebergWriter(DataSourceArrowWriter):
         self._write_dir = os.path.join(t.location, "data",
                                        f"ds-{uuid.uuid4().hex[:12]}")
         self._schema = md_schema
-        self._nan_columns = nan_columns(md_schema)
+        self._nan_columns = float_columns(md_schema)
         self._properties = dict(t.metadata.properties)
         self._spec_id = t.metadata.spec().spec_id
         self._compression = self._properties.get(

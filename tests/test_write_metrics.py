@@ -10,6 +10,7 @@ from iceberg_rust_spark import (PartitionField, PartitionSpec, Table,
                                 expr as E)
 from iceberg_rust_spark.functions.transforms import parse_transform
 from iceberg_rust_spark.sources.types import schema_from_spark
+from iceberg_rust_spark.sources.write import _spark_fallback_stats
 from iceberg_rust_spark.streaming.datasource import register
 
 NAN = float("nan")
@@ -70,6 +71,13 @@ def test_nan_counts_match_old_rule_for_append_and_datasource(spark,
         assert total == expect_total
         got = t.scan(row_filter=E.col("v").is_nan()).to_df(spark).count()
         assert got == expect_total["v"]
+    # files pyarrow cannot parse (VARIANT footers) take the Spark fallback,
+    # which counts NaNs in its one grouped aggregate
+    paths = [task.data_file.file_path
+             for task in t_app.scan().plan_files().tasks]
+    fallback = _spark_fallback_stats(spark, paths, ("v", "w"))
+    assert {p: st["nan_counts"] for p, st in fallback.items()} == {
+        p: _old_rule_nan_counts(spark, p, ["v", "w"]) for p in paths}
 
 
 def test_append_with_double_column_launches_no_extra_jobs(spark, warehouse):
