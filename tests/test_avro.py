@@ -469,7 +469,10 @@ def _norm_enc(v):
     if isinstance(v, dt.date):
         return days_from_date(v)
     if isinstance(v, Decimal):
-        return str(v.normalize())   # scale-insensitive: 0.00 == 0
+        # scale-insensitive (0.00 == 0), in plain notation: a decimal
+        # partition value is exported as str(v), which writes 6250 where
+        # str(v.normalize()) would write 6.25E+3
+        return format(v.normalize(), "f")
     return v
 
 
