@@ -1593,7 +1593,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Round-12 rotation: rows whose BEHAVIOR changed this round lead —
     # every iceberg_* row rides the array plan (every plan_files call,
     # filtered or not: bulk delete attachment via
-    # _DeleteFileIndex.match_arrays, per-(manifest, delete-set) memo for
+    # _DeleteFileIndex.match_many, per-(manifest, delete-set) memo for
     # full scans, fast-group to_df by delete signature) and the
     # run-deduplicated partition_groups routing; iceberg_fast_count
     # exercises the delete-aware array count_rows; iceberg_join_pruned /

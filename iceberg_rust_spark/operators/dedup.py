@@ -383,6 +383,63 @@ def embedding_cosine_pairs(emb: DataFrame, threshold: float = 0.95,
             .select("id_a", "id_b", "sim"))
 
 
+def _lsh_cell_pairs(pdf, id_col: str, floor: float):
+    """Candidate pairs of one shuffle partition of ``embedding_lsh_pairs``'
+    fanned rows: within each (table, bucket, cell) group, pairs whose
+    normalized dot product is >= ``floor``. Yields one DataFrame of
+    ``(id_a, id_b, _va, _vb)`` per matmul block, so what is held is one
+    block's pairs (a sims block of ~2^21 cells), never the partition's.
+
+    Each pair carries both stored vectors: the old shape emitted ids only
+    and re-attached vectors via two joins back to the checkpointed base.
+    Survivor pairs are the near-duplicates, so the carried payload is
+    2*dim doubles per emitted row, far cheaper than re-joining the
+    corpus."""
+    import numpy as np
+    import pandas as pd
+
+    def frame(ids_i, ids_j, raw_i, raw_j, ii, jj):
+        a_min = ids_i[ii] < ids_j[jj]
+        return pd.DataFrame({
+            "id_a": np.where(a_min, ids_i[ii], ids_j[jj]).astype("int64"),
+            "id_b": np.where(a_min, ids_j[jj], ids_i[ii]).astype("int64"),
+            "_va": pd.Series(np.where(a_min, raw_i[ii], raw_j[jj]),
+                             dtype="object"),
+            "_vb": pd.Series(np.where(a_min, raw_j[jj], raw_i[ii]),
+                             dtype="object")})
+
+    for (_t, _b, ci, cj), g in pdf.groupby(
+            ["_t", "_bucket", "_ci", "_cj"], sort=False):
+        if len(g) < 2:
+            continue
+        mat = np.stack(g["_v"].to_numpy()).astype("float64")
+        norms = np.sqrt((mat * mat).sum(axis=1))
+        norms[norms == 0.0] = 1.0
+        unit = mat / norms[:, None]
+        ids = g[id_col].to_numpy()
+        raw = g["_v"].to_numpy()
+        if ci == cj:
+            # in-cell pairs: chunk rows so the sims block stays ~16 MB
+            step = max(1, (1 << 21) // max(len(unit), 1))
+            for lo in range(0, len(unit), step):
+                sims = unit[lo:lo + step] @ unit.T
+                r, c = np.nonzero(sims >= floor)
+                keep = (lo + r) < c  # upper triangle only
+                if keep.any():
+                    yield frame(ids, ids, raw, raw, lo + r[keep], c[keep])
+        else:
+            lmask = (g["_salt"] == ci).to_numpy()
+            left, right = unit[lmask], unit[~lmask]
+            if len(left) and len(right):
+                step = max(1, (1 << 21) // max(len(right), 1))
+                for lo in range(0, len(left), step):
+                    sims = left[lo:lo + step] @ right.T
+                    r, c = np.nonzero(sims >= floor)
+                    if len(r):
+                        yield frame(ids[lmask], ids[~lmask], raw[lmask],
+                                    raw[~lmask], lo + r, c)
+
+
 def embedding_lsh_pairs(emb: DataFrame, threshold: float = 0.95,
                         n_tables: int = 12, n_planes: Optional[int] = None,
                         id_col: str = "vec_id",
@@ -497,72 +554,15 @@ def embedding_lsh_pairs(emb: DataFrame, threshold: float = 0.95,
         # ONE Python round-trip per shuffle PARTITION, buckets separated by
         # a vectorized pandas groupby inside it: measured 2.6x faster than
         # applyInPandas's per-group worker round-trip (thousands of tiny
-        # bucket groups dominated small-input wall time). Memory = one
-        # shuffle partition's fanned rows in pandas — governed by
-        # spark.sql.shuffle.partitions like any shuffle, while each salted
-        # cell within it stays <= ~2*bucket_cap rows for the matmul.
-        #
-        # Each surviving pair is emitted WITH both stored vectors (r14,
-        # guide §2.4): the old shape emitted ids only and re-attached
-        # vectors via two joins back to the checkpointed base — two extra
-        # joins + base reads whose only purpose was data the kernel
-        # already held. Survivor pairs are the near-duplicates (a bounded
-        # fraction of the corpus), so the carried payload is 2*dim doubles
-        # per emitted row, far cheaper than re-joining the corpus.
+        # bucket groups dominated small-input wall time). Input memory =
+        # one shuffle partition's fanned rows in pandas — governed by
+        # spark.sql.shuffle.partitions like any shuffle; the pairs stream
+        # out per matmul block (_lsh_cell_pairs).
         import pandas as pd
         chunks = list(iter_pdf)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        out_a, out_b, out_va, out_vb = [], [], [], []
-
-        def emit(ids_i, ids_j, vecs, ii, jj):
-            a_min = ids_i[ii] < ids_j[jj]
-            out_a.append(np.where(a_min, ids_i[ii], ids_j[jj]))
-            out_b.append(np.where(a_min, ids_j[jj], ids_i[ii]))
-            out_va.extend(np.where(a_min, vecs[0][ii], vecs[1][jj]))
-            out_vb.extend(np.where(a_min, vecs[1][jj], vecs[0][ii]))
-
-        for (_t, _b, ci, cj), g in pdf.groupby(
-                ["_t", "_bucket", "_ci", "_cj"], sort=False):
-            if len(g) < 2:
-                continue
-            mat = np.stack(g["_v"].to_numpy()).astype("float64")
-            norms = np.sqrt((mat * mat).sum(axis=1))
-            norms[norms == 0.0] = 1.0
-            unit = mat / norms[:, None]
-            ids = g[id_col].to_numpy()
-            raw = g["_v"].to_numpy()
-            if ci == cj:
-                # in-cell pairs: chunk rows so the sims block stays ~16 MB
-                step = max(1, (1 << 21) // max(len(unit), 1))
-                for lo in range(0, len(unit), step):
-                    sims = unit[lo:lo + step] @ unit.T
-                    r, c = np.nonzero(sims >= threshold - margin)
-                    keep = (lo + r) < c  # upper triangle only
-                    emit(ids, ids, (raw, raw), lo + r[keep], c[keep])
-            else:
-                lmask = (g["_salt"] == ci).to_numpy()
-                left, right = unit[lmask], unit[~lmask]
-                lids, rids = ids[lmask], ids[~lmask]
-                lraw, rraw = raw[lmask], raw[~lmask]
-                if len(left) and len(right):
-                    step = max(1, (1 << 21) // max(len(right), 1))
-                    for lo in range(0, len(left), step):
-                        sims = left[lo:lo + step] @ right.T
-                        r, c = np.nonzero(sims >= threshold - margin)
-                        emit(lids, rids, (lraw, rraw), lo + r, c)
-        if out_a:
-            yield pd.DataFrame({
-                "id_a": np.concatenate(out_a).astype("int64"),
-                "id_b": np.concatenate(out_b).astype("int64"),
-                "_va": pd.Series(out_va, dtype="object"),
-                "_vb": pd.Series(out_vb, dtype="object")})
-        else:
-            yield pd.DataFrame({"id_a": pd.Series([], dtype="int64"),
-                                "id_b": pd.Series([], dtype="int64"),
-                                "_va": pd.Series([], dtype="object"),
-                                "_vb": pd.Series([], dtype="object")})
+        if chunks:
+            yield from _lsh_cell_pairs(pd.concat(chunks, ignore_index=True),
+                                       id_col, threshold - margin)
 
     # a pair found in several tables carries identical vectors each time,
     # so deduping on the id pair alone is exact; the final sim is the SAME

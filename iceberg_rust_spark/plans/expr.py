@@ -22,7 +22,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..sources.datum import coerce_literal, to_comparable
-from ..sources.types import NestedField, Schema
+from ..sources.types import NestedField, Schema, sql_ident
 
 # --- operator names ---------------------------------------------------------
 IS_NULL, NOT_NULL = "is_null", "not_null"
@@ -309,19 +309,29 @@ def bind(p: Predicate, schema: Schema, case_sensitive: bool = True) -> Predicate
 
 # --- compile to Spark Column ------------------------------------------------
 
-def to_spark_column(p: Predicate) -> Column:
+def to_spark_column(p: Predicate, schema: Optional[Schema] = None) -> Column:
+    """The predicate as a Spark Column. Each name part is quoted, so a
+    backtick or dot inside a column name reads literally: a bound field
+    resolves to its struct path in ``schema`` (the schema it was bound
+    with; without one, to its own name), an unbound term splits on dots
+    into a struct path."""
     if isinstance(p, AlwaysTrue):
         return F.lit(True)
     if isinstance(p, AlwaysFalse):
         return F.lit(False)
     if isinstance(p, And):
-        return to_spark_column(p.left) & to_spark_column(p.right)
+        return to_spark_column(p.left, schema) & to_spark_column(p.right, schema)
     if isinstance(p, Or):
-        return to_spark_column(p.left) | to_spark_column(p.right)
+        return to_spark_column(p.left, schema) | to_spark_column(p.right, schema)
     if isinstance(p, Not):
-        return ~to_spark_column(p.child)
-    name = p.field.name if hasattr(p, "field") else p.term
-    c = F.col(name)
+        return ~to_spark_column(p.child, schema)
+    if not hasattr(p, "field"):
+        parts = p.term.split(".")
+    elif schema is not None:
+        parts = schema.field_path(p.field.field_id)
+    else:
+        parts = (p.field.name,)
+    c = F.col(".".join(sql_ident(x) for x in parts))
     if isinstance(p, (UnaryPred, BoundUnaryPred)):
         return {IS_NULL: c.isNull(), NOT_NULL: c.isNotNull(),
                 IS_NAN: F.isnan(c), NOT_NAN: ~F.isnan(c)}[p.op]

@@ -143,10 +143,6 @@ _MANIFEST_SCHEMA = pa.schema([
 ])
 
 
-def _ser_map(d: Dict[str, Any]) -> str:
-    return json.dumps({k: ser_value(v) for k, v in d.items()})
-
-
 def _de_map(s: Optional[str]) -> Dict[str, Any]:
     if not s or s == "{}":
         return {}
@@ -438,6 +434,14 @@ class ManifestColumns:
     def file_paths(self) -> list:
         return self._obj_col("file_path", lambda e: e.data_file.file_path)
 
+    def strings(self, name: str) -> "pa.Array":
+        """A string column of the data file (``file_path``,
+        ``referenced_data_file``) as one Arrow array, for either backing."""
+        if self._tab is None:
+            return pa.array([getattr(e.data_file, name)
+                             for e in self._entries], pa.string())
+        return self._chunk(name)
+
     def file_sizes(self) -> list:
         return self._obj_col("file_size_in_bytes",
                              lambda e: e.data_file.file_size_in_bytes)
@@ -468,8 +472,8 @@ class ManifestColumns:
         object arrays of ``to_comparable(de_scalar(v))`` values (see
         ``decode_bounds``) with NaN bounds nulled, plus presence masks.
         Returns ``(vc, vc_p, nc, nc_p, nanc, nanc_p, lo, lo_p, hi, hi_p)``
-        — what the planner's metrics matcher (scan._vector_matcher) and
-        the delete index's file_path bounds read. Arrow-backed, each map
+        — what the planner's metrics matcher (scan._vector_matcher)
+        reads. Arrow-backed, each map
         column costs one key-equality kernel and one ``take``; the planner
         touches only the predicate's referenced columns."""
         got = self._metrics.get(file_name)
@@ -501,13 +505,7 @@ class ManifestColumns:
             import pyarrow.compute as pc
 
             def take(col):
-                """(rows, items) of the cells keyed ``file_name``."""
-                offs, keys, items = self._map_parts(col)
-                mask = pc.equal(keys, file_name).to_numpy(
-                    zero_copy_only=False)
-                idx = np.nonzero(mask)[0]
-                rows = np.searchsorted(offs, idx, side="right") - 1
-                return rows, items.take(pa.array(idx, type=pa.int64()))
+                return self._map_take(col, file_name)
 
             def counts(col):
                 rows, got = take(col)
@@ -535,6 +533,39 @@ class ManifestColumns:
             *counts("nan_value_counts"), *bounds("lower_bounds"),
             *bounds("upper_bounds"))
         return got
+
+    def _map_take(self, col: str, key: str) -> tuple:
+        """(rows, items) of the cells of map column ``col`` keyed ``key``:
+        one key-equality kernel and one ``take`` over the flat parts."""
+        import numpy as np
+        import pyarrow.compute as pc
+        offs, keys, items = self._map_parts(col)
+        idx = np.nonzero(pc.equal(keys, key).to_numpy(zero_copy_only=False))[0]
+        rows = np.searchsorted(offs, idx, side="right") - 1
+        return rows, items.take(pa.array(idx, type=pa.int64()))
+
+    def string_bounds(self, file_name: str) -> tuple:
+        """``(lower, upper)`` Arrow string arrays aligned to rows of the
+        ``file_name`` bounds that are strings (null elsewhere): the delete
+        index's ``file_path`` ranges, from the two bound maps only."""
+        import numpy as np
+        if self._tab is None:
+            return tuple(
+                pa.array([v if isinstance(v, str) else None
+                          for v in (getattr(e.data_file, attr).get(file_name)
+                                    for e in self._entries)], pa.string())
+                for attr in ("lower_bounds", "upper_bounds"))
+        import pyarrow.compute as pc
+        out = []
+        for col in ("lower_bounds", "upper_bounds"):
+            rows, items = self._map_take(col, file_name)
+            body = pc.if_else(pc.starts_with(items, "s:"),
+                              pc.utf8_slice_codeunits(items, 2),
+                              pa.scalar(None, pa.string()))
+            at = np.full(self.n, -1, dtype=np.int64)
+            at[rows] = np.arange(len(rows))
+            out.append(body.take(pa.array(at, mask=at < 0)))
+        return tuple(out)
 
     def _map_row(self, name: str, i: int, decode=None) -> Dict[str, Any]:
         offs, keys, items = self._map_parts(name)

@@ -50,10 +50,10 @@ from .types import Schema, sql_ident, type_to_spark
 # entry is weighed at the most it grows to: ~356 B of Arrow rows, ~285 B of
 # eager and derived numpy extracts, ~1.8 KB once ``entries()`` builds its
 # objects. A manifest-list entry measured ~870 B with one partition field
-# summary, a delete-index entry ~354 B of routing records.
+# summary, a delete-index entry ~153 B of index arrays and extracts.
 _MANIFEST_ENTRY_BYTES = 2400
 _MANIFEST_LIST_ENTRY_BYTES = 1000
-_DELETE_INDEX_ENTRY_BYTES = 400
+_DELETE_INDEX_ENTRY_BYTES = 200
 
 
 def _memory_budget() -> int:
@@ -324,10 +324,12 @@ class ScanPlan:
     ``tasks`` is a lazy property: every plan with a snapshot plans into
     ``_fast`` — per-manifest ``(ManifestColumns, survivor-index-array,
     delete-sets)`` triples, ``delete-sets`` being None or a list aligned
-    with the survivors (see ``_DeleteFileIndex.match_arrays``) — and
-    entry/FileScanTask objects materialize only if a consumer actually
-    touches ``.tasks`` (to_df and count_rows read the arrays directly, so
-    a 100k-file scan never builds 100k task objects)."""
+    with the survivors of None or an interned ``(pos_srcs, eq_srcs)``
+    tuple of ``(cols, row)`` delete sources (see
+    ``_DeleteFileIndex.match_many``) — and entry/FileScanTask objects
+    materialize only if a consumer actually touches ``.tasks`` (to_df and
+    count_rows read the arrays directly, so a 100k-file scan never builds
+    100k task objects)."""
 
     __slots__ = ("_tasks", "_fast", "snapshot", "total_manifests",
                  "skipped_manifests", "total_data_files",
@@ -431,19 +433,24 @@ class TableScan:
         reference's 4-stage concurrent pipeline, scan/mod.rs:381-499):
 
           manifest list -> FieldSummary pruning (driver, O(manifests))
-          -> per-manifest [fetch + decode + metric/partition extracts] on
-             a thread pool: the parquet/avro decode releases the GIL
+          -> per-manifest [fetch + decode + extracts] on a thread pool:
+             metric/partition extracts of data manifests, the index
+             extract (``_delete_rows``) of delete manifests
+          -> the delete index, built from those extracts once per
+             delete-manifest set (cached)
           -> per-manifest survivor-index array: one partition mask
              (evaluated once per distinct partition) AND one vectorized
              metrics mask (``_vector_matcher``)
-          -> bulk delete attachment over SURVIVORS only
-             (``_DeleteFileIndex.match_arrays``).
+          -> delete attachment over SURVIVORS only: a memoized match
+             where one is held, one batch of array joins
+             (``_DeleteFileIndex.match_many``) for the rest.
 
         The result is always an array plan (``ScanPlan._fast``): no entry
         or task object is built until a consumer touches ``.tasks``.
         Metrics derive only for the predicate's referenced columns
         (missing metrics are conservative might-match, so the restriction
         cannot over-prune)."""
+        import numpy as np
         md = self.metadata
         snap = self._resolve_snapshot()
         if snap is None:
@@ -499,7 +506,6 @@ class TableScan:
             once per distinct (partition, spec) pair and metrics pruning
             once per schema group, so no entry object is built for any
             row (the numpy + Arrow steps release the GIL)."""
-            import numpy as np
             data_mask = ((cols.status != STATUS_DELETED)
                          & (cols.content == CONTENT_DATA))
             rows = np.nonzero(data_mask)[0]
@@ -529,15 +535,13 @@ class TableScan:
 
         # phases A+B share ONE decode pool: delete manifests and data
         # manifests decode CONCURRENTLY (the reference routes both kinds
-        # through one concurrent pipeline, scan/mod.rs:420-465). The
-        # delete index must be complete only before survivor MATCHING —
-        # which runs after data evaluation anyway — so only the routing
-        # pass (pure Python, main thread) orders after delete decode,
-        # and it overlaps the pool's data-manifest decode instead of
-        # serializing in front of it. The built index is memoized on the
+        # through one concurrent pipeline, scan/mod.rs:420-465), each
+        # delete manifest with its index extract. The delete index must
+        # be complete only before survivor MATCHING — which runs after
+        # data evaluation anyway — so only its array build (main thread)
+        # orders after delete decode. The built index is memoized on the
         # surviving delete-manifest set: manifests are immutable, so
-        # repeated plans over the same MOR table skip the
-        # O(delete files) routing pass entirely.
+        # repeated plans over the same MOR table skip the build.
         # mtimes captured ONCE per manifest, at LOAD time, and reused for
         # BOTH the cache key and the disk-cache store: re-fetching mtime
         # at store time could publish old decoded content under a NEW
@@ -586,7 +590,6 @@ class TableScan:
                     cols._col("file_path")  # the one column to_df reads
                 return cols
             if cols.n:
-                import numpy as np
                 dm = ((cols.status != STATUS_DELETED)
                       & (cols.content == CONTENT_DATA))
                 if dm.any():
@@ -601,6 +604,11 @@ class TableScan:
                             fn = name_map.get(nm)
                             if fn is not None:
                                 cols.metric_vectors(fn)
+            return cols
+
+        def prepare_deletes(cols: ManifestColumns) -> ManifestColumns:
+            """Pool stage of a delete manifest: its index extract."""
+            _delete_rows(cols)
             return cols
 
         to_decode = (surviving_data if cached is not None
@@ -659,12 +667,12 @@ class TableScan:
         try:
             # BOTH manifest kinds decode on the one pool (the overlap the
             # reference gets from its single concurrent pipeline); the
-            # serial stages (index routing, mask evaluation) run
+            # serial stages (index build, mask evaluation) run
             # only after the pool drains — running them concurrently with
             # pool decode measured ~2x SLOWER at 100k files (three
             # interpreter threads convoy on the GIL)
             del_futs = ([] if cached is not None
-                        else submit_all(surviving_dels, lambda c: c))
+                        else submit_all(surviving_dels, prepare_deletes))
             data_futs = submit_all(surviving_data, prepare)
         finally:
             if pool is not None:
@@ -678,16 +686,16 @@ class TableScan:
                                       mtime_of[m.manifest_path], c)
 
         if cached is None:
-            # build unlocked (routing may take a while; concurrent misses
-            # may build twice — benign, manifests are immutable)
-            delete_index = _DeleteFileIndex()
-            stray_data: List[ManifestEntry] = []
+            # build unlocked (concurrent misses may build twice — benign,
+            # manifests are immutable)
             del_cols = [f.result() for f in del_futs]
-            for cols in del_cols:
-                # live DATA rows in a delete manifest (external writers
-                # could mix content) plan as one more group below
-                stray_data.extend(cols.entry(i)
-                                  for i in delete_index.add_columns(cols))
+            delete_index = _DeleteFileIndex(del_cols)
+            # live DATA rows in a delete manifest (external writers could
+            # mix content) plan as one more group below
+            stray_data = [cols.entry(int(i)) for cols in del_cols
+                          for i in np.nonzero(
+                              (cols.status != STATUS_DELETED)
+                              & (cols.content == CONTENT_DATA))[0]]
             _persist(surviving_dels, del_cols)
             delete_index, stray_data = _manifest_cache.insert(
                 dindex_key, (delete_index, stray_data),
@@ -699,21 +707,24 @@ class TableScan:
         _persist(surviving_data, loaded)
 
         # live DELETE rows inside data manifests (rare, external writers)
-        # route into a per-plan index, so the cached one stays immutable;
-        # it is complete before any survivor matches against it
-        overlay: Optional[_DeleteFileIndex] = None
-        for cols in loaded:
-            if bool(((cols.status != STATUS_DELETED)
-                     & (cols.content != CONTENT_DATA)).any()):
-                if overlay is None:
-                    overlay = _DeleteFileIndex()
-                overlay.add_columns(cols)
+        # join the cached index's in a per-plan one, matched unmemoized
+        extra = [cols for cols in loaded
+                 if ((cols.status != STATUS_DELETED)
+                     & (cols.content != CONTENT_DATA)).any()]
+        if extra:
+            delete_index = _DeleteFileIndex(delete_index.manifests + extra)
 
         groups: List[Tuple[Optional[ManifestFile], ManifestColumns]] = \
             list(zip(surviving_data, loaded))
         if stray_data:
             groups.append((None, ManifestColumns.from_entries(stray_data)))
+        # delete attachment: one batch of array joins over every manifest
+        # whose match is not memoized. The memo ("delete_match", per
+        # manifest, mtime and delete-manifest set) holds the match of ALL
+        # of a manifest's live data rows, so any plan may cut it to its
+        # survivors, and a plan whose survivors are all of them stores it
         fast = []
+        todo = []                           # (index into fast, memo key)
         for mfm, cols in groups:
             ix, n, sp, sm = eval_cols(cols)
             plan.total_data_files += n
@@ -721,16 +732,26 @@ class TableScan:
             plan.skipped_by_metrics += sm
             sets = None
             if len(ix) and not delete_index.empty:
-                if always_true and mfm is not None:
-                    ix, sets = _match_memoized(
-                        delete_index, cols, ix, mfm.manifest_path,
-                        mtime_of[mfm.manifest_path], dkey)
+                key = None if mfm is None or extra else (
+                    "delete_match", mfm.manifest_path,
+                    mtime_of[mfm.manifest_path], dkey)
+                got = None if key is None else _manifest_cache.lookup(key)
+                if got is not None:         # cut to this plan's survivors
+                    rows, sets = got
+                    if sets is not None and len(ix) < len(rows):
+                        sets = list(map(sets.__getitem__,
+                                        np.searchsorted(rows, ix).tolist()))
+                        sets = None if sets.count(None) == len(sets) else sets
                 else:
-                    sets = delete_index.match_arrays(cols, ix)
-            if overlay is not None:
-                sets = _concat_sets(sets, overlay.match_arrays(cols, ix))
-            fast.append((cols, ix, sets))
-        plan._fast = fast
+                    todo.append((len(fast), key if len(ix) == n else None))
+            fast.append([cols, ix, sets])
+        matched = delete_index.match_many([fast[k][:2] for k, _ in todo])
+        for (k, key), sets in zip(todo, matched):
+            fast[k][2] = sets
+            if key is not None:
+                ix = fast[k][1]
+                _manifest_cache.insert(key, (ix, sets), ix.nbytes + 8 * len(ix))
+        plan._fast = [tuple(f) for f in fast]
         return plan
 
     @staticmethod
@@ -1395,7 +1416,7 @@ class TableScan:
 
         bound = E.bind(self.row_filter, schema, self.case_sensitive)
         if not isinstance(bound, E.AlwaysTrue):
-            out = out.filter(E.to_spark_column(bound))
+            out = out.filter(E.to_spark_column(bound, schema))
         if self.selected_columns is not None:
             out = out.select(*self.selected_columns)
         return out
@@ -1431,40 +1452,6 @@ def _part_json(part: Dict[str, Any]) -> Optional[str]:
     return json.dumps({k: str(v) for k, v in sorted(part.items())})
 
 
-def _match_memoized(index: "_DeleteFileIndex", cols: ManifestColumns, ix,
-                    path: str, mtime_ns: int, dkey: tuple) -> tuple:
-    """``index.match_arrays`` memoized per (manifest path, mtime,
-    delete-manifest set): manifests are immutable, so a warm replan of a
-    live MOR table reuses the matched sets outright. The key carries no
-    predicate, so only AlwaysTrue plans (whose survivors are every live
-    data row) may use it. Returns ``(ix, sets)``, weighed as the survivor
-    array plus one 8-byte list slot per survivor."""
-    return _manifest_cache.load(
-        "delete_match", path, mtime_ns, dkey,
-        lambda: (ix, index.match_arrays(cols, ix)),
-        lambda v: v[0].nbytes + 8 * len(v[0]))
-
-
-def _concat_sets(a: Optional[list], b: Optional[list]) -> Optional[list]:
-    """Per-survivor concatenation of two ``match_arrays`` results over the
-    same survivors (None = no deletes), re-interned so equal inputs share
-    one output tuple."""
-    if a is None or b is None:
-        return b if a is None else a
-    memo: dict = {}
-    out: list = []
-    for x, y in zip(a, b):
-        if x is None or y is None:
-            out.append(y if x is None else x)
-            continue
-        key = (id(x), id(y))
-        got = memo.get(key)
-        if got is None:
-            got = memo[key] = (x[0] + y[0], x[1] + y[1])
-        out.append(got)
-    return out
-
-
 def _pred_columns(pred: E.Predicate) -> frozenset:
     """Column names a bound predicate references — the only columns whose
     metric extracts the columnar matcher needs (same name rule as
@@ -1491,299 +1478,319 @@ def _part_key(part: Dict[str, Any]) -> Tuple:
     return tuple(sorted((k, _cmp(v)) for k, v in part.items()))
 
 
-class _BoundedDeletes:
-    """file_path-bounded positional deletes of one scope, stabbed by data
-    path: sorted by lower bound with a running max of upper bounds, a stab
-    binary-searches the lows and scans back only while the prefix max says
-    a cover is still possible. Real writers emit near-disjoint path ranges
-    per snapshot (delete rows sorted by file_path, rolled into files), so
-    the scan-back is O(matches + snapshots), not O(deletes) — the walk
-    that made 100k partition-scoped deletes quadratic against 100k files."""
-
-    __slots__ = ("_rows", "_built")
-
-    def __init__(self):
-        self._rows: list = []
-        self._built = None
-
-    def add(self, lo: str, hi: str, rec: tuple) -> None:
-        self._rows.append((lo, hi, rec))
-        self._built = None                   # invalidate the built form
-
-    def stab(self, p: str) -> list:
-        # the built form is assembled LOCALLY and published in one
-        # attribute assignment: stab may run from concurrent plan_files
-        # callers against a cached index, and a half-built sorted view
-        # would silently skip applicable deletes (row resurrection).
-        # A concurrent double-build is benign; sorted() leaves _rows
-        # untouched.
-        built = self._built
-        if built is None:
-            rows = sorted(self._rows, key=lambda r: r[0])
-            los = [r[0] for r in rows]
-            his = [r[1] for r in rows]
-            recs = [r[2] for r in rows]
-            m, run = [], ""
-            for h in his:
-                run = h if h > run else run
-                m.append(run)
-            built = self._built = (los, his, m, recs)
-        los, his, maxhi, recs = built
-        import bisect
-        j = bisect.bisect_right(los, p) - 1
-        out = []
-        while j >= 0 and maxhi[j] >= p:
-            if his[j] >= p:
-                out.append(recs[j])
-            j -= 1
-        return out
+def _norm_paths(paths):
+    """Arrow twin of ``_norm_path_py`` over a string array; the regex runs
+    only when some value starts with ``file:``."""
+    import pyarrow.compute as pc
+    if pc.any(pc.starts_with(paths, "file:")).as_py():
+        return pc.replace_substring_regex(paths, "^file:/*", "/")
+    return paths
 
 
-class _DeleteScope:
-    """Recs of one scope (a partition key, or the global scope), split by
-    how they match: eq/pos lists apply to every file in scope (seq-gated),
-    bounded pos deletes stab by path."""
+def _take(arr, rows):
+    """``arr.take(rows)`` for ascending unique ``rows``, without the copy
+    when they are every row."""
+    import pyarrow as pa
+    return arr if len(rows) == len(arr) else arr.take(pa.array(rows))
 
-    __slots__ = ("eq", "pos", "bounded")
 
-    def __init__(self):
-        self.eq: list = []
-        self.pos: list = []
-        self.bounded = None
+def _expand(owner, starts, ends) -> tuple:
+    """CSR expansion: ``(owner[k], position)`` for every position of every
+    range ``[starts[k], ends[k])``."""
+    import numpy as np
+    lens = ends - starts
+    own = np.repeat(owner, lens)
+    return own, (np.arange(len(own))
+                 + np.repeat(starts - (np.cumsum(lens) - lens), lens))
+
+
+def _csr(keys, order_by, values, n_keys: int) -> tuple:
+    """``(offsets, order_by, values)`` sorted by ``(keys, order_by)``;
+    ``offsets[k]:offsets[k + 1]`` is key ``k``'s slice."""
+    import numpy as np
+    o = np.lexsort((order_by, keys))
+    offs = np.zeros(n_keys + 1, dtype=np.int64)
+    np.cumsum(np.bincount(keys, minlength=n_keys), out=offs[1:])
+    return offs, order_by[o], values[o]
+
+
+def _unique_rows(m) -> tuple:
+    """``np.unique(m, axis=0, return_inverse=True)`` of a 2-D int array
+    through one 1-D sort (the axis form sorts a void view with a generic
+    compare, ~10x slower): the columns fold into one int64 key, densified
+    where the next column could overflow it."""
+    import numpy as np
+    key = np.zeros(len(m), dtype=np.int64)
+    for col in (m.T if len(m) else ()):
+        lo, hi = int(col.min()), int(col.max())
+        if hi - lo >= 1 << 31:              # sparse: densify it first
+            col = np.unique(col, return_inverse=True)[1].reshape(-1)
+            lo, hi = 0, int(col.max())
+        if int(key.max()) >= (1 << 62) // (hi - lo + 1):
+            key = np.unique(key, return_inverse=True)[1].reshape(-1)
+        key = key * (hi - lo + 1) + (col - lo)
+    _, first, inv = np.unique(key, return_index=True, return_inverse=True)
+    return m[first], inv.reshape(-1)
+
+
+def _delete_rows(cols: ManifestColumns) -> tuple:
+    """Index extract of a manifest's live position/equality delete rows,
+    memoized on ``cols``: ``(rows, refs, keys, kcode, lo, hi)`` — the
+    normalized ``referenced_data_file`` (null: scoped row), one scope key
+    per distinct ``(spec_id, partition)`` (None: global), each row's index
+    into them (-1: path-scoped) and the normalized ``file_path`` bounds."""
+    got = cols._cols.get("__delete_rows__")
+    if got is not None:
+        return got
+    import numpy as np
+    import pyarrow as pa
+    content = cols.content
+    rows = np.nonzero((cols.status != STATUS_DELETED)
+                      & ((content == CONTENT_POSITION_DELETES)
+                         | (content == CONTENT_EQUALITY_DELETES)))[0]
+    refs = _norm_paths(_take(cols.strings("referenced_data_file"), rows))
+    scoped = ~refs.is_valid().to_numpy(zero_copy_only=False)
+    kcode = np.full(len(rows), -1, dtype=np.int64)
+    keys: list = []
+    lo = hi = pa.nulls(len(rows), pa.string())
+    if scoped.any():
+        codes, parts = cols.partition_groups()
+        uniq, kcode[scoped] = _unique_rows(np.column_stack(
+            (cols.spec_id[rows[scoped]], codes[rows[scoped]])))
+        keys = [(spec, _part_key(parts[c])) if parts[c] else None
+                for spec, c in uniq.tolist()]
+        if (content[rows[scoped]] == CONTENT_POSITION_DELETES).any():
+            lo, hi = (_norm_paths(_take(b, rows))
+                      for b in cols.string_bounds("file_path"))
+    got = cols._cols["__delete_rows__"] = (rows, refs, keys, kcode, lo, hi)
+    return got
 
 
 class _DeleteFileIndex:
-    """Partition-keyed delete index (counterpart of the reference's
-    delete_file_index.rs:84-168). Matching a data file is O(deletes applying
-    to IT), not O(all deletes): deletion vectors / path-scoped deletes live
-    in an exact map on ``referenced_data_file``; partition-scoped deletes in
-    a dict on the canonical partition key, with file_path-bounded positional
-    deletes further indexed for interval stabbing; global (unpartitioned)
-    deletes in one shared scope. Sequence-number visibility applies at match
-    time: pos-delete when delete.seq >= data.seq, eq-delete when > (spec
-    rule, delete_file_index.rs).
+    """Delete index (delete_file_index.rs:84-168 counterpart), built once
+    per delete-manifest set from the manifests' ``_delete_rows`` extracts
+    into immutable arrays, so concurrent plans share it as built. A live
+    delete row is a rec id with parallel ``seq``, ``is_eq``, ``rec_man``
+    (into ``manifests``) and ``rec_row`` arrays, in three groups:
 
-    Recs carry ``(seq, content, DataFile | (cols, row))``: built from a
-    columnar manifest view, the DataFile object materializes only when a
-    survivor actually matches — a selective scan over a 100k-delete table
-    builds a handful of delete objects, not 100k."""
+    - path-scoped (deletion vectors): the distinct normalized referenced
+      paths ``path_keys`` with CSR offsets ``path_offs`` into ``path_recs``;
+    - scoped position and equality recs (``pos``, ``eq``): per scope (0 =
+      global, then one per canonical ``(spec_id, partition)`` in
+      ``scope_ids``) a seq-sorted CSR slice, so the recs a (scope, data
+      seq) pair sees are a suffix;
+    - ``file_path``-bounded position recs: per scope (``b_scope``,
+      ``b_offs``) sorted by lower bound ``b_lo``, with ``b_hi``.
 
-    def __init__(self, delete_entries: Sequence[ManifestEntry] = ()):
-        self.by_path: Dict[str, list] = {}
-        self.by_partition: Dict[Tuple, _DeleteScope] = {}
-        self.global_scope = _DeleteScope()
-        # raw-items -> canonical _part_key memo: partition dicts repeat
-        # heavily (constant per manifest for clustered writers), so the
-        # sorted+normalized key computes once per DISTINCT tuple instead
-        # of once per row on both the routing and the match side. Keyed
-        # by the UNSORTED items tuple — two insertion orders of the same
-        # dict just make two memo entries with equal values. Bounded by
-        # distinct partition tuples, same as by_partition itself.
-        self._pk_memo: Dict[tuple, Tuple] = {}
-        for de in delete_entries:
-            self.add_entry(de)
+    A position delete applies when delete.seq >= data.seq, an equality
+    delete when > (spec rule)."""
 
-    def _route(self, seq: int, content: int, ref: Optional[str],
-               part_key: Optional[Tuple], lo: Optional[str],
-               hi: Optional[str], src) -> None:
-        rec = (seq, content, src)
-        if ref is not None:
-            # normalized keys: referenced paths come from the read side's
-            # normalized _file column, manifest data paths from the
-            # writer — file:-scheme spelling must not split them
-            self.by_path.setdefault(_norm_path_py(ref), []).append(rec)
-            return
-        scope = self.global_scope if part_key is None else \
-            self.by_partition.get(part_key)
-        if scope is None:
-            scope = self.by_partition[part_key] = _DeleteScope()
-        if content == CONTENT_EQUALITY_DELETES:
-            scope.eq.append(rec)
-        elif content != CONTENT_POSITION_DELETES:
-            return                  # unknown content kind: never matches
-        elif lo is not None and hi is not None:
-            # bounds normalized into the same spelling as the data path:
-            # a foreign writer's URI-spelled bounds would otherwise sort
-            # below every normalized path and SKIP a delete that applies —
-            # silent row resurrection. The scheme strip is order-preserving
-            # within one table (shared prefix survives truncation). Bounds
-            # are format-contract bounds, so truncated stats stay sound.
-            if scope.bounded is None:
-                scope.bounded = _BoundedDeletes()
-            scope.bounded.add(_norm_path_py(lo), _norm_path_py(hi), rec)
-        else:
-            scope.pos.append(rec)
+    __slots__ = ("manifests", "rec_man", "rec_row", "seq", "is_eq",
+                 "scope_ids", "path_keys", "path_offs", "path_recs", "pos",
+                 "eq", "has_global", "b_scope", "b_offs", "b_lo", "b_hi",
+                 "b_recs")
 
-    def _pk(self, part: Dict[str, Any]) -> Tuple:
-        raw = tuple(part.items())
-        try:
-            got = self._pk_memo.get(raw)
-        except TypeError:                   # unhashable value: no memo
-            return _part_key(part)
-        if got is None:
-            got = self._pk_memo[raw] = _part_key(part)
-        return got
-
-    def add_entry(self, de: ManifestEntry) -> None:
-        d = de.data_file
-        self._route(de.sequence_number, d.content, d.referenced_data_file,
-                    (d.spec_id, self._pk(d.partition)) if d.partition
-                    else None,
-                    d.lower_bounds.get("file_path"),
-                    d.upper_bounds.get("file_path"), d)
-
-    def add_columns(self, cols: ManifestColumns) -> List[int]:
-        """Route every live delete entry of a columnar manifest view;
-        returns the row indices of live DATA entries (a delete manifest
-        written by an external tool could mix content, and a data manifest
-        routed here for its stray deletes is all data rows). Touches only
-        flat arrays — per-row delete objects stay unbuilt until a survivor
-        matches."""
+    def __init__(self, manifests: Sequence[ManifestColumns]):
         import numpy as np
-        live = cols.status != STATUS_DELETED
-        strays = np.nonzero(live & (cols.content == CONTENT_DATA))[0].tolist()
-        if cols._tab is None:
-            for e in cols.entries():
-                if (e.status != STATUS_DELETED
-                        and e.data_file.content != CONTENT_DATA):
-                    self.add_entry(e)
-            return strays
-        del_rows = np.nonzero(live & (cols.content != CONTENT_DATA))[0]
-        if not len(del_rows):
-            return strays
-        refs = cols._col("referenced_data_file")
-        vecs = cols.metric_vectors("file_path")
-        los, his = vecs[6], vecs[8]
-        # bulk numpy->py conversions (tolist) instead of per-element int():
-        # routing runs once per delete row per cold plan — 110k rows at
-        # 100k-file scale — so per-row overhead is the whole cost here
-        idx_l = del_rows.tolist()
-        seq_l = cols.sequence_number[del_rows].tolist()
-        con_l = cols.content[del_rows].tolist()
-        spec_l = cols.spec_id[del_rows].tolist()
-        by_path = self.by_path
-        pcodes = pparts = None              # lazy: DV-only manifests skip it
-        pk_by_code: dict = {}
-        for j, i in enumerate(idx_l):
-            ref = refs[i]
-            if ref is not None:
-                # path-scoped (the DV common case), inlined _route:
-                # normalized key — see _route for the spelling rule
-                by_path.setdefault(_norm_path_py(ref), []).append(
-                    (seq_l[j], con_l[j], (cols, i)))
-                continue
-            if pcodes is None:
-                # partition dicts decode once per DISTINCT raw value
-                # (vectorized run detection), not once per delete row
-                pcodes, pparts = cols.partition_groups()
-            code = int(pcodes[i])
-            pk = pk_by_code.get(code)
-            if pk is None:
-                part = pparts[code]
-                pk = pk_by_code[code] = (self._pk(part) if part else False)
-            self._route(seq_l[j], con_l[j], None,
-                        (spec_l[j], pk) if pk is not False else None,
-                        los[i], his[i], (cols, i))
-        return strays
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        self.manifests = list(manifests)
+        self.scope_ids: Dict[Optional[tuple], int] = {None: 0}
+        ex = [_delete_rows(cols) for cols in self.manifests]
+        scope = np.concatenate([np.zeros(0, np.int64)] + [
+            np.array([self.scope_ids.setdefault(k, len(self.scope_ids))
+                      for k in e[2]] + [-1], dtype=np.int64)[e[3]]
+            for e in ex])
+        self.rec_row = np.concatenate([np.zeros(0, np.int64)]
+                                      + [e[0] for e in ex])
+        self.path_keys = None
+        if self.empty:
+            return
+        self.rec_man = np.repeat(np.arange(len(ex)), [len(e[0]) for e in ex])
+        self.seq = seq = np.concatenate(
+            [c.sequence_number[e[0]] for c, e in zip(self.manifests, ex)])
+        self.is_eq = is_eq = np.concatenate(
+            [c.content[e[0]] == CONTENT_EQUALITY_DELETES
+             for c, e in zip(self.manifests, ex)])
+        recs = np.arange(len(seq))
+        ref, lo, hi = (pa.concat_arrays([e[i] for e in ex]) for i in (1, 4, 5))
+        by_path = ref.is_valid().to_numpy(zero_copy_only=False)
+        if by_path.any():
+            enc = ref.dictionary_encode()
+            self.path_keys = enc.dictionary
+            self.path_offs, _, self.path_recs = _csr(
+                pc.fill_null(enc.indices, 0).to_numpy()[by_path],
+                recs[by_path], recs[by_path], len(enc.dictionary))
+        bounded = (~by_path & ~is_eq
+                   & pc.and_(lo.is_valid(), hi.is_valid()).to_numpy(
+                       zero_copy_only=False))
+        n_scopes = len(self.scope_ids)
+        self.pos, self.eq = (
+            _csr(scope[m], seq[m], recs[m], n_scopes)
+            for m in (~by_path & ~bounded & ~is_eq, ~by_path & is_eq))
+        mask = pa.array(bounded)
+        lo, hi = lo.filter(mask), hi.filter(mask)
+        o = pc.sort_indices(pa.table({"s": scope[bounded], "lo": lo}),
+                            sort_keys=[("s", "ascending"), ("lo", "ascending")])
+        self.b_lo, self.b_hi = lo.take(o), hi.take(o)
+        o = o.to_numpy()
+        self.b_scope, self.b_recs = scope[bounded][o], recs[bounded][o]
+        self.b_offs = np.zeros(n_scopes + 1, dtype=np.int64)
+        np.cumsum(np.bincount(self.b_scope, minlength=n_scopes),
+                  out=self.b_offs[1:])
+        self.has_global = bool(self.pos[0][1] or self.eq[0][1]
+                               or self.b_offs[1])
 
     @staticmethod
     def _file(src) -> DataFile:
-        # lite: matched delete files skip the six stat-map decodes the
-        # read path never consults (their bounds/counts were already
-        # used from flat arrays during routing)
-        if type(src) is tuple:
-            return src[0].data_file_lite(src[1])
-        return src
+        # lite: the read path never consults a delete file's stat maps
+        return src[0].data_file_lite(src[1])
 
     @property
     def empty(self) -> bool:
-        g = self.global_scope
-        return not (self.by_path or self.by_partition
-                    or g.pos or g.eq or g.bounded)
+        return not len(self.rec_row)
 
-    def match_arrays(self, cols: "ManifestColumns", idx) -> Optional[list]:
-        """The planner's delete attachment: one pass over the
-        survivor-index array of a data manifest, returning a list aligned
-        with ``idx`` whose elements are None (no applicable deletes) or an
-        INTERNED ``(pos_srcs, eq_srcs)`` tuple of rec sources (materialize
-        via ``_file`` only when a consumer builds tasks/DataFrames).
-        Path-scoped deletes match on the exact normalized data path,
-        partition-scoped ones only files of the same (spec_id, partition),
-        global ones every file; seq visibility as in the class docstring.
-        The per-survivor work is dict lookups
-        against pre-grouped state: scope delete lists memoize per
-        (scope, data seq), partition keys come from the run-deduplicated
-        ``partition_groups`` codes, and partition dicts never decode at
-        all when only path-scoped deletes exist (the DV common case).
-        Returns None when the index is empty."""
+    def match_many(self, parts: Sequence[tuple]) -> List[Optional[list]]:
+        """Delete attachment: per ``(cols, idx)`` pair (a data manifest and
+        its ascending survivors) a list aligned with ``idx`` of None or an
+        INTERNED ``(pos_srcs, eq_srcs)`` tuple of ``(cols, row)`` sources
+        (``_file`` materializes one), or None when nothing applies. All
+        survivors go through one set of array joins: ``index_in`` plus a
+        CSR expansion for paths, one seq cut per distinct (scope, data
+        seq), ``_stab`` for bounds."""
         import numpy as np
-        n = len(idx)
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        idxs = [np.asarray(idx, dtype=np.int64) for _cols, idx in parts]
+        n = sum(map(len, idxs))
         if n == 0 or self.empty:
-            return None
-        fps = cols.file_paths()
-        seqs = cols.sequence_number
-        specs = cols.spec_id
-        by_path = self.by_path
-        gscope = self.global_scope
-        need_part = bool(self.by_partition)
-        pcodes = pparts = None
-        if need_part:
-            pcodes, pparts = cols.partition_groups()
-        scope_memo: dict = {}               # (id(scope), seq) -> (pos, eq)
-        scope_by_code: dict = {}            # (code, spec) -> scope | None
-        set_memo: dict = {}                 # id-tuples -> interned sets
-        out = [None] * n
-        idx_l = idx.tolist() if hasattr(idx, "tolist") else list(idx)
-        for j, i in enumerate(idx_l):
-            seq = int(seqs[i])
-            p = _norm_path_py(fps[i])
-            pos_parts: list = []
-            eq_parts: list = []
-            rl = by_path.get(p)
-            if rl:
-                for dseq, content, src in rl:
-                    if content == CONTENT_POSITION_DELETES and dseq >= seq:
-                        pos_parts.append(src)
-                    elif content == CONTENT_EQUALITY_DELETES and dseq > seq:
-                        eq_parts.append(src)
-            pscope = None
-            if need_part:
-                code = int(pcodes[i])
-                skey = (code, int(specs[i]))
-                pscope = scope_by_code.get(skey, False)
-                if pscope is False:
-                    part = pparts[code]
-                    pscope = (self.by_partition.get(
-                        (skey[1], self._pk(part))) if part else None)
-                    scope_by_code[skey] = pscope
-            for scope in (gscope, pscope):
-                if scope is None:
-                    continue
-                mkey = (id(scope), seq)
-                got = scope_memo.get(mkey)
-                if got is None:
-                    got = scope_memo[mkey] = (
-                        tuple(src for dseq, _c, src in scope.pos
-                              if dseq >= seq),
-                        tuple(src for dseq, _c, src in scope.eq
-                              if dseq > seq))
-                pos_parts.extend(got[0])
-                eq_parts.extend(got[1])
-                if scope.bounded is not None:
-                    for dseq, _c, src in scope.bounded.stab(p):
-                        if dseq >= seq:
-                            pos_parts.append(src)
-            if not pos_parts and not eq_parts:
-                continue
-            ikey = (tuple(map(id, pos_parts)), tuple(map(id, eq_parts)))
-            interned = set_memo.get(ikey)
-            if interned is None:
-                interned = set_memo[ikey] = (tuple(pos_parts),
-                                             tuple(eq_parts))
-            out[j] = interned
-        if not any(x is not None for x in out):
-            return None
-        return out
+            return [None] * len(parts)
+        q = np.concatenate([cols.sequence_number[idx]
+                            for (cols, _i), idx in zip(parts, idxs)])
+        hits = []                           # (survivor, rec) arrays
+        paths = None
+        if self.path_keys is not None or len(self.b_recs):
+            paths = _norm_paths(pa.chunked_array(
+                [_take(cols.strings("file_path"), idx)
+                 for (cols, _i), idx in zip(parts, idxs)], pa.string()))
+        if self.path_keys is not None:
+            k = pc.fill_null(pc.index_in(paths, value_set=self.path_keys),
+                             -1).to_numpy(zero_copy_only=False)
+            j = np.nonzero(k >= 0)[0]
+            j, at = _expand(j, self.path_offs[k[j]], self.path_offs[k[j] + 1])
+            hits.append((j, self.path_recs[at]))
+        # (survivor, scope) pairs: every survivor in the global scope,
+        # the ones whose (spec_id, partition) keys one in its own
+        sj = np.arange(n if self.has_global else 0)
+        ss = np.zeros(len(sj), dtype=np.int64)
+        if len(self.scope_ids) > 1:
+            psid = np.concatenate([self._scopes(cols, idx)
+                                   for (cols, _i), idx in zip(parts, idxs)])
+            pj = np.nonzero(psid >= 0)[0]
+            sj, ss = np.concatenate((sj, pj)), np.concatenate((ss, psid[pj]))
+        uniq, inv = _unique_rows(np.column_stack((ss, q[sj])))
+        for (offs, seqs, recs), side in ((self.pos, "left"),
+                                        (self.eq, "right")):
+            starts = np.array(
+                [offs[s] + np.searchsorted(seqs[offs[s]:offs[s + 1]], v,
+                                           side=side)
+                 for s, v in uniq.tolist()], dtype=np.int64)
+            j, at = _expand(sj, starts[inv], offs[ss + 1])
+            hits.append((j, recs[at]))
+        bj = np.nonzero(self.b_offs[ss + 1] > self.b_offs[ss])[0]
+        if len(bj):
+            hits.append(self._stab(paths, sj[bj], ss[bj]))
+        j, r = (np.concatenate(x) for x in zip(*hits))
+        keep = np.where(self.is_eq[r], self.seq[r] > q[j], self.seq[r] >= q[j])
+        sets, pick = self._intern(n, j[keep], r[keep])
+        return [list(map(sets.__getitem__, got.tolist())) if got.any()
+                else None for got in np.split(
+                    pick, np.cumsum([len(i) for i in idxs])[:-1])]
+
+    def _scopes(self, cols: "ManifestColumns", idx):
+        """Each survivor's partition scope id, -1 where none; the
+        canonical key computes once per distinct (spec_id, partition)."""
+        import numpy as np
+        codes, parts = cols.partition_groups()
+        uniq, inv = _unique_rows(np.column_stack((cols.spec_id[idx],
+                                                  codes[idx])))
+        return np.array([self.scope_ids.get((spec, _part_key(parts[c])), -1)
+                         if parts[c] else -1
+                         for spec, c in uniq.tolist()], dtype=np.int64)[inv]
+
+    def _stab(self, paths, sj, ss) -> tuple:
+        """``(survivor, rec)`` pairs of bounded recs whose range holds the
+        survivor's path: one Arrow ``rank`` makes every comparison an
+        integer one (scope s shifted by s * big), then a ``searchsorted``
+        in the lower bounds and a vectorized walk back while the running
+        max of the upper bounds still reaches the path."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        nb = len(self.b_recs)
+        rank = pc.rank(pa.chunked_array(
+            [self.b_lo, self.b_hi, *_take(paths, sj).chunks], pa.string()),
+            tiebreaker="dense").to_numpy().astype(np.int64)
+        big = int(rank.max()) + 1
+        hi = rank[nb:2 * nb] + self.b_scope * big
+        p = rank[2 * nb:] + ss * big
+        run_max = np.maximum.accumulate(hi)
+        k = np.searchsorted(rank[:nb] + self.b_scope * big, p,
+                            side="right") - 1
+        first = self.b_offs[ss]
+        out_j, out_r = [], []
+        live = np.arange(len(sj))
+        while len(live):
+            live = live[k[live] >= first[live]]
+            live = live[run_max[k[live]] >= p[live]]
+            hit = live[hi[k[live]] >= p[live]]
+            out_j.append(sj[hit])
+            out_r.append(self.b_recs[k[hit]])
+            k[live] -= 1
+        return np.concatenate(out_j), np.concatenate(out_r)
+
+    def _intern(self, n: int, j, r) -> tuple:
+        """``(sets, pick)``: survivor k's ``(pos_srcs, eq_srcs)`` is
+        ``sets[pick[k]]`` (None at 0). Sources build only for matched
+        recs; position and equality parts intern apart, then their pairs."""
+        import numpy as np
+        seen = np.zeros(len(self.rec_row), dtype=bool)
+        seen[r] = True
+        recs = np.nonzero(seen)[0]
+        r = (np.cumsum(seen) - 1)[r]        # index into srcs
+        srcs = np.fromiter(
+            zip(map(self.manifests.__getitem__, self.rec_man[recs].tolist()),
+                self.rec_row[recs].tolist()), dtype=object, count=len(recs))
+        o = np.argsort(j * len(recs) + r)
+        j, r = j[o], r[o]
+        eq = self.is_eq[recs[r]]
+        ptup, ptid = _tuples(srcs, n, j[~eq], r[~eq])
+        etup, etid = _tuples(srcs, n, j[eq], r[eq])
+        sel = np.nonzero(ptid | etid)[0]
+        ids, inv = _unique_rows(np.column_stack((ptid[sel], etid[sel])))
+        sets: list = [None]
+        sets.extend(zip(map(ptup.__getitem__, ids[:, 0].tolist()),
+                        map(etup.__getitem__, ids[:, 1].tolist())))
+        pick = np.zeros(n, dtype=np.int64)
+        pick[sel] = 1 + inv
+        return sets, pick
+
+
+def _tuples(srcs, n: int, j, r) -> tuple:
+    """``(tuples, tid)``: one tuple of ``srcs`` per distinct rec set of the
+    ``(survivor, rec)`` pairs (sorted by both), each survivor's index into
+    it (0: empty). Sets of one size dedupe as rows, built by ``zip``."""
+    import numpy as np
+    count = np.bincount(j, minlength=n)
+    start = np.cumsum(count) - count
+    tuples: list = [()]
+    tid = np.zeros(n, dtype=np.int64)
+    for a in np.unique(count[count > 0]).tolist():
+        sel = np.nonzero(count == a)[0]
+        ids, inv = _unique_rows(r[start[sel][:, None] + np.arange(a)])
+        tid[sel] = len(tuples) + inv
+        tuples.extend(zip(*(srcs[ids[:, c]] for c in range(a))))
+    return tuples, tid
 
 
 def _delete_set_bytes(deletes: List["DataFile"]) -> int:
@@ -2193,21 +2200,13 @@ def _decode_file_uri(c):
     return F.url_decode(F.regexp_replace(c, r"\+", "%2B"))
 
 
-def _decode_file_uri_py(p: str) -> str:
-    """Driver twin of _decode_file_uri (unquote leaves ``+`` alone)."""
-    from urllib.parse import unquote
-    return unquote(p)
-
-
 _FILE_SCHEME_RE = __import__("re").compile(r"^file:/*")
 
 
 def _norm_path_py(p: str) -> str:
-    """Python twin of _norm_path for driver-side map keys. The startswith
-    guard matters: delete-index routing + survivor matching call this once
-    per path (O(files + deletes) calls per cold plan), and plain paths —
-    the overwhelming case — must not pay a regex sub (measured 0.65s of a
-    2.3s cold 100k-file MOR plan before the guard)."""
+    """Python twin of _norm_path for driver-side map keys (the delete
+    index normalizes whole arrays with ``_norm_paths``). The startswith
+    guard keeps plain paths — the overwhelming case — off the regex."""
     if p.startswith("file:"):
         return _FILE_SCHEME_RE.sub("/", p)
     return p

@@ -268,7 +268,7 @@ class Table:
         if rewrite:
             files = [t.data_file.file_path for t in rewrite]
             keep_df = self._live_rows_for_files(spark, files) \
-                .filter(~E.to_spark_column(bound))
+                .filter(~E.to_spark_column(bound, schema))
             added = write_data_files(spark, keep_df, md)
             drop_paths += files
         base_seq = md.last_sequence_number
@@ -359,7 +359,7 @@ class Table:
         schema = self.metadata.schema()
         bound = E.bind(pred, schema)
         hits = self.scan(include_metadata_columns=True).to_df(spark) \
-            .filter(E.to_spark_column(bound)) \
+            .filter(E.to_spark_column(bound, schema)) \
             .select(F.regexp_replace(F.col("_file"), "^file:/*", "/").alias("file_path"),
                     F.col("_pos").alias("pos"))
         entries = self._write_position_deletes(spark, hits)
@@ -426,7 +426,7 @@ class Table:
         import pandas as pd
 
         hits = self.scan(include_metadata_columns=True).to_df(spark) \
-            .filter(E.to_spark_column(bound)) \
+            .filter(E.to_spark_column(bound, schema)) \
             .select(F.regexp_replace(F.col("_file"), "^file:/*", "/").alias("fp"),
                     F.col("_pos").alias("pos"))
         loc = self.location
@@ -572,7 +572,7 @@ class Table:
             return self
         files = [t.data_file.file_path for t in plan.tasks]
         df = self._live_rows_for_files(spark, files)
-        cond = E.to_spark_column(bound)
+        cond = E.to_spark_column(bound, schema)
         types = dict(df.dtypes)
         out = df
         if "_last_updated_sequence_number" in out.columns:

@@ -125,24 +125,32 @@ class Schema:
         self.fields: Tuple[NestedField, ...] = tuple(fields)
         self.identifier_field_ids = list(identifier_field_ids or [])
         self._id_to_field: Dict[int, NestedField] = {}
+        self._id_to_path: Dict[int, Tuple[str, ...]] = {}
         self._name_to_id: Dict[str, int] = {}
         for f in self.fields:
-            self._index(f, prefix="")
+            self._index(f, ())
 
-    def _index(self, f: NestedField, prefix: str) -> None:
-        full = prefix + f.name
+    def _index(self, f: NestedField, parent: Tuple[str, ...]) -> None:
+        path = parent + (f.name,)
+        full = ".".join(path)
         if f.field_id in self._id_to_field:
             raise ValueError(f"duplicate field id {f.field_id}")
         self._id_to_field[f.field_id] = f
+        self._id_to_path[f.field_id] = path
         self._name_to_id[full] = f.field_id
         self._name_to_id.setdefault(full.lower(), f.field_id)
         if isinstance(f.field_type, StructType):
             for sub in f.field_type.fields:
-                self._index(sub, prefix=full + ".")
+                self._index(sub, path)
 
     # -- lookups ------------------------------------------------------------
     def field_by_id(self, field_id: int) -> Optional[NestedField]:
         return self._id_to_field.get(field_id)
+
+    def field_path(self, field_id: int) -> Tuple[str, ...]:
+        """The names from the top-level column down to field ``field_id``
+        (struct fields only; one name for a top-level column)."""
+        return self._id_to_path[field_id]
 
     def field_id_for_name(self, name: str, case_sensitive: bool = True) -> Optional[int]:
         if case_sensitive:

@@ -152,27 +152,46 @@ def changes_df(spark: SparkSession, table: Table,
                 "or never existed); the requested history is gone")
         snaps = [s for s in snaps if s.sequence_number <= to_snap.sequence_number]
 
+    # write-schema id of every data file the loop below may read: files
+    # read with the schema they were written with, then projected to the
+    # current schema by field id (a renamed column keeps its values)
+    schema_of: Dict[str, Optional[int]] = {}
+
     def read_files(paths: List[str], with_meta: bool = False) -> DataFrame:
         from ..sources.io import (localize_paths, mirror_remap_pattern,
                                   spark_native_path)
-        read_paths, remap = list(paths), None
-        if not spark_native_path(read_paths[0]):
-            # FileIO data plane (io.py spark_native): read the localized
-            # mirror, report manifest URIs in _cf so delete joins match
-            read_paths = localize_paths(read_paths)
-            remap = mirror_remap_pattern()
-        from ..sources.scan import cached_parquet_relation
-        df = cached_parquet_relation(spark, read_paths, spark_schema)
-        if with_meta:
-            fcol = F.col("_metadata.file_path")
-            if _paths_need_decode(read_paths):
-                fcol = _decode_file_uri(fcol)
-            if remap is not None:
-                fcol = F.regexp_replace(fcol, remap[0], remap[1])
-            df = df.withColumn("_cf", F.regexp_replace(
-                fcol, "^file:/*", "/")) \
-                .withColumn("_cp", F.col("_metadata.row_index"))
-        return df
+        from ..sources.scan import _project_to_schema, cached_parquet_relation
+        by_schema: Dict[Optional[int], List[str]] = {}
+        for p in paths:
+            by_schema.setdefault(schema_of.get(p), []).append(p)
+        out = None
+        for sid, group in by_schema.items():
+            file_schema = next((s for s in md.schemas if s.schema_id == sid),
+                               schema)
+            read_paths, remap = group, None
+            if not spark_native_path(read_paths[0]):
+                # FileIO data plane (io.py spark_native): read the
+                # localized mirror, report manifest URIs in _cf so delete
+                # joins match
+                read_paths = localize_paths(read_paths)
+                remap = mirror_remap_pattern()
+            df = cached_parquet_relation(spark, read_paths,
+                                         file_schema.to_spark())
+            if with_meta:
+                fcol = F.col("_metadata.file_path")
+                if _paths_need_decode(read_paths):
+                    fcol = _decode_file_uri(fcol)
+                if remap is not None:
+                    fcol = F.regexp_replace(fcol, remap[0], remap[1])
+                df = df.withColumn("_file", F.regexp_replace(
+                    fcol, "^file:/*", "/")) \
+                    .withColumn("_pos", F.col("_metadata.row_index"))
+            df = _project_to_schema(df, file_schema, schema,
+                                    keep_meta=with_meta)
+            if with_meta:
+                df = df.withColumnsRenamed({"_file": "_cf", "_pos": "_cp"})
+            out = df if out is None else out.unionByName(df)
+        return out
 
     def stamp(df: DataFrame, change: str, ordinal: int, snap_id: int) -> DataFrame:
         # one selectExpr, not select + 3 withColumn: each Column op is a
@@ -218,6 +237,8 @@ def changes_df(spark: SparkSession, table: Table,
         else:
             data_prev, dels_prev = _file_sets(table, parent)
         prev_sets = (snap.snapshot_id, data_now, dels_now)
+        for files in (data_now, data_prev):
+            schema_of.update((p, f.schema_id) for p, f in files.items())
 
         added = [p for p in data_now if p not in data_prev]
         removed = [p for p in data_prev if p not in data_now]

@@ -1,18 +1,24 @@
 """Test helper: attach a delete index's files to data entries through the
-planner's bulk matcher (``_DeleteFileIndex.match_arrays``), materialized
+planner's bulk matcher (``_DeleteFileIndex.match_many``), materialized
 the way ``ScanPlan.tasks`` materializes an array plan."""
 
 import numpy as np
 
 from iceberg_rust_spark.sources.manifest import ManifestColumns
-from iceberg_rust_spark.sources.scan import FileScanTask
+from iceberg_rust_spark.sources.scan import FileScanTask, _DeleteFileIndex
+
+
+def index_of(*entries):
+    """The delete index of one object-backed manifest holding
+    ``entries``."""
+    return _DeleteFileIndex([ManifestColumns.from_entries(list(entries))])
 
 
 def attach(index, *entries):
     """One FileScanTask per data entry, in order, carrying the position
     and equality deletes ``index`` attaches to it."""
     cols = ManifestColumns.from_entries(list(entries))
-    sets = index.match_arrays(cols, np.arange(cols.n))
+    sets = index.match_many([(cols, np.arange(cols.n))])[0]
     tasks = []
     for j, e in enumerate(entries):
         t = FileScanTask(data_file=e.data_file,

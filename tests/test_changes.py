@@ -31,6 +31,23 @@ def test_changes_append_and_mor_delete(spark, warehouse):
         sorted(r["id"] for r in df.where(F.col("g") == 1).collect())
 
 
+def test_changes_read_by_field_id_after_rename(spark, warehouse):
+    """Files written before a column rename read that column by field id:
+    inserts and MOR-deleted rows alike carry its values under the new
+    name."""
+    df = spark.range(0, 20).select(F.col("id"), (F.col("id") % 4).alias("g"))
+    t = Table.create(warehouse, "db.cdc_rename", schema_from_spark(df.schema))
+    t = t.append(spark, df)
+    t = t.delete_where(spark, E.col("g") == 1, mode="mor")
+    t = t.update_schema().rename_column("g", "g2").commit()
+
+    ch = changes_df(spark, t)
+    assert "g2" in ch.columns and "g" not in ch.columns
+    rows = sorted((r["_change_type"], r["id"], r["g2"]) for r in ch.collect())
+    assert rows == sorted([("insert", i, i % 4) for i in range(20)]
+                          + [("delete", i, 1) for i in range(1, 20, 4)])
+
+
 def test_changes_dv_and_eq_delete(spark, warehouse):
     df = spark.range(0, 50).select(F.col("id"), (F.col("id") % 5).alias("g"))
     t = Table.create(warehouse, "db.cdc2", schema_from_spark(df.schema))

@@ -371,8 +371,7 @@ def test_delete_index_normalizes_uri_spelled_path_bounds():
     silently skip a delete that applies — row resurrection at read."""
     from iceberg_rust_spark.sources.manifest import (
         CONTENT_DATA, CONTENT_POSITION_DELETES, DataFile, ManifestEntry)
-    from iceberg_rust_spark.sources.scan import _DeleteFileIndex
-    from tests.delete_attach import attach
+    from tests.delete_attach import attach, index_of
 
     data = DataFile(file_path="/tmp/wh/db/t/data/a.parquet",
                     content=CONTENT_DATA, record_count=10,
@@ -382,10 +381,9 @@ def test_delete_index_normalizes_uri_spelled_path_bounds():
                   file_size_in_bytes=10,
                   lower_bounds={"file_path": "file:/tmp/wh/db/t/data/a.parquet"},
                   upper_bounds={"file_path": "file:/tmp/wh/db/t/data/a.parquet"})
-    idx = _DeleteFileIndex([ManifestEntry(status=1, snapshot_id=1,
-                                          sequence_number=2,
-                                          file_sequence_number=2,
-                                          data_file=de)])
+    idx = index_of(ManifestEntry(status=1, snapshot_id=1,
+                                 sequence_number=2, file_sequence_number=2,
+                                 data_file=de))
     [task] = attach(idx, ManifestEntry(status=1, snapshot_id=1,
                                        sequence_number=1,
                                        file_sequence_number=1,

@@ -283,9 +283,8 @@ def test_path_scoped_deletes_match_across_file_scheme(
                  referenced_data_file=f"{sc}/wh/d{i}.parquet",
                  content_offset=4, content_size_in_bytes=8)
         for i, sc in zip((1, 3), ref_schemes)])
-    index = scan_mod._DeleteFileIndex()
-    assert index.add_columns(dels) == []
-    sets = index.match_arrays(data, np.arange(data.n))
+    index = scan_mod._DeleteFileIndex([dels])
+    sets = index.match_many([(data, np.arange(data.n))])[0]
     got = [None if x is None else
            [scan_mod._DeleteFileIndex._file(src).file_path for src in x[0]]
            for x in sets]

@@ -483,6 +483,36 @@ def test_embedding_lsh_salted_split_keeps_all_pairs(spark):
         assert r["id_a"] < r["id_b"]
 
 
+def test_lsh_cell_pairs_stream_per_cell():
+    """One large duplicate cluster beside many small cells of the same
+    shuffle partition: the pairs come out per cell (each chunk no larger
+    than the cluster's own pair count, far below the partition's), and
+    they are exactly the brute-force set with each pair's stored vectors
+    attached."""
+    import pandas as pd
+    rows, want = [], set()
+    big = 300
+    for i in range(big):                       # one bucket, one cell
+        rows.append((i, [1.0, 2.0, 3.0], 0, 0))
+    want |= {(i, j) for i in range(big) for j in range(i + 1, big)}
+    for b in range(1, 21):                     # twenty 30-row cells
+        ids = [10_000 * b + k for k in range(30)]
+        rows += [(i, [float(b), 1.0, -1.0], 0, b) for i in ids]
+        want |= {(i, j) for i in ids for j in ids if i < j}
+    pdf = pd.DataFrame(
+        [(i, np.array(v), t, bk, 0, 0, 0) for i, v, t, bk in rows],
+        columns=["vec_id", "_v", "_t", "_bucket", "_salt", "_ci", "_cj"])
+    chunks = list(DD._lsh_cell_pairs(pdf, "vec_id", 0.999))
+    assert max(len(c) for c in chunks) <= big * (big - 1) // 2
+    assert sum(len(c) for c in chunks) == len(want)
+    assert len(chunks) >= 21
+    got = pd.concat(chunks, ignore_index=True)
+    assert set(zip(got["id_a"], got["id_b"])) == want
+    assert (got["id_a"] < got["id_b"]).all()
+    # each cell's vectors are identical, so both stored vectors agree
+    assert all(list(va) == list(vb) for va, vb in zip(got["_va"], got["_vb"]))
+
+
 def test_embedding_lsh_exactness_vs_brute(spark, emb):
     """Partition-local numpy candidates + builtin re-rank: emitted (pair,
     sim) values must match the brute-force operator bit-for-bit on pairs

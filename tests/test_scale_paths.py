@@ -9,9 +9,8 @@ from iceberg_rust_spark import Table, expr as E
 from iceberg_rust_spark.sources.manifest import (CONTENT_EQUALITY_DELETES,
                                                  CONTENT_POSITION_DELETES,
                                                  DataFile, ManifestEntry)
-from iceberg_rust_spark.sources.scan import _DeleteFileIndex
 from iceberg_rust_spark.sources.types import schema_from_spark
-from tests.delete_attach import attach
+from tests.delete_attach import attach, index_of
 
 
 def _ids(spark, n, parts=4):
@@ -114,7 +113,7 @@ def test_delete_index_partition_scoping():
     other_part = _entry(2, CONTENT_POSITION_DELETES, partition={"b": 9},
                         path="del-other.parquet")
     global_del = _entry(2, CONTENT_EQUALITY_DELETES, path="del-glob.parquet")
-    idx = _DeleteFileIndex([same_part, other_part, global_del])
+    idx = index_of(same_part, other_part, global_del)
 
     [task] = attach(idx, data)
     assert [d.file_path for d in task.pos_deletes] == ["del-same.parquet"]
@@ -127,7 +126,7 @@ def test_delete_index_sequence_visibility():
     same_pos = _entry(5, CONTENT_POSITION_DELETES, path="same-pos.parquet")
     same_eq = _entry(5, CONTENT_EQUALITY_DELETES, path="same-eq.parquet")
     new_eq = _entry(6, CONTENT_EQUALITY_DELETES, path="new-eq.parquet")
-    idx = _DeleteFileIndex([old_pos, same_pos, same_eq, new_eq])
+    idx = index_of(old_pos, same_pos, same_eq, new_eq)
 
     [task] = attach(idx, data)
     # pos: seq >= data.seq applies; eq: strictly greater only
@@ -140,7 +139,7 @@ def test_delete_index_referenced_data_file_exact():
     data_b = _entry(1, 0, path="data-B.parquet")
     dv_a = _entry(2, CONTENT_POSITION_DELETES, ref="data-A.parquet",
                   path="dv.puffin")
-    idx = _DeleteFileIndex([dv_a])
+    idx = index_of(dv_a)
 
     ta, tb = attach(idx, data_a, data_b)
     assert len(ta.pos_deletes) == 1 and not tb.pos_deletes
@@ -152,7 +151,7 @@ def test_delete_index_linear_planning_speed():
     import time
     deletes = [_entry(2, CONTENT_POSITION_DELETES, partition={"b": i % 50},
                       path=f"del-{i}.parquet") for i in range(1000)]
-    idx = _DeleteFileIndex(deletes)
+    idx = index_of(*deletes)
     t0 = time.time()
     data = [_entry(1, 0, partition={"b": i % 50}, path=f"data-{i}.parquet")
             for i in range(10_000)]
@@ -367,26 +366,30 @@ def test_concurrent_plans_share_cache_safely(warehouse):
 
 
 def test_bounded_deletes_stab_matches_bruteforce():
-    """Interval stabbing (sorted lows + running-max highs) must return
-    exactly the intervals covering the probe point, on random overlapping
-    interval sets — the structure that keeps partition-scoped bounded
-    pos-deletes O(matches) per survivor instead of O(deletes)."""
+    """Bounded positional deletes (sorted lower bounds + running-max upper
+    bounds) must attach exactly the deletes whose file_path range covers
+    the data path, on random overlapping range sets — the structure that
+    keeps scope-wide bounded pos-deletes O(matches) per survivor instead
+    of O(deletes)."""
     import random
-
-    from iceberg_rust_spark.sources.scan import _BoundedDeletes
     rng = random.Random(7)
     for trial in range(20):
-        b = _BoundedDeletes()
-        ivals = []
+        ivals, dels = [], []
         for k in range(rng.randint(1, 60)):
             lo = rng.randint(0, 900)
             hi = lo + rng.randint(0, 150)
-            ivals.append((f"{lo:04d}", f"{hi:04d}", k))
-            b.add(f"{lo:04d}", f"{hi:04d}", k)
-        for probe in range(0, 1100, 37):
-            p = f"{probe:04d}"
+            ivals.append((f"{lo:04d}", f"{hi:04d}", f"del-{k}"))
+            d = _entry(2, CONTENT_POSITION_DELETES, path=f"del-{k}")
+            d.data_file.lower_bounds["file_path"] = f"{lo:04d}"
+            d.data_file.upper_bounds["file_path"] = f"{hi:04d}"
+            dels.append(d)
+        probes = [f"{p:04d}" for p in range(0, 1100, 37)]
+        tasks = attach(index_of(*dels),
+                       *[_entry(1, 0, path=p) for p in probes])
+        for p, t in zip(probes, tasks):
             want = sorted(k for lo, hi, k in ivals if lo <= p <= hi)
-            assert sorted(b.stab(p)) == want, (trial, p)
+            assert sorted(d.file_path for d in t.pos_deletes) == want, \
+                (trial, p)
 
 
 def test_delete_index_from_columns_matches_entry_built(tmp_path):
@@ -414,10 +417,9 @@ def test_delete_index_from_columns_matches_entry_built(tmp_path):
     p = os.path.join(str(tmp_path), "dels.parquet")
     write_manifest(p, dels)
 
-    from_entries = _DeleteFileIndex(dels)
-    from_cols = _DeleteFileIndex()
-    strays = from_cols.add_columns(read_manifest_columns(p))
-    assert strays == []
+    from iceberg_rust_spark.sources.scan import _DeleteFileIndex
+    from_entries = index_of(*dels)
+    from_cols = _DeleteFileIndex([read_manifest_columns(p)])
 
     for dpath, part in [("/w/data-A.parquet", {"b": 1}),
                         ("/w/data-B.parquet", {"b": 1}),
@@ -517,7 +519,7 @@ def test_delete_index_spec_scoped_partitions():
     # same partition key {"b": 3} under two different specs
     del_spec0 = entry(2, CONTENT_EQUALITY_DELETES, 0, {"b": 3}, "eq0.parquet")
     del_spec1 = entry(2, CONTENT_POSITION_DELETES, 1, {"b": 3}, "pd1.parquet")
-    idx = _DeleteFileIndex([del_spec0, del_spec1])
+    idx = index_of(del_spec0, del_spec1)
 
     data0 = entry(1, 0, 0, {"b": 3}, "d0.parquet")
     data1 = entry(1, 0, 1, {"b": 3}, "d1.parquet")
@@ -843,6 +845,47 @@ def _attach_sig(plan):
          tuple(sorted(d.file_path for d in x.pos_deletes)),
          tuple(sorted(d.file_path for d in x.eq_deletes)))
         for x in plan.tasks)
+
+
+def test_mixed_content_manifests_plan_every_entry(warehouse):
+    """Manifests an external writer mixed: a live position delete inside a
+    data manifest attaches next to the delete manifests' own deletes (in
+    full and filtered plans, twice, so a memoized match cannot hide it),
+    and a live data file inside a delete manifest plans as a task."""
+    from iceberg_rust_spark.sources.scan import _manifest_cache
+    t = _fab_table(warehouse, n_manifests=2, files_per_manifest=4)
+    stray_pos = DataFile(
+        file_path="/nonexistent/del/stray-pos.parquet",
+        content=CONTENT_POSITION_DELETES, partition={"p": 0},
+        record_count=1, lower_bounds={"file_path": "/nonexistent/m0/f1.parquet"},
+        upper_bounds={"file_path": "/nonexistent/m0/f2.parquet"},
+        schema_id=0, spec_id=0)
+    t = t._commit_retry(lambda md: t._snapshot_update(
+        md, "append", added=[stray_pos]))
+    eq = DataFile(file_path="/nonexistent/del/eq.parquet",
+                  content=CONTENT_EQUALITY_DELETES, partition={"p": 1},
+                  record_count=1, equality_ids=[3], schema_id=0, spec_id=0)
+    stray_data = DataFile(file_path="/nonexistent/m9/stray.parquet",
+                          record_count=5, partition={"p": 1},
+                          lower_bounds={"v": 5}, upper_bounds={"v": 5},
+                          schema_id=0, spec_id=0)
+    t = t._commit_retry(lambda md: t._snapshot_update(
+        md, "delete", added_deletes=[eq, stray_data]))
+    _manifest_cache.cache_clear()
+    for _ in range(2):
+        sig = {f: (p, e) for f, p, e in _attach_sig(t.scan().plan_files())}
+        assert sig["/nonexistent/m0/f1.parquet"] == (
+            ("/nonexistent/del/stray-pos.parquet",), ())
+        assert sig["/nonexistent/m0/f0.parquet"] == ((), ())
+        assert sig["/nonexistent/m1/f0.parquet"] == (
+            (), ("/nonexistent/del/eq.parquet",))
+        # the stray data file shares the eq delete's sequence number, and
+        # an equality delete needs a greater one
+        assert sig["/nonexistent/m9/stray.parquet"] == ((), ())
+        assert len(sig) == 9
+        part = {f: (p, e) for f, p, e in _attach_sig(
+            t.scan(row_filter=E.col("p") == 0).plan_files())}
+        assert part == {f: sig[f] for f in sig if "/m0/" in f}
 
 
 def test_fast_plan_with_deletes_matches_object_plan(warehouse):

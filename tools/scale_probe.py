@@ -597,7 +597,7 @@ def main() -> None:
             "the structural floor: the decode set roughly DOUBLES (the",
             "probe adds ~1.1x delete files in ~1x delete manifests).",
             "Cold MOR full-scan is on the r12 ARRAY fast plan: deletes",
-            "attach in BULK (_DeleteFileIndex.match_arrays — per-file",
+            "attach in BULK (_DeleteFileIndex.match_many — per-file",
             "interned delete sets off the survivor arrays, memoized per",
             "(manifest, delete-set)), so warm replans of a live MOR table",
             "are ~the no-deletes wall (was x120 in r11: 0.722s vs 0.006s",
