@@ -67,7 +67,7 @@ BENCH_QUERIES = [
 # runs, quiet loadavg). Normalized walls = min_wall * (REFERENCE_PROBE_SEC /
 # min(run probes)): a loaded machine shows a larger probe, deflating its
 # walls back to idle-equivalent, so cross-run ratios compare ENGINE cost,
-# not ambient load. tools/bench_compare.py consumes this.
+# not ambient load.
 REFERENCE_PROBE_SEC = 0.0846
 
 # Parallelism-sensitive probe (r14): ~5 core-seconds of pure codegen'd CPU

@@ -39,7 +39,7 @@ def get_spark(app_name: str = "iceberg_rust_spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
-        # opt-in event log for measurement sessions (tools/profile_query.py):
+        # opt-in event log for measurement sessions (perfbench/harness.py):
         # job/stage wall attribution without the UI. Off unless the env var
         # names a directory, so bench/driver sessions are unaffected.
         .config("spark.eventLog.enabled",
@@ -87,7 +87,7 @@ def local_df(spark: SparkSession, rows, schema: str,
     """Small driver-local DataFrame via the ARROW createDataFrame path.
 
     The plain ``spark.createDataFrame(list, schema)`` route materializes a
-    pickled Python RDD sliced ``defaultParallelism`` ways, and every action
+    serialized Python RDD sliced ``defaultParallelism`` ways, and every action
     re-evaluates every slice through a Python-worker handshake (~0.14 s per
     slice-evaluation, measured): a 2-row literal frame cost ~0.7 s per action
     on local[32] and serializes into core-count waves on smaller masters. The

@@ -172,7 +172,9 @@ def _read_pq_via_io(path: str) -> "pa.Table":
     return pq.ParquetFile(pa.BufferReader(data)).read(use_threads=False)
 
 
-def write_manifest(path: str, entries: List[ManifestEntry]) -> int:
+def entries_table(entries: List[ManifestEntry]) -> "pa.Table":
+    """Entries in the v2 columnar layout: the one encoder behind both
+    ``write_manifest`` and ``ManifestColumns.from_entries``."""
     rows: Dict[str, list] = {name: [] for name in _MANIFEST_SCHEMA.names}
     for e in entries:
         f = e.data_file
@@ -204,8 +206,11 @@ def write_manifest(path: str, entries: List[ManifestEntry]) -> int:
         rows["content_offset"].append(f.content_offset)
         rows["content_size_in_bytes"].append(f.content_size_in_bytes)
         rows["first_row_id"].append(f.first_row_id)
-    table = pa.table(rows, schema=_MANIFEST_SCHEMA)
-    return _write_pq_via_io(table, path)
+    return pa.table(rows, schema=_MANIFEST_SCHEMA)
+
+
+def write_manifest(path: str, entries: List[ManifestEntry]) -> int:
+    return _write_pq_via_io(entries_table(entries), path)
 
 
 def _jd(s: Optional[str]) -> dict:
@@ -335,8 +340,10 @@ class ManifestColumns:
     handful of DataFiles instead of 100k (measured ~8us per entry+file
     pair, ~0.8s avoided per cold plan).
 
-    Eager: the five per-row primitives planning always touches, as numpy.
-    Lazy (built on first touch, memoized): per-column metric vectors
+    Backed by the manifest's Arrow table alone; entries built elsewhere
+    (``from_entries``) are encoded into that layout first. Eager: the
+    five per-row primitives planning always touches, as numpy. Lazy
+    (built on first touch, memoized): per-column metric vectors
     (``metric_vectors``), partition groups and dicts, full entry
     objects."""
 
@@ -344,55 +351,12 @@ class ManifestColumns:
                  "record_count", "sequence_number", "_tab", "_cols",
                  "_metrics", "_partitions", "_entries", "_entry_memo")
 
-    def __getstate__(self):
-        """Disk-cache serialization (scan._disk_cache): persist the Arrow
-        table + every DERIVED extract already computed (metric vectors,
-        partition dicts, map parts resolve to Arrow arrays — all
-        picklable), but NOT the entry objects — they rebuild lazily and
-        would double the blob for state a selective plan never touches."""
-        drop = (("_entries", "_entry_memo") if self._tab is not None
-                else ("_entry_memo",))     # object-backed: entries ARE the data
-        return {s: getattr(self, s) for s in self.__slots__
-                if s not in drop}
-
-    def __setstate__(self, state):
-        for k, v in state.items():
-            setattr(self, k, v)
-        if self._tab is not None:
-            self._entries = None
-        self._entry_memo = {}
-
-    def __init__(self, table: Optional["pa.Table"],
-                 entries: Optional[List[ManifestEntry]] = None):
-        import numpy as np
+    def __init__(self, table: "pa.Table"):
         self._metrics: Dict[str, tuple] = {}
         self._partitions: Optional[list] = None
-        self._entries = entries
+        self._entries: Optional[List[ManifestEntry]] = None
         self._entry_memo: Dict[int, ManifestEntry] = {}
         self._cols: Dict[str, Any] = {}
-        if table is None:
-            # object-backed (v1 / spec-avro interop): same API, arrays
-            # derived from the already-built entries
-            self._tab = None
-            self.n = len(entries)
-            self.status = np.fromiter((e.status for e in entries),
-                                      dtype="int32", count=self.n)
-            self.content = np.fromiter(
-                (e.data_file.content for e in entries),
-                dtype="int32", count=self.n)
-            self.spec_id = np.fromiter(
-                (e.data_file.spec_id for e in entries),
-                dtype="int32", count=self.n)
-            self.schema_id_raw = np.fromiter(
-                (-1 if e.data_file.schema_id is None else e.data_file.schema_id
-                 for e in entries), dtype="int32", count=self.n)
-            self.record_count = np.fromiter(
-                (e.data_file.record_count for e in entries),
-                dtype="int64", count=self.n)
-            self.sequence_number = np.fromiter(
-                (e.sequence_number for e in entries),
-                dtype="int64", count=self.n)
-            return
         self._tab = table.combine_chunks()
         self.n = table.num_rows
 
@@ -408,7 +372,13 @@ class ManifestColumns:
 
     @classmethod
     def from_entries(cls, entries: List[ManifestEntry]) -> "ManifestColumns":
-        return cls(None, list(entries))
+        """The view of already-built entries (v1 and Avro manifests, stray
+        data rows of delete manifests): encoded as a written manifest
+        would be, with the caller's objects kept as the entry memo, so
+        ``entries()``, ``entry()`` and ``data_file_lite()`` return them."""
+        cols = cls(entries_table(entries))
+        cols._entries = list(entries)
+        return cols
 
     # -- lazy column access ------------------------------------------------
     def _chunk(self, name: str) -> "pa.Array":
@@ -423,32 +393,19 @@ class ManifestColumns:
             got = self._cols[name] = self._chunk(name).to_pylist()
         return got
 
-    def _obj_col(self, name: str, attr) -> list:
-        """Per-row column as a plain list, working for BOTH backings
-        (Arrow table or pre-built entry objects) — the fast-plan path
-        (scan.ScanPlan._fast) reads these instead of building entries."""
-        if self._tab is None:
-            return [attr(e) for e in self._entries]
-        return self._col(name)
-
     def file_paths(self) -> list:
-        return self._obj_col("file_path", lambda e: e.data_file.file_path)
+        return self._col("file_path")
 
     def strings(self, name: str) -> "pa.Array":
         """A string column of the data file (``file_path``,
-        ``referenced_data_file``) as one Arrow array, for either backing."""
-        if self._tab is None:
-            return pa.array([getattr(e.data_file, name)
-                             for e in self._entries], pa.string())
+        ``referenced_data_file``) as one Arrow array."""
         return self._chunk(name)
 
     def file_sizes(self) -> list:
-        return self._obj_col("file_size_in_bytes",
-                             lambda e: e.data_file.file_size_in_bytes)
+        return self._col("file_size_in_bytes")
 
     def first_row_ids(self) -> list:
-        return self._obj_col("first_row_id",
-                             lambda e: e.data_file.first_row_id)
+        return self._col("first_row_id")
 
     def _map_parts(self, name: str):
         """(offsets numpy, keys flat Arrow, items flat Arrow) of a map
@@ -473,60 +430,39 @@ class ManifestColumns:
         ``decode_bounds``) with NaN bounds nulled, plus presence masks.
         Returns ``(vc, vc_p, nc, nc_p, nanc, nanc_p, lo, lo_p, hi, hi_p)``
         — what the planner's metrics matcher (scan._vector_matcher)
-        reads. Arrow-backed, each map
-        column costs one key-equality kernel and one ``take``; the planner
-        touches only the predicate's referenced columns."""
+        reads. Each map column costs one key-equality kernel and one
+        ``take``; the planner touches only the predicate's referenced
+        columns."""
         got = self._metrics.get(file_name)
         if got is not None:
             return got
         import numpy as np
+        import pyarrow.compute as pc
         n = self.n
-        if self._tab is None:
-            import math
 
-            from .datum import to_comparable
-            dfs = [e.data_file for e in self._entries]
+        def take(col):
+            return self._map_take(col, file_name)
 
-            def counts(attr):
-                a = [getattr(f, attr).get(file_name) for f in dfs]
-                return (np.array([0 if v is None else int(v) for v in a],
-                                 dtype="int64"),
-                        np.array([v is not None for v in a], dtype=bool))
+        def counts(col):
+            rows, got = take(col)
+            vals = np.zeros(n, dtype="int64")
+            present = np.zeros(n, dtype=bool)
+            vals[rows] = pc.fill_null(got, 0).to_numpy(
+                zero_copy_only=False)
+            present[rows] = got.is_valid().to_numpy(
+                zero_copy_only=False)
+            return vals, present
 
-            def bounds(attr):
-                vals = np.array(
-                    [None if (v is None or (isinstance(v, float)
-                                            and math.isnan(v))) else v
-                     for v in (to_comparable(getattr(f, attr).get(file_name))
-                               for f in dfs)], dtype=object)
-                return vals, np.array([v is not None for v in vals],
-                                      dtype=bool)
-        else:
-            import pyarrow.compute as pc
-
-            def take(col):
-                return self._map_take(col, file_name)
-
-            def counts(col):
-                rows, got = take(col)
-                vals = np.zeros(n, dtype="int64")
-                present = np.zeros(n, dtype=bool)
-                vals[rows] = pc.fill_null(got, 0).to_numpy(
-                    zero_copy_only=False)
-                present[rows] = got.is_valid().to_numpy(
-                    zero_copy_only=False)
-                return vals, present
-
-            def bounds(col):
-                rows, got = take(col)
-                dec, nan = decode_bounds(got)
-                dec[nan] = None
-                vals = np.full(n, None, dtype=object)
-                present = np.zeros(n, dtype=bool)
-                vals[rows] = dec
-                present[rows] = (got.is_valid().to_numpy(zero_copy_only=False)
-                                 & ~nan)
-                return vals, present
+        def bounds(col):
+            rows, got = take(col)
+            dec, nan = decode_bounds(got)
+            dec[nan] = None
+            vals = np.full(n, None, dtype=object)
+            present = np.zeros(n, dtype=bool)
+            vals[rows] = dec
+            present[rows] = (got.is_valid().to_numpy(zero_copy_only=False)
+                             & ~nan)
+            return vals, present
 
         got = self._metrics[file_name] = (
             *counts("value_counts"), *counts("null_value_counts"),
@@ -549,12 +485,6 @@ class ManifestColumns:
         ``file_name`` bounds that are strings (null elsewhere): the delete
         index's ``file_path`` ranges, from the two bound maps only."""
         import numpy as np
-        if self._tab is None:
-            return tuple(
-                pa.array([v if isinstance(v, str) else None
-                          for v in (getattr(e.data_file, attr).get(file_name)
-                                    for e in self._entries)], pa.string())
-                for attr in ("lower_bounds", "upper_bounds"))
         import pyarrow.compute as pc
         out = []
         for col in ("lower_bounds", "upper_bounds"):
@@ -579,8 +509,6 @@ class ManifestColumns:
         return dict(zip(ks, vs))
 
     def partition(self, i: int) -> Dict[str, Any]:
-        if self._tab is None:
-            return self._entries[i].data_file.partition
         return self._partitions_all()[i]
 
     def _list_row(self, name: str, i: int) -> list:
@@ -778,19 +706,6 @@ class ManifestColumns:
         n = self.n
         if n == 0:
             got = (np.zeros(0, dtype=np.int64), [])
-            self._cols["__pgroups__"] = got
-            return got
-        if self._tab is None:
-            parts, codes, memo = [], np.empty(n, dtype=np.int64), {}
-            for i, e in enumerate(self._entries):
-                raw = tuple(sorted(e.data_file.partition.items(),
-                                   key=lambda kv: kv[0]))
-                c = memo.get(raw)
-                if c is None:
-                    c = memo[raw] = len(parts)
-                    parts.append(e.data_file.partition)
-                codes[i] = c
-            got = (codes, parts)
             self._cols["__pgroups__"] = got
             return got
         offs, keys, items = self._map_parts("partition")

@@ -67,8 +67,8 @@ def _memory_budget() -> int:
 class _ManifestCache:
     """The one cache for immutable metadata objects: one byte-weighted LRU
     (the reference's object cache, io/object_cache.rs:22-60) keyed by
-    ``(kind, path, mtime_ns, extra)``. Kinds: ``manifest`` (``get``, with
-    the opt-in disk tier), ``manifest_list``, ``delete_index`` (path None;
+    ``(kind, path, mtime_ns, extra)``. Kinds: ``manifest`` (``get``),
+    ``manifest_list``, ``delete_index`` (path None;
     ``extra`` is the surviving delete-manifest set with each stamp),
     ``delete_match`` and ``dv``. Every value is weighed once, at insert,
     and the least recently used values go once the bytes held pass the
@@ -131,11 +131,10 @@ class _ManifestCache:
         return got
 
     def get(self, path: str, mtime_ns: int) -> "ManifestColumns":
-        """A manifest's columnar view (the ``manifest`` kind): a miss tries
-        the opt-in disk tier, then decodes."""
+        """A manifest's columnar view (the ``manifest`` kind), decoded on
+        a miss."""
         return self.load("manifest", path, mtime_ns, None,
-                         lambda: (_disk_cache_load(path, mtime_ns)
-                                  or _decode_manifest(path)),
+                         lambda: _decode_manifest(path),
                          lambda v: max(1, v.n) * _MANIFEST_ENTRY_BYTES)
 
     def stats(self, kind: str) -> Dict[str, int]:
@@ -154,102 +153,6 @@ class _ManifestCache:
 
 
 _manifest_cache = _ManifestCache()
-
-
-# ----------------------------------------------------------------------
-# opt-in persistent manifest cache (env ICEBERG_SPARK_MANIFEST_DISK_CACHE
-# = a TRUSTED local directory): decoded columnar views pickle to
-# {sha1(path)}-{mtime}.pkl so a RESTARTED driver plans warm. Measured
-# 0.2ms/manifest to load vs 7.9ms to decode+derive — cold
-# metrics-selective planning at 100k files drops from ~1s to warm-like
-# figures. Keyed by (path, mtime) like the in-memory caches, so a
-# rewritten manifest naturally misses; stale keys are harmless garbage.
-# Corrupt/unreadable blobs fall back to a normal decode. Stores happen
-# at the END of plan_files (after the plan touched metric vectors /
-# partitions), so the persisted state includes the derived extracts.
-#
-# Layout version: blobs are pickles of ManifestColumns INTERNALS (slots,
-# memo tuple shapes). (path, mtime) keying cannot invalidate on a code
-# upgrade — a stale blob from an older build can unpickle cleanly into
-# the new class and fail at USE time (tuple-unpack in _vector_matcher),
-# outside the load-time catch. Bump whenever ManifestColumns slots or
-# memo shapes change so stale blobs miss cleanly.
-_DISK_CACHE_LAYOUT = 4
-
-
-def _disk_cache_dir() -> Optional[str]:
-    d = os.environ.get("ICEBERG_SPARK_MANIFEST_DISK_CACHE") or None
-    if d is None:
-        return None
-    return d if _disk_cache_dir_safe(d) else None
-
-
-@functools.lru_cache(maxsize=8)
-def _disk_cache_dir_safe(d: str) -> bool:
-    """pickle.load from this directory is arbitrary code execution if other
-    users can write to it. Refuse (fall back to normal decode) unless the
-    directory is owned by the current user and not group/world-writable;
-    create it 0700 when absent. Checked once per dir per process."""
-    import stat
-    try:
-        try:
-            st = os.stat(d)
-        except FileNotFoundError:
-            os.makedirs(d, mode=0o700, exist_ok=True)
-            st = os.stat(d)
-        if not stat.S_ISDIR(st.st_mode):
-            return False
-        if hasattr(os, "geteuid") and st.st_uid != os.geteuid():
-            return False
-        if st.st_mode & (stat.S_IWGRP | stat.S_IWOTH):
-            return False
-        return True
-    except Exception:
-        return False
-
-
-def _disk_cache_path(cache_dir: str, path: str, mtime_ns: int) -> str:
-    import hashlib
-    h = hashlib.sha1(path.encode()).hexdigest()[:24]
-    return os.path.join(cache_dir,
-                        f"{h}-{mtime_ns}-v{_DISK_CACHE_LAYOUT}.pkl")
-
-
-def _disk_cache_load(path: str, mtime_ns: int) -> Optional["ManifestColumns"]:
-    d = _disk_cache_dir()
-    if d is None:
-        return None
-    import pickle
-    try:
-        with open(_disk_cache_path(d, path, mtime_ns), "rb") as fh:
-            return pickle.load(fh)
-    except Exception:
-        return None                     # miss or corrupt: decode normally
-
-
-def _disk_cache_store(path: str, mtime_ns: int, cols: "ManifestColumns") -> None:
-    d = _disk_cache_dir()
-    if d is None or cols._tab is None:  # object-backed views stay in-memory
-        return
-    import pickle
-    target = _disk_cache_path(d, path, mtime_ns)
-    if os.path.exists(target):
-        return
-    try:
-        import threading
-        import uuid
-        # dir exists (created 0700 by _disk_cache_dir_safe)
-        # pid alone is NOT unique here: concurrent plan_files callers in
-        # one process would interleave writes into the same tmp file and
-        # publish a corrupt blob (load falls back to decode, but the
-        # cache would be poisoned until the mtime changes)
-        tmp = (target + f".tmp{os.getpid()}-{threading.get_ident()}"
-               f"-{uuid.uuid4().hex[:8]}")
-        with open(tmp, "wb") as fh:
-            pickle.dump(cols, fh, protocol=5)
-        os.replace(tmp, target)         # atomic publish
-    except Exception:
-        pass                            # best-effort: never fail a plan
 
 
 def load_manifest(path: str) -> Sequence[ManifestEntry]:
@@ -543,14 +446,14 @@ class TableScan:
         # surviving delete-manifest set: manifests are immutable, so
         # repeated plans over the same MOR table skip the build.
         # mtimes captured ONCE per manifest, at LOAD time, and reused for
-        # BOTH the cache key and the disk-cache store: re-fetching mtime
-        # at store time could publish old decoded content under a NEW
-        # mtime if the manifest were replaced in place mid-plan
-        # (permanent poisoning). Data-manifest mtimes are fetched INSIDE
-        # the decode pool (one serial stat per remote manifest here would
-        # add O(manifests) blocking round-trips before any decode starts);
-        # delete-manifest mtimes are needed NOW for the index cache key —
-        # pooled when the set is large or remote.
+        # BOTH the manifest cache key and the delete_match memo key:
+        # re-fetching the mtime for the memo could store a match computed
+        # from the old decoded content under a NEW mtime if the manifest
+        # were replaced in place mid-plan. Data-manifest mtimes are fetched
+        # INSIDE the decode pool (one serial stat per remote manifest here
+        # would add O(manifests) blocking round-trips before any decode
+        # starts); delete-manifest mtimes are needed NOW for the index
+        # cache key — pooled when the set is large or remote.
         mtime_of: Dict[str, int] = {}
         # pool workers insert concurrently (submit_all lambdas): guard the
         # dict like the module's other shared state so free-threaded
@@ -586,8 +489,7 @@ class TableScan:
             driver over prepared columns — measured faster than running it
             on the pool, where 16 interpreter loops just fight the GIL."""
             if always_true:
-                if cols._tab is not None:
-                    cols._col("file_path")  # the one column to_df reads
+                cols._col("file_path")      # the one column to_df reads
                 return cols
             if cols.n:
                 dm = ((cols.status != STATUS_DELETED)
@@ -657,7 +559,7 @@ class TableScan:
 
         def submit_all(mfs, fn):
             # _mt runs on the pool worker: the stat overlaps across
-            # manifests and is pinned for _persist afterwards
+            # manifests and is pinned for the delete_match memo key
             return [pool.submit(
                 lambda m=m: fn(_manifest_cache.get(
                     m.manifest_path, _mt(m.manifest_path))))
@@ -677,14 +579,6 @@ class TableScan:
         finally:
             if pool is not None:
                 pool.shutdown(wait=True)
-        def _persist(mfs, cols_list):
-            """Opt-in disk cache write-back (post-enrichment, best-effort);
-            keyed by the mtime captured at plan START (see mtime_of)."""
-            if _disk_cache_dir() is not None:
-                for m, c in zip(mfs, cols_list):
-                    _disk_cache_store(m.manifest_path,
-                                      mtime_of[m.manifest_path], c)
-
         if cached is None:
             # build unlocked (concurrent misses may build twice — benign,
             # manifests are immutable)
@@ -696,7 +590,6 @@ class TableScan:
                           for i in np.nonzero(
                               (cols.status != STATUS_DELETED)
                               & (cols.content == CONTENT_DATA))[0]]
-            _persist(surviving_dels, del_cols)
             delete_index, stray_data = _manifest_cache.insert(
                 dindex_key, (delete_index, stray_data),
                 max(1, sum(c.n for c in del_cols))
@@ -704,7 +597,6 @@ class TableScan:
         else:
             delete_index, stray_data = cached
         loaded = [f.result() for f in data_futs]
-        _persist(surviving_data, loaded)
 
         # live DELETE rows inside data manifests (rare, external writers)
         # join the cached index's in a per-plan one, matched unmemoized
@@ -922,21 +814,12 @@ class TableScan:
         return ev(bound) & (cols.record_count != 0)
 
     def _metrics_for_file(self, df_: DataFile, current_schema: Schema,
-                          ref_cols: Optional[frozenset] = None,
-                          _map_cache: Optional[dict] = None
+                          ref_cols: Optional[frozenset] = None
                           ) -> Dict[str, ColumnMetrics]:
         """Map file-local column stats to CURRENT schema names via field
         ids. ``ref_cols`` restricts the work to the predicate's referenced
-        columns (sound: missing metrics evaluate as might-match); the
-        optional ``_map_cache`` memoizes the per-schema-id name mapping
-        across a plan's files."""
-        if _map_cache is not None:
-            name_map = _map_cache.get(df_.schema_id)
-            if name_map is None:
-                name_map = _map_cache[df_.schema_id] = \
-                    self._name_mapping(df_.schema_id, current_schema)
-        else:
-            name_map = self._name_mapping(df_.schema_id, current_schema)
+        columns (sound: missing metrics evaluate as might-match)."""
+        name_map = self._name_mapping(df_.schema_id, current_schema)
         out: Dict[str, ColumnMetrics] = {}
         names = name_map if ref_cols is None else ref_cols
         for cur_name in names:
@@ -985,8 +868,11 @@ class TableScan:
     def count_rows(self, spark: Optional[SparkSession] = None) -> int:
         """Metadata-only COUNT(*) pushdown: files whose manifest stats PROVE
         every row matches the filter (StrictMetricsEvaluator) and that carry
-        no deletes contribute their manifest `record_count` without any data
-        read; only the residual files are scanned. At 100 TB a
+        no deletes, or only their deletion vector, contribute their manifest
+        `record_count` (less the DV's cardinality) without any data read;
+        only the residual files are scanned. One walk over the array plan;
+        delete-free manifests of an unfiltered count sum their
+        record_count vector. At 100 TB a
         partition-aligned count touches zero data bytes — the planner reads
         manifests, not parquet (the same trick Spark's Iceberg source uses
         for SELECT COUNT(*)). Raises if residual files need reading and no
@@ -998,74 +884,61 @@ class TableScan:
             return 0
         schema = self._scan_schema(md, plan.snapshot)
         bound = E.bind(self.row_filter, schema, self.case_sensitive)
-        if plan._fast is not None and plan._tasks is None \
-                and isinstance(bound, E.AlwaysTrue):
-            # AlwaysTrue array plan: record_count sums straight off the
-            # manifest arrays for files with NO applicable deletes; only
-            # delete-bearing files materialize tasks for a data read
-            total = 0
-            residual: List[FileScanTask] = []
+        always = isinstance(bound, E.AlwaysTrue)
+        refs = _pred_columns(bound)
+        total = 0
+
+        def counted(rc: int, data_file, pos, eq) -> bool:
+            """Add a file's live rows from metadata alone where they are
+            proven: no equality deletes, no positional delete but its
+            deletion vector (v3: a DV's record_count is its cardinality,
+            and it supersedes every earlier positional delete of its
+            file), and stats proving every row matches the filter."""
+            nonlocal total
+            if eq or len(pos) > 1:
+                return False
+            dv = 0
+            if pos:
+                d = pos[0]
+                if d.file_format != "puffin" or d.referenced_data_file is None:
+                    return False
+                dv = d.record_count
+            if not always and not file_must_match(
+                    bound, self._metrics_for_file(data_file(), schema, refs),
+                    rc):
+                return False
+            total += rc - dv
+            return True
+
+        if plan._tasks is not None:
+            # a caller narrowed ``tasks`` (incremental scans)
+            residual = [t for t in plan._tasks if not counted(
+                t.data_file.record_count, lambda t=t: t.data_file,
+                t.pos_deletes, t.eq_deletes)]
+        else:
+            residual = []
             fmemo: Dict[int, DataFile] = {}
             for c, ix, sets in plan._fast:
-                if sets is None:
+                if sets is None and always:
+                    # delete-free manifest: the record_count vector sums
                     total += int(c.record_count[ix].sum())
                     continue
                 rc = c.record_count
-                for j, i in enumerate(ix):
-                    s = sets[j]
-                    if s is None:
-                        total += int(rc[int(i)])
+                for j, i in enumerate(ix.tolist()):
+                    s = None if sets is None else sets[j]
+                    pos = [] if s is None else [_lite_file(fmemo, x)
+                                                for x in s[0]]
+                    eq = [] if s is None else [_lite_file(fmemo, x)
+                                               for x in s[1]]
+                    if counted(int(rc[i]), lambda: c.entry(i).data_file,
+                               pos, eq):
                         continue
-                    if not s[1] and len(s[0]) == 1:
-                        # v3 deletion vector: exact count is metadata-only.
-                        # A DV's record_count IS its cardinality, and the
-                        # spec requires a DV to supersede (contain) every
-                        # earlier positional delete of its file — so for a
-                        # file whose sole attached delete is its DV,
-                        # live rows = record_count - cardinality, no data
-                        # read. Files with eq deletes or multiple pos
-                        # sources stay residual.
-                        d = _lite_file(fmemo, s[0][0])
-                        if (d.file_format == "puffin"
-                                and d.referenced_data_file is not None):
-                            total += int(rc[int(i)]) - d.record_count
-                            continue
-                    e = c.entry(int(i))
+                    e = c.entry(i)
                     task = FileScanTask(data_file=e.data_file,
                                         sequence_number=e.sequence_number)
-                    task.pos_deletes.extend(_lite_file(fmemo, x)
-                                            for x in s[0])
-                    task.eq_deletes.extend(_lite_file(fmemo, x)
-                                           for x in s[1])
+                    task.pos_deletes.extend(pos)
+                    task.eq_deletes.extend(eq)
                     residual.append(task)
-            self.last_count_residual_files = len(residual)
-            if residual:
-                if spark is None:
-                    raise ValueError(
-                        f"{len(residual)} files need a data read to count "
-                        "exactly; pass a SparkSession")
-                total += self.to_df(spark, _tasks=residual).count()
-            return int(total)
-        total, residual = 0, []
-        for task in plan.tasks:
-            df_ = task.data_file
-            dv_only = (not task.eq_deletes and len(task.pos_deletes) == 1
-                       and task.pos_deletes[0].file_format == "puffin"
-                       and task.pos_deletes[0].referenced_data_file
-                       is not None)
-            if (task.pos_deletes and not dv_only) or task.eq_deletes:
-                residual.append(task)
-            elif isinstance(bound, E.AlwaysTrue) or file_must_match(
-                    bound, self._metrics_for_file(df_, schema),
-                    df_.record_count):
-                # stats prove every row matches; a sole DV subtracts its
-                # cardinality (v3: the DV supersedes all earlier pos
-                # deletes of the file), still metadata-only
-                total += df_.record_count
-                if dv_only:
-                    total -= task.pos_deletes[0].record_count
-            else:
-                residual.append(task)
         self.last_count_residual_files = len(residual)
         if residual:
             if spark is None:
@@ -1073,7 +946,7 @@ class TableScan:
                     f"{len(residual)} files need a data read to count "
                     "exactly; pass a SparkSession")
             total += self.to_df(spark, _tasks=residual).count()
-        return total
+        return int(total)
 
     def to_df(self, spark: SparkSession,
               _tasks: Optional[List[FileScanTask]] = None) -> DataFrame:

@@ -9,8 +9,7 @@ from iceberg_rust_spark.sources.scan import FileScanTask, _DeleteFileIndex
 
 
 def index_of(*entries):
-    """The delete index of one object-backed manifest holding
-    ``entries``."""
+    """The delete index of one manifest view built from ``entries``."""
     return _DeleteFileIndex([ManifestColumns.from_entries(list(entries))])
 
 

@@ -337,7 +337,7 @@ def test_partition_mask_equals_per_entry(pred, layout, written):
     """The planner's partition mask (one partition_might_match per
     distinct (partition, spec) pair, scattered by partition_groups codes)
     must equal the per-entry partition_might_match over random multi-spec
-    layouts, object-backed and through a written manifest."""
+    layouts, through ``from_entries`` and through a written manifest."""
     import numpy as np
 
     from iceberg_rust_spark.functions.transforms import parse_transform

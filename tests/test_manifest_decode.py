@@ -3,7 +3,7 @@ the per-value decode it replaces.
 
 - ``decode_bounds`` (read by ``ManifestColumns.metric_vectors``) against
   ``to_comparable(de_scalar(v))``, cell by cell, equal in type and value,
-  for every tag, through written manifests and the object-backed view.
+  for every tag, through written manifests and ``from_entries`` views.
 - A cold metrics-selective plan calls ``de_scalar`` zero times.
 - Path-scoped deletes attach whichever column spells its paths with the
   ``file:`` scheme.
@@ -121,7 +121,7 @@ files_stats = st.lists(st.tuples(
 @settings(max_examples=300, deadline=None)
 def test_metric_vectors_equal_per_value(stats, written, tmp_path_factory):
     """``metric_vectors`` over a written manifest and over the
-    object-backed view: counts exact with presence, bounds the per-value
+    ``from_entries`` view: counts exact with presence, bounds the per-value
     comparable (NaN and null read absent), absent keys absent."""
     def only(v):
         return {} if v == "absent" else {"a": v}

@@ -5,9 +5,9 @@ file_path-bounded / partition-scoped / global / equality deletes over
 random data-file layouts must produce exactly the per-file attachment sets
 the rules give — pos deletes when dseq >= seq, eq deletes when dseq > seq,
 same (spec_id, partition) or global scope, exact referenced_data_file,
-file_path bounds. Each layout runs through object-backed columns
+file_path bounds. Each layout runs through columns built from entries
 (``ManifestColumns.from_entries``) and through written and re-read
-Parquet manifests, so the Arrow kernels are checked too. Also pins
+Parquet manifests, which must give equal views. Also pins
 ManifestColumns.partition_groups (run-deduplicated decode) to
 _partitions_all on random fixed-width and ragged partition maps, and the
 Arrow path normalization to its Python twin."""
@@ -43,6 +43,9 @@ def _data_entry(i, seq, part, spec=0, scheme=""):
         file_sequence_number=seq,
         data_file=DataFile(file_path=scheme + _canon(i),
                            record_count=10, file_size_in_bytes=100,
+                           value_counts={"k": 10},
+                           null_value_counts={"k": i % 3},
+                           lower_bounds={"k": i}, upper_bounds={"k": i + seq},
                            partition=dict(part), schema_id=0, spec_id=spec))
 
 
@@ -150,6 +153,21 @@ def _written(entries, d):
     return cols
 
 
+def _assert_same_view(a, b):
+    """Two views of one manifest give equal derived arrays."""
+    assert a.strings("file_path").equals(b.strings("file_path"))
+    assert a.strings("referenced_data_file").equals(
+        b.strings("referenced_data_file"))
+    ca, pa_ = a.partition_groups()
+    cb, pb = b.partition_groups()
+    assert np.array_equal(ca, cb) and pa_ == pb
+    for name in ("file_path", "k"):
+        for x, y in zip(a.string_bounds(name), b.string_bounds(name)):
+            assert x.equals(y)
+        for x, y in zip(a.metric_vectors(name), b.metric_vectors(name)):
+            assert x.dtype == y.dtype and x.tolist() == y.tolist()
+
+
 @settings(max_examples=200, deadline=None)
 @given(layout=mor_layout())
 def test_match_arrays_equals_spec_rules(layout, tmp_path_factory):
@@ -163,6 +181,10 @@ def test_match_arrays_equals_spec_rules(layout, tmp_path_factory):
     want = _attach_by_rules(files, dels)
     want = [want[i] for i in survivors]
     d = str(tmp_path_factory.mktemp("match"))
+    for es in [entries] + [es for es in by_manifest if es]:
+        _assert_same_view(ManifestColumns.from_entries(es), _written(es, d))
+        assert all(a is b for a, b in zip(
+            ManifestColumns.from_entries(es).entries(), es, strict=True))
     for build in (ManifestColumns.from_entries,
                   lambda es: _written(es, d)):
         index = _DeleteFileIndex([build(es) for es in by_manifest if es])
@@ -213,7 +235,6 @@ def test_partition_groups_matches_partitions_all(rows):
     entries = [_data_entry(i, 1, {}) for i in range(len(rows))]
     for e, part in zip(entries, rows):
         e.data_file.partition = part
-    # object-backed
     oc = ManifestColumns.from_entries(entries)
     codes, parts = oc.partition_groups()
     assert [parts[c] for c in codes] == [e.data_file.partition

@@ -226,7 +226,6 @@ def _stub_manifest_decoder(monkeypatch, n=100):
     def decode(path):
         calls.append(path)
         return _Cols(n)
-    monkeypatch.delenv("ICEBERG_SPARK_MANIFEST_DISK_CACHE", raising=False)
     monkeypatch.setattr(man_mod, "read_manifest_columns", decode)
     return calls
 
@@ -561,11 +560,18 @@ def test_fast_plan_matches_object_plan(warehouse):
 
 def test_fast_plan_count_rows_reads_arrays(warehouse):
     """count_rows on an AlwaysTrue no-deletes plan sums record_count off
-    the manifest arrays — no SparkSession, no task objects."""
+    the manifest arrays — no SparkSession, no task objects. A filter whose
+    stats prove every row matches, and a scan whose tasks a caller
+    narrowed (incremental), count from metadata too."""
     t = _fab_table(warehouse, n_manifests=3, files_per_manifest=20)
     scan = t.scan()
     assert scan.count_rows() == 3 * 20 * 100    # record_count=100/file
     assert scan.last_count_residual_files == 0
+    scan = t.scan(row_filter=E.col("v") >= 1000)    # manifests 1 and 2
+    assert scan.count_rows() == 2 * 20 * 100
+    assert scan.last_count_residual_files == 0
+    first = t.metadata.snapshots[0].snapshot_id     # manifest 0's append
+    assert t.incremental_scan(first).count_rows() == 2 * 20 * 100
 
 
 def test_fast_plan_to_df_reads_rows(spark, warehouse):
@@ -656,144 +662,6 @@ def test_concurrent_cold_mor_plans_identical(warehouse):
     # the f0..f9 run's bounded delete + the partition eq delete attach
     sample = results[0][0]
     assert len(sample[1]) == 1 and len(sample[2]) == 1
-
-
-def test_manifest_disk_cache_round_trip(warehouse, tmp_path, monkeypatch):
-    """Opt-in persistent manifest cache: after one plan with
-    ICEBERG_SPARK_MANIFEST_DISK_CACHE set, a COLD driver (cleared
-    in-memory cache, manifest decode forcibly broken) must plan the same
-    table purely from the disk blobs — identical tasks and counters."""
-    import os
-
-    import iceberg_rust_spark.sources.manifest as manifest_mod
-    from iceberg_rust_spark.sources.scan import _manifest_cache
-
-    cache_dir = str(tmp_path / "mcache")
-    monkeypatch.setenv("ICEBERG_SPARK_MANIFEST_DISK_CACHE", cache_dir)
-    t = _fab_table(warehouse, n_manifests=3, files_per_manifest=40)
-    _manifest_cache.cache_clear()
-    pred = E.col("v") > 1000
-    plan1 = t.scan(row_filter=pred).plan_files()
-    want = sorted(x.data_file.file_path for x in plan1.tasks)
-    blobs = os.listdir(cache_dir)
-    assert len(blobs) == 3 and all(b.endswith(".pkl") for b in blobs)
-
-    # cold driver: in-memory caches gone AND parquet decode broken —
-    # only the disk cache can satisfy the plan now
-    _manifest_cache.cache_clear()
-
-    def boom(path):
-        raise AssertionError(f"decode reached for {path}; disk cache missed")
-
-    monkeypatch.setattr(manifest_mod, "read_manifest_columns", boom)
-    plan2 = t.scan(row_filter=pred).plan_files()
-    got = sorted(x.data_file.file_path for x in plan2.tasks)
-    assert got == want
-    assert plan2.total_data_files == plan1.total_data_files
-    assert plan2.skipped_by_metrics == plan1.skipped_by_metrics
-
-    # a REWRITTEN manifest (different mtime) must miss and decode fresh
-    monkeypatch.undo()  # restore decode + env for other fixtures
-
-
-def test_manifest_disk_cache_concurrent_stores_valid(warehouse, tmp_path,
-                                                     monkeypatch):
-    """N threads planning the same table COLD with the disk cache on must
-    publish only VALID blobs (a pid-shared tmp name used to interleave
-    concurrent writes into one file) — every blob must unpickle and a
-    blob-served cold plan must match."""
-    import os
-    import pickle
-    from concurrent.futures import ThreadPoolExecutor
-
-    from iceberg_rust_spark.sources.scan import _manifest_cache
-
-    cache_dir = str(tmp_path / "mcache_c")
-    monkeypatch.setenv("ICEBERG_SPARK_MANIFEST_DISK_CACHE", cache_dir)
-    t = _fab_table(warehouse, n_manifests=4, files_per_manifest=30)
-    pred = E.col("v") > 500
-
-    def one(_):
-        plan = t.scan(row_filter=pred).plan_files()
-        return sorted(x.data_file.file_path for x in plan.tasks)
-
-    for _trial in range(3):
-        _manifest_cache.cache_clear()
-        with ThreadPoolExecutor(max_workers=8) as ex:
-            results = list(ex.map(one, range(8)))
-        assert all(r == results[0] for r in results[1:])
-    blobs = [f for f in os.listdir(cache_dir) if f.endswith(".pkl")]
-    assert len(blobs) == 4
-    for b in blobs:
-        with open(os.path.join(cache_dir, b), "rb") as fh:
-            cols = pickle.load(fh)      # corrupt blob would raise here
-        assert cols.n == 30
-    # blob-served cold plan agrees
-    _manifest_cache.cache_clear()
-    assert one(0) == results[0]
-
-
-def test_manifest_disk_cache_stale_layout_blob_misses(warehouse, tmp_path,
-                                                      monkeypatch):
-    """A blob written by an OLDER build (different ManifestColumns layout)
-    must MISS cleanly — the layout version is part of the filename, so a
-    planted stale-layout blob is never even opened, and the plan falls
-    back to a normal decode instead of crashing at use time."""
-    import os
-    import pickle
-
-    from iceberg_rust_spark.sources import scan as scan_mod
-    from iceberg_rust_spark.sources.scan import _manifest_cache
-
-    cache_dir = str(tmp_path / "mcache_v")
-    monkeypatch.setenv("ICEBERG_SPARK_MANIFEST_DISK_CACHE", cache_dir)
-    t = _fab_table(warehouse, n_manifests=2, files_per_manifest=20)
-    pred = E.col("v") > 300
-    _manifest_cache.cache_clear()
-    plan1 = t.scan(row_filter=pred).plan_files()
-    want = sorted(x.data_file.file_path for x in plan1.tasks)
-    blobs = sorted(os.listdir(cache_dir))
-    assert blobs and all(
-        b.endswith(f"-v{scan_mod._DISK_CACHE_LAYOUT}.pkl") for b in blobs)
-
-    # simulate an upgrade: rewrite every blob under the PREVIOUS layout
-    # version with garbage internals that would crash if unpickled+used
-    for b in blobs:
-        old_name = b.replace(f"-v{scan_mod._DISK_CACHE_LAYOUT}.pkl",
-                             f"-v{scan_mod._DISK_CACHE_LAYOUT - 1}.pkl")
-        with open(os.path.join(cache_dir, old_name), "wb") as fh:
-            pickle.dump({"stale": "layout"}, fh)
-        os.unlink(os.path.join(cache_dir, b))
-
-    _manifest_cache.cache_clear()
-    plan2 = t.scan(row_filter=pred).plan_files()   # must decode fresh
-    assert sorted(x.data_file.file_path for x in plan2.tasks) == want
-    # and the fresh decode re-published current-layout blobs
-    fresh = [b for b in os.listdir(cache_dir)
-             if b.endswith(f"-v{scan_mod._DISK_CACHE_LAYOUT}.pkl")]
-    assert len(fresh) == 2
-
-
-def test_manifest_disk_cache_refuses_unsafe_dir(warehouse, tmp_path,
-                                                monkeypatch):
-    """A group/world-writable cache dir is a pickle-execution hazard:
-    the cache must refuse it (plan normally, publish no blobs)."""
-    import os
-
-    from iceberg_rust_spark.sources import scan as scan_mod
-    from iceberg_rust_spark.sources.scan import _manifest_cache
-
-    cache_dir = str(tmp_path / "mcache_w")
-    os.makedirs(cache_dir)
-    os.chmod(cache_dir, 0o777)
-    scan_mod._disk_cache_dir_safe.cache_clear()
-    monkeypatch.setenv("ICEBERG_SPARK_MANIFEST_DISK_CACHE", cache_dir)
-    t = _fab_table(warehouse, n_manifests=2, files_per_manifest=10)
-    _manifest_cache.cache_clear()
-    plan = t.scan(row_filter=E.col("v") > 0).plan_files()
-    assert plan.total_data_files == 20
-    assert os.listdir(cache_dir) == []     # nothing written to unsafe dir
-    scan_mod._disk_cache_dir_safe.cache_clear()
 
 
 # ------------------------------------------- r12: fast array plan + deletes
@@ -1036,22 +904,18 @@ def test_fast_plan_mor_to_df_rows(spark, warehouse):
     assert got == want
 
 
-def test_concurrent_commit_vs_planners_consistent(warehouse, tmp_path,
-                                                  monkeypatch):
+def test_concurrent_commit_vs_planners_consistent(warehouse):
     """One committer thread appending + MOR-deleting while N planner
     threads plan with COLD caches (in-memory caches cleared mid-flight by
-    a churn thread, persistent disk cache ON): every plan must be
-    INTERNALLY CONSISTENT — its task/delete set must exactly match the
-    expected set of the snapshot it planned, never a mix of two
-    snapshots. Regression for the unlocked delete-index double-build
-    window + disk-cache publish racing a concurrent commit."""
+    a churn thread): every plan must be INTERNALLY CONSISTENT — its
+    task/delete set must exactly match the expected set of the snapshot
+    it planned, never a mix of two snapshots. Regression for the unlocked
+    delete-index double-build window racing a concurrent commit."""
     import threading
     from concurrent.futures import ThreadPoolExecutor
 
     from iceberg_rust_spark.sources.scan import _manifest_cache
 
-    monkeypatch.setenv("ICEBERG_SPARK_MANIFEST_DISK_CACHE",
-                       str(tmp_path / "mcache_race"))
     t0 = _fab_mor_table(warehouse, n_manifests=2, files_per_manifest=20)
 
     latest = {"t": t0}
